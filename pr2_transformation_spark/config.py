@@ -11,10 +11,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Callable, Optional
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from typing import Optional
 
 # ---------------------------------------------------------------------------
 # Name filtering (/root/reference/core/constants.py:21-47)
@@ -159,36 +156,14 @@ ONE_OFF_COLUMN_RENAME_MAPPINGS: dict[str, list[dict[str, str]]] = {
 # ---------------------------------------------------------------------------
 # Custom transforms (/root/reference/core/constants.py:157-186)
 # ---------------------------------------------------------------------------
-# Each template is a callable (source, target) -> pyspark Column, already
-# aliased to the target.  Unlike the reference — whose templates render SQL
-# text and whose builder re-parses the trailing ``AS <name>`` with a regex
-# (/root/reference/core/transformations.py:413) — native Column templates
-# carry their alias structurally, so nothing is re-parsed.
-
-TransformTemplate = Callable[[str, str], Column]
+# Each template is a callable (source, target) -> Spark-SQL SELECT fragment
+# aliased to the target, as in the reference registry.  The target travels in
+# the spec, so nothing re-parses the trailing ``AS <name>`` the way the
+# reference does (reference core/transformations.py:413).
 
 
-def _age_extract(source: str, target: str) -> Column:
+def _age_extract(source: str, target: str) -> str:
     """1-3 digit string in [0, 125] -> LONG, else NULL."""
-    c = F.col(source)
-    return (
-        F.when(c.rlike(r"^\d{1,3}$") & c.try_cast("long").between(0, 125), c.try_cast("long"))
-        .otherwise(F.lit(None).cast("long"))
-        .alias(target)
-    )
-
-
-def _year_extract(source: str, target: str) -> Column:
-    """Exactly-4-digit string -> LONG, else NULL."""
-    c = F.col(source)
-    return (
-        F.when(c.rlike(r"^\d{4}$"), c.try_cast("long"))
-        .otherwise(F.lit(None).cast("long"))
-        .alias(target)
-    )
-
-
-def _age_extract_sql(source: str, target: str) -> str:
     return (
         f"CASE WHEN `{source}` RLIKE '^\\\\d{{1,3}}$' "
         f"AND TRY_CAST(`{source}` AS LONG) BETWEEN 0 AND 125 "
@@ -196,7 +171,8 @@ def _age_extract_sql(source: str, target: str) -> str:
     )
 
 
-def _year_extract_sql(source: str, target: str) -> str:
+def _year_extract(source: str, target: str) -> str:
+    """Exactly-4-digit string -> LONG, else NULL."""
     return (
         f"CASE WHEN `{source}` RLIKE '^\\\\d{{4}}$' "
         f"THEN TRY_CAST(`{source}` AS LONG) ELSE NULL END AS `{target}`"
@@ -209,24 +185,22 @@ CUSTOM_TRANSFORMS: dict[str, list[dict]] = {
             "source": "D_317093647",
             "target": "D_317093647_D_623218391",
             "transform_template": _age_extract,
-            "sql_template": _age_extract_sql,
         },
         {
             "source": "D_317093647",
             "target": "D_317093647_D_802622485",
             "transform_template": _year_extract,
-            "sql_template": _year_extract_sql,
         },
     ]
 }
 
+
 def validate_custom_transforms(registry: dict) -> None:
     """Validate the custom-transform registry shape before rendering.
 
-    Parity: /root/reference/core/transform_renderer.py:6-42 — the reference
-    validates {table: [{source, target, transform_template}]} and raises on
-    malformed entries; here specs additionally carry ``sql_template`` since
-    the SQL fragment is part of the executed plan (selectExpr path).
+    Parity: reference core/transform_renderer.py:6-42 — the registry
+    is {table: [{source, target, transform_template}]} and malformed entries
+    raise ``ValueError``.
     """
     if not isinstance(registry, dict):
         raise ValueError("custom-transform registry must be a dict of table -> spec list")
@@ -241,9 +215,8 @@ def validate_custom_transforms(registry: dict) -> None:
             for key in ("source", "target"):
                 if not isinstance(spec.get(key), str) or not spec.get(key):
                     raise ValueError(f"spec for {table!r} missing non-empty {key!r}")
-            for key in ("transform_template", "sql_template"):
-                if not callable(spec.get(key)):
-                    raise ValueError(f"spec for {table!r} field {key!r} must be callable")
+            if not callable(spec.get("transform_template")):
+                raise ValueError(f"spec for {table!r} field 'transform_template' must be callable")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """`clean_columns` — column-name standardization as one wide projection.
 
-Composes a single ``df.select(...)`` from five ordered clause groups, each
+Composes a single ``df.selectExpr(...)`` from five ordered clause groups, each
 builder consuming a shared ``processed`` name set so later builders skip
 already-produced outputs (threading parity:
 /root/reference/core/transformations.py:556-584):
@@ -36,9 +36,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 from .. import config, names
-from ..expressions import Clause, coalesce, passthrough, rename, render_custom_transform, render_select_sql
-from ..plans.audit import audit_path_for, save_sql_string
+from ..expressions import Clause, coalesce, passthrough, q, rename, render_custom_transform
 from ..sources.catalog import Catalog, parse_fq_table
+from .projection import CREATED, project, write_projection
 
 
 def _build_one_off_rename_clauses(
@@ -77,7 +77,7 @@ def _build_one_off_rename_clauses(
         )
         if names.standardize_column_case(target).lower() in processed:
             continue
-        clauses.append(coalesce(sources, target))
+        clauses.append(coalesce([q(s) for s in sources], target))
         processed.add(target.lower())
         processed.update(s.lower() for s in sources)
     return clauses
@@ -137,7 +137,7 @@ def _build_substring_removal_clauses(
             clauses.append(rename(cols[0], new) if cols[0] != new else passthrough(new))
         else:
             prio = lambda c: sum(1 for s in config.SUBSTRINGS_TO_FIX if s in c)
-            clauses.append(coalesce(sorted(cols, key=prio), new))
+            clauses.append(coalesce([q(c) for c in sorted(cols, key=prio)], new))
         processed.add(new.lower())
         processed.update(c.lower() for c in cols)
     return clauses
@@ -146,8 +146,8 @@ def _build_substring_removal_clauses(
 def _build_custom_transform_clauses(
     table_identifiers: list[str], processed: set[str]
 ) -> list[Clause]:
-    """Registry-driven transforms; the Column template carries its own alias
-    so no ``AS``-regex recovery is needed.
+    """Registry-driven transforms; the spec carries the target name, so no
+    ``AS``-regex recovery is needed.
 
     Parity: /root/reference/core/transformations.py:369-431.
     """
@@ -194,7 +194,7 @@ def _build_loop_variable_clauses(
         out = names.canonical_loop_name(members[0], loop_number, version)
         if out.lower() in processed:
             continue
-        clauses.append(coalesce(members, out) if len(members) > 1 else rename(members[0], out))
+        clauses.append(coalesce([q(m) for m in members], out))
         processed.add(out.lower())
         processed.update(m.lower() for m in members)
 
@@ -242,13 +242,8 @@ def compose_clean_columns(
 
 
 def clean_columns_df(df: DataFrame, table_identifier: str = "", fq_table: str = "") -> DataFrame:
-    """DataFrame-in/DataFrame-out form (no I/O).
-
-    Projects via ``selectExpr`` — ONE Py4J round-trip for the whole clause
-    list; building thousands of Column objects costs seconds of socket
-    chatter on ultra-wide survey tables (tests/test_wide_schema.py)."""
-    clauses = compose_clean_columns(df.schema.names, table_identifier, fq_table)
-    return df.selectExpr(*[c.sql for c in clauses])
+    """DataFrame-in/DataFrame-out form (no I/O)."""
+    return project(df, compose_clean_columns(df.schema.names, table_identifier, fq_table))
 
 
 def clean_columns(
@@ -266,12 +261,6 @@ def clean_columns(
     clauses = compose_clean_columns(
         df.schema.names, f"{dataset}.{table}", source_table
     )
-    sql_path = None
-    if audit_dir:
-        sql = render_select_sql(clauses, source_table, destination_table)
-        sql_path = save_sql_string(sql, audit_path_for(destination_table, audit_dir))
-    catalog.write(df.selectExpr(*[c.sql for c in clauses]), destination_table)
-    return {
-        "status": f"Table {destination_table} successfully created with all transformations applied",
-        "submitted_sql_path": sql_path,
-    }
+    return write_projection(
+        catalog, df, clauses, q(source_table), destination_table, audit_dir, CREATED
+    )

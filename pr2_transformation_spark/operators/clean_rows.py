@@ -1,17 +1,18 @@
 """`clean_rows` — value recoding driven by data profiling.
 
 Pipeline (parity: /root/reference/core/transformations.py:654-773):
-  1. profile the table: binary columns (single-pass aggregation; the
-     reference runs ceil(N/500) BigQuery scans) and false-array columns
+  1. profile the table: binary columns (one aggregation job per
+     ``config.BINARY_DETECTION_BATCH`` columns — ceil(N/500) scans, the same
+     count as the reference's BigQuery batches) and false-array columns
      (name-match fast path by default — zero scans);
   2. partition columns into binary / false-array / pass-through;
   3. compose one projection: binary CASE recode (sorted), false-array unwrap
      CASE (sorted), pass-through (sorted);
   4. duplicate-name guard, SQL audit, overwrite write.
 
-Scale: exactly one profiling scan + one rewrite scan of the table regardless
-of column count; both are full-width sequential parquet reads with
-whole-stage-codegen'd CASE expressions — no shuffle anywhere.
+Scale: ceil(N/500) profiling scans plus one rewrite scan of the table; all
+are full-width sequential parquet reads with whole-stage-codegen'd
+expressions — no shuffle anywhere.
 """
 
 from __future__ import annotations
@@ -22,9 +23,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 from .. import profiling
-from ..expressions import Clause, binary_recode, passthrough, render_select_sql, unwrap_singleton
-from ..plans.audit import audit_path_for, save_sql_string
+from ..expressions import Clause, binary_recode, passthrough, q, unwrap_singleton
 from ..sources.catalog import Catalog
+from .projection import CREATED, project, write_projection
 
 
 def compose_clean_rows(
@@ -44,7 +45,7 @@ def compose_clean_rows(
             )
         )
     else:
-        # computational mode: both detectors share ONE aggregation scan
+        # computational mode: both detectors share each batch's aggregation scan
         b, fa = profiling.profile_columns(df)
         binary, false_arrays = set(b), set(fa)
     return compose_recoding(all_columns, binary, false_arrays)
@@ -71,7 +72,7 @@ def compose_recoding(
 
     clauses: list[Clause] = []
     clauses += [binary_recode(c) for c in sorted(binary)]
-    clauses += [unwrap_singleton(c, "NULL") for c in sorted(false_arrays)]
+    clauses += [unwrap_singleton(c) for c in sorted(false_arrays)]
     clauses += [passthrough(c) for c in sorted(rest)]
 
     counts = Counter(c.out_name for c in clauses)
@@ -87,9 +88,7 @@ def clean_rows_df(
     reference_file_path: Optional[str] = None,
 ) -> DataFrame:
     """DataFrame-in/DataFrame-out form (no I/O)."""
-    clauses = compose_clean_rows(df, use_reference, reference_file_path)
-    # one Py4J call for the whole (possibly 4k-wide) projection
-    return df.selectExpr(*[c.sql for c in clauses])
+    return project(df, compose_clean_rows(df, use_reference, reference_file_path))
 
 
 def clean_rows(
@@ -104,12 +103,6 @@ def clean_rows(
     /root/reference/core/transformations.py:768-773."""
     df = catalog.read(source_table)
     clauses = compose_clean_rows(df, use_reference, reference_file_path)
-    sql_path = None
-    if audit_dir:
-        sql = render_select_sql(clauses, source_table, destination_table)
-        sql_path = save_sql_string(sql, audit_path_for(destination_table, audit_dir))
-    catalog.write(df.selectExpr(*[c.sql for c in clauses]), destination_table)
-    return {
-        "status": f"Table {destination_table} successfully created with all transformations applied",
-        "submitted_sql_path": sql_path,
-    }
+    return write_projection(
+        catalog, df, clauses, q(source_table), destination_table, audit_dir, CREATED
+    )

@@ -27,18 +27,26 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .. import names
-from ..expressions import Clause, qualified_coalesce, render_select_sql
-from ..plans.audit import audit_path_for, save_sql_string
+from ..expressions import Clause, coalesce, q
 from ..sources.catalog import Catalog
+from .projection import REPLACED, project, write_projection
+
+
+def _key_match(base_alias: str, alias: str) -> str:
+    """Join condition of one chain link — the text the join runs and the
+    audit SQL archives."""
+    return f"{base_alias}.Connect_ID = {alias}.Connect_ID"
 
 
 def compose_merge(dfs: list[DataFrame]) -> tuple[DataFrame, list[Clause]]:
     """Build the joined DataFrame and its projection clauses.
 
-    Returns ``(joined_df, clauses)``; callers select ``[c.column for c in
-    clauses]`` on the joined frame.
+    Returns ``(joined_df, clauses)``; the clause SQL refers to each source
+    by its ``v1..vN`` alias, so callers ``selectExpr`` it on the joined
+    frame.
     """
     if len(dfs) < 2:
         raise ValueError("A destination table and at least two source tables must be provided.")
@@ -48,11 +56,6 @@ def compose_merge(dfs: list[DataFrame]) -> tuple[DataFrame, list[Clause]]:
     for a, cols in table_columns.items():
         if not cols:
             raise ValueError(f"No columns retrieved from source {a}")
-    # Alias each frame so clause SQL can use qualified refs (v1.`c`) and the
-    # wide projection goes through ONE selectExpr Py4J call downstream —
-    # survey version tables run to thousands of columns (see the Clause
-    # docstring for why eager per-column refs are a driver bottleneck).
-    frames = {a: df.alias(a) for a, df in zip(aliases, dfs)}
     case_maps = {a: {c.lower(): c for c in cols} for a, cols in table_columns.items()}
 
     common_lower: set[str] = set(case_maps[aliases[0]])
@@ -62,39 +65,29 @@ def compose_merge(dfs: list[DataFrame]) -> tuple[DataFrame, list[Clause]]:
     processed: set[str] = set()
     clauses: list[Clause] = []
 
-    def qref(alias: str, col: str):
-        return lambda: frames[alias][col]
-
     for col_l in sorted(common_lower):
         out = "Connect_ID" if col_l == "connect_id" else col_l
-        refs = [qref(a, case_maps[a][col_l]) for a in aliases]
-        sql_parts = [f"{a}.`{case_maps[a][col_l]}`" for a in aliases]
-        clauses.append(qualified_coalesce(refs, sql_parts, out))
+        clauses.append(coalesce([f"{a}.{q(case_maps[a][col_l])}" for a in aliases], out))
         processed.add(col_l)
 
     for a in aliases:
         unique = [c for c in table_columns[a] if c.lower() not in processed]
         for col in sorted(unique):
             out = "Connect_ID" if col == "Connect_ID" else col.lower()
-            clauses.append(qualified_coalesce([qref(a, col)], [f"{a}.`{col}`"], out))
+            clauses.append(coalesce([f"{a}.{q(col)}"], out))
             processed.add(col.lower())
 
     # Star-shaped FULL OUTER chain anchored on the last source's key.
     base_alias = aliases[-1]
-    base = frames[base_alias]
-    joined = base
-    base_key = base["Connect_ID"]
-    for a in reversed(aliases[:-1]):
-        other = frames[a]
-        joined = joined.join(other, base_key == other["Connect_ID"], "full")
+    joined = dfs[-1].alias(base_alias)
+    for a, df in reversed(list(zip(aliases[:-1], dfs[:-1]))):
+        joined = joined.join(df.alias(a), F.expr(_key_match(base_alias, a)), "full")
     return joined, clauses
 
 
 def merge_versions_df(dfs: list[DataFrame]) -> DataFrame:
-    """DataFrame-in/DataFrame-out form (no I/O).  One selectExpr call for
-    the whole (possibly thousands-wide) COALESCE projection."""
-    joined, clauses = compose_merge(dfs)
-    return joined.selectExpr(*[c.sql for c in clauses])
+    """DataFrame-in/DataFrame-out form (no I/O)."""
+    return project(*compose_merge(dfs))
 
 
 def merge_table_versions(
@@ -109,21 +102,14 @@ def merge_table_versions(
         raise ValueError("A destination table and at least two source tables must be provided.")
     dfs = [catalog.read(t) for t in source_tables]
     joined, clauses = compose_merge(dfs)
-    sql_path = None
-    if audit_dir:
-        base = source_tables[-1]
-        join_sql = "\n".join(
-            f"FULL OUTER JOIN `{t}` v{i + 1} ON v{len(source_tables)}.Connect_ID = v{i + 1}.Connect_ID"
-            for i, t in reversed(list(enumerate(source_tables[:-1])))
-        )
-        body = ",\n    ".join(c.sql for c in clauses)
-        sql = (
-            f"CREATE OR REPLACE TABLE `{destination_table}` USING PARQUET AS\n"
-            f"SELECT\n    {body}\nFROM `{base}` v{len(source_tables)}\n{join_sql}"
-        )
-        sql_path = save_sql_string(sql, audit_path_for(destination_table, audit_dir))
-    catalog.write(joined.selectExpr(*[c.sql for c in clauses]), destination_table)
-    return {
-        "status": f"Table {destination_table} successfully created or replaced.",
-        "submitted_sql_path": sql_path,
-    }
+    base_alias = f"v{len(source_tables)}"
+    from_sql = "\n".join(
+        [f"{q(source_tables[-1])} {base_alias}"]
+        + [
+            f"FULL OUTER JOIN {q(t)} v{i} ON {_key_match(base_alias, f'v{i}')}"
+            for i, t in reversed(list(enumerate(source_tables[:-1], 1)))
+        ]
+    )
+    return write_projection(
+        catalog, joined, clauses, from_sql, destination_table, audit_dir, REPLACED
+    )

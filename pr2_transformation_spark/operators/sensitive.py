@@ -12,9 +12,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 from .. import config
-from ..expressions import Clause, passthrough, render_select_sql
-from ..plans.audit import audit_path_for, save_sql_string
+from ..expressions import Clause, passthrough, q
 from ..sources.catalog import Catalog
+from .projection import CREATED, project, write_projection
 
 
 def compose_sensitive_tier() -> list[Clause]:
@@ -24,7 +24,7 @@ def compose_sensitive_tier() -> list[Clause]:
 def sensitive_tier_df(df: DataFrame) -> DataFrame:
     """Select the sensitive-tier columns; fails analysis if any is missing,
     matching the reference's failure mode on absent columns."""
-    return df.select(*[c.column for c in compose_sensitive_tier()])
+    return project(df, compose_sensitive_tier())
 
 
 def create_sensitive_tier(
@@ -34,13 +34,7 @@ def create_sensitive_tier(
     audit_dir: Optional[str] = None,
 ) -> dict:
     df = catalog.read(source_table)
-    clauses = compose_sensitive_tier()
-    sql_path = None
-    if audit_dir:
-        sql = render_select_sql(clauses, source_table, destination_table)
-        sql_path = save_sql_string(sql, audit_path_for(destination_table, audit_dir))
-    catalog.write(df.select(*[c.column for c in clauses]), destination_table)
-    return {
-        "status": f"Table {destination_table} successfully created with all transformations applied",
-        "submitted_sql_path": sql_path,
-    }
+    return write_projection(
+        catalog, df, compose_sensitive_tier(), q(source_table), destination_table,
+        audit_dir, CREATED,
+    )

@@ -3,14 +3,14 @@
 The reference runs these as batched BigQuery jobs — ceil(N/500) full scans
 for binary detection (/root/reference/core/utils.py:375-435) and *three
 scalar subqueries per column* (≈3N table scans) for strict false-array
-detection (/root/reference/core/utils.py:582-698).  Here each detector is a
-single aggregation pass over the DataFrame: every per-column check becomes
-one aggregate expression, so one job and one scan classifies every column at
-once.  At 100 TB that is the difference between 1 scan and thousands.
+detection (reference core/utils.py:582-698).  Here every per-column
+check becomes one aggregate expression, and one aggregation pass classifies a
+whole batch of columns at once — strict false-array detection drops from ≈3N
+scans to ceil(N/100).
 
-Expression counts are still chunked (config.*_BATCH) so ultra-wide tables
-(~4k survey columns -> ~12k aggregates) don't push whole-stage codegen into
-fallback; the chunks all derive from one cached scan.
+Batches (config.*_BATCH) keep ultra-wide tables (~4k survey columns -> ~12k
+aggregates) from pushing whole-stage codegen into fallback.  Each batch is
+its own ``agg().first()`` job and scan; nothing is cached between batches.
 """
 
 from __future__ import annotations
@@ -40,22 +40,25 @@ def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATC
 
     Reference semantics (/root/reference/core/utils.py:406-408):
     ``COUNTIF(NOT (c="0" OR c="1" OR c IS NULL OR c="")) = 0`` — note an
-    all-NULL column therefore *is* binary.  One aggregation pass instead of
-    ceil(N/500) table scans; returns names in input-schema order.
+    all-NULL column therefore *is* binary.  One aggregation scan per
+    ``batch_size`` columns, like the reference's batches; returns names in
+    input-schema order.
     """
     cols = string_columns(df)
     if not cols:
         return []
     found: list[str] = []
     for batch in _chunks(cols, batch_size):
-        aggs = []
-        for name in batch:
-            c = F.col(name)
-            offending = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
-            aggs.append((F.count_if(offending) == 0).alias(name))
-        row = df.agg(*aggs).first()
+        row = df.agg(*[_binary_flag(name) for name in batch]).first()
         found.extend(name for name in batch if row[name])
     return found
+
+
+def _binary_flag(name: str):
+    """Single aggregate expression deciding the binary check for ``name``."""
+    c = F.col(name)
+    offending = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
+    return (F.count_if(offending) == 0).alias(name)
 
 
 def false_array_columns_from_reference(
@@ -151,12 +154,12 @@ def profile_columns(
     df: DataFrame,
     batch_size: int = config.BINARY_DETECTION_BATCH,
 ) -> tuple[list[str], list[str]]:
-    """Binary AND strict-false-array classification in ONE scan.
+    """Binary AND strict-false-array classification in one scan per batch.
 
     ``clean_rows`` needs both; running the detectors separately costs two
-    full-table scans.  Both flag families are plain conditional counts, so
-    they share a single (chunked) aggregation pass: at 100 TB this is the
-    difference between one and two passes over the table.
+    scans per batch.  Both flag families are plain conditional counts, so
+    each batch of columns shares one aggregation scan: at 100 TB this halves
+    the passes over the table.
 
     Returns ``(binary_cols, false_array_cols)`` in input-schema order.
     """
@@ -168,11 +171,9 @@ def profile_columns(
         aggs = []
         key_of = {}
         for name in batch:
-            c = F.col(name)
             if name in str_cols:
-                bad = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
                 key_of[f"__bin_{name}"] = ("bin", name)
-                aggs.append((F.count_if(bad) == 0).alias(f"__bin_{name}"))
+                aggs.append(_binary_flag(name).alias(f"__bin_{name}"))
             if name != "Connect_ID":
                 key_of[f"__fa_{name}"] = ("fa", name)
                 aggs.append(_false_array_flag(name).alias(f"__fa_{name}"))

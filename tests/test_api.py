@@ -85,6 +85,87 @@ def test_sensitive_tier_end_to_end(spark, tmp_path):
     assert out.columns == config.SENSITIVE_TIER_COLUMNS
 
 
+def _survey_source(spark):
+    """All-STRING survey table exercising every clause kind: custom
+    transforms, one-off rename + loop + substring COALESCE groups, binary
+    and false-array recodes, and the sensitive-tier columns."""
+    from pr2_transformation_spark import config
+
+    cols = config.SENSITIVE_TIER_COLUMNS + [
+        "D_317093647", "D_150352141_D_206625031", "d_150352141_d_623218391",
+        "d_684926335_num", "state_d_684926335", "d_123456789_2_2",
+        "d_123456789_2_2_2_2", "d_820476880", "d_236590500_d_236590500",
+    ]
+    values = [
+        ["42", "a", None, "7", "8", None, "l2", "1", "[]"],
+        ["1999", None, "b", None, "9", "l1", None, "0", "[178420302]"],
+        ["x", "c", "d", None, None, None, None, "", None],
+        [None, None, None, "5", None, "l3", "l4", None, "[958239616]"],
+    ]
+    rows = [
+        tuple(f"{c}-{i}" for c in config.SENSITIVE_TIER_COLUMNS) + tuple(v)
+        for i, v in enumerate(values)
+    ]
+    return spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
+
+
+def _run_endpoint(spark, cat, endpoint, audit):
+    """Write the endpoint's source tables, run it; return (response,
+    {source table: DataFrame}, destination)."""
+    dest = "p.CleanConnect.out"
+    if endpoint == "merge":
+        sources = {
+            "p.FlatConnect.m1_v1": spark.createDataFrame(
+                [("1", "a", "x", "u"), ("2", "b", None, "v")],
+                "`Connect_ID` string, `D_100000001` string, `d_100000002` string, `d_100000003` string",
+            ),
+            "p.FlatConnect.m1_v2": spark.createDataFrame(
+                [("2", None, "y", "w"), ("3", "c", "z", None)],
+                "`Connect_ID` string, `d_100000001` string, `d_100000002` string, `d_100000004` string",
+            ),
+        }
+    else:
+        sources = {"p.FlatConnect.module1_v2_JP": _survey_source(spark)}
+    for fq, df in sources.items():
+        cat.write(df, fq)
+    sources = {fq: cat.read(fq) for fq in sources}
+    (fq, *_) = sources
+    if endpoint == "clean_columns":
+        resp = api.clean_columns(cat, fq, dest, audit)
+    elif endpoint == "clean_rows":
+        resp = api.clean_rows(cat, fq, dest, audit)
+    elif endpoint == "sensitive":
+        resp = api.create_sensitive_tier(cat, fq, dest, audit)
+    else:
+        resp = api.merge_table_versions(cat, list(sources), dest, audit)
+    return resp, sources, dest
+
+
+@pytest.mark.parametrize("endpoint", ["clean_columns", "clean_rows", "merge", "sensitive"])
+def test_audit_sql_replays_to_written_table(spark, tmp_path, endpoint):
+    """The archived SQL is the plan that ran: its SELECT, replayed with
+    every source table pointed at a temp view, returns exactly the rows,
+    columns and types the endpoint wrote."""
+    from collections import Counter
+
+    cat = Catalog(spark, root=str(tmp_path / "lake"))
+    resp, sources, dest = _run_endpoint(spark, cat, endpoint, str(tmp_path / "sql"))
+
+    sql = open(resp["submitted_sql_path"]).read()
+    assert sql.startswith(f"CREATE OR REPLACE TABLE `{dest}` USING PARQUET AS\nSELECT\n")
+    select = sql[sql.index("\nSELECT\n") + 1:]
+    for i, (fq, df) in enumerate(sources.items()):
+        df.createOrReplaceTempView(f"audit_replay_{i}")
+        select = select.replace(f"`{fq}`", f"audit_replay_{i}")
+    replayed = spark.sql(select)
+    written = cat.read(dest)
+
+    assert replayed.columns == written.columns
+    assert replayed.dtypes == written.dtypes
+    got, want = Counter(replayed.collect()), Counter(written.collect())
+    assert got == want and sum(want.values()) > 0
+
+
 def test_catalog_partitioned_write(spark, tmp_path):
     """Catalog.write(partition_by=...) lays out hive-partitioned parquet and
     reads back with partition pruning available."""

@@ -190,13 +190,10 @@ def test_validate_custom_transforms_rejects_malformed():
         {"t": "not-a-list"},
         {"t": ["not-a-dict"]},
         {"t": [{"source": "", "target": "x",
-                "transform_template": lambda s, t: None,
-                "sql_template": lambda s, t: ""}]},
+                "transform_template": lambda s, t: ""}]},
         {"t": [{"source": "a", "target": "b",
-                "transform_template": "not-callable",
-                "sql_template": lambda s, t: ""}]},
-        {"t": [{"source": "a", "target": "b",
-                "transform_template": lambda s, t: None}]},  # missing sql
+                "transform_template": "not-callable"}]},
+        {"t": [{"source": "a", "target": "b"}]},  # missing template
     ]
     for bad in cases:
         with pytest.raises(ValueError):
