@@ -7,7 +7,11 @@ the same text as the SQL-audit artifact (:func:`render_select_sql`), so the
 archived query is the query that ran, mirroring the reference's practice of
 archiving every generated query before execution
 (reference core/utils.py:54-89).  A whole projection is one
-``selectExpr`` Py4J call, however wide the survey table.
+``selectExpr`` call, however wide the survey table (pyspark ships the list of
+fragments as one Py4J round trip per fragment).  Each profiling batch (:mod:`.profiling`)
+is one ``selectExpr`` call too: its per-column aggregates are SQL text on
+the same :func:`q` quoting, packed into one fragment, so its Py4J round
+trips do not grow with the batch's width.
 
 Dialect note: the reference emits BigQuery re2 regexes with ``\\1``
 backreferences (reference core/utils.py:773); Spark/Java uses ``$1``.
@@ -29,8 +33,9 @@ class Clause(NamedTuple):
 
 
 def q(name: str) -> str:
-    """Backtick-quote an identifier."""
-    return f"`{name}`"
+    """Backtick-quote an identifier, doubling any backtick inside it, so a
+    name with dots or backticks stays one top-level column reference."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def passthrough(name: str) -> Clause:

@@ -4,7 +4,8 @@ Pipeline (parity: /root/reference/core/transformations.py:654-773):
   1. profile the table: binary columns (one aggregation job per
      ``config.BINARY_DETECTION_BATCH`` columns — ceil(N/500) scans, the same
      count as the reference's BigQuery batches) and false-array columns
-     (name-match fast path by default — zero scans);
+     (name-match fast path by default — zero scans; computational mode
+     shares each batch's job with the binary flags);
   2. partition columns into binary / false-array / pass-through;
   3. compose one projection: binary CASE recode (sorted), false-array unwrap
      CASE (sorted), pass-through (sorted);
@@ -12,7 +13,9 @@ Pipeline (parity: /root/reference/core/transformations.py:654-773):
 
 Scale: ceil(N/500) profiling scans plus one rewrite scan of the table; all
 are full-width sequential parquet reads with whole-stage-codegen'd
-expressions — no shuffle anywhere.
+expressions — no shuffle anywhere.  Driver side, each profiling batch is
+one ``selectExpr`` call of SQL text whose Py4J round trips do not grow
+with the batch's width (see :mod:`..profiling`).
 """
 
 from __future__ import annotations

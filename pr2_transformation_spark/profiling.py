@@ -4,17 +4,29 @@ The reference runs these as batched BigQuery jobs — ceil(N/500) full scans
 for binary detection (/root/reference/core/utils.py:375-435) and *three
 scalar subqueries per column* (≈3N table scans) for strict false-array
 detection (reference core/utils.py:582-698).  Here every per-column
-check becomes one aggregate expression, and one aggregation pass classifies a
-whole batch of columns at once — strict false-array detection drops from ≈3N
-scans to ceil(N/100).
+check is one aggregate written as Spark-SQL text, and one aggregation pass
+classifies a whole batch of columns at once — strict false-array detection
+drops from ≈3N scans to ceil(N/100).
+
+Cost model, per batch: the batch's fragments are joined into one
+``array(...)`` expression and run as one ``df.selectExpr(...).first()`` —
+one ``selectExpr`` call to plan it, one job and one scan to evaluate it.
+The number of Py4J round trips (about a dozen per batch) does not depend
+on how many columns the batch holds:
+no pyspark ``Column`` is built per column (each ``F.col``, operator and
+``alias`` would be its own round trip, ~150 per column), and the single
+fragment also avoids pyspark's list conversion, which ships a list of N
+strings as N ``ArrayList.add`` calls.  Every identifier goes through
+:func:`expressions.q`, so dotted and backtick-bearing names are safe.
 
 Batches (config.*_BATCH) keep ultra-wide tables (~4k survey columns -> ~12k
 aggregates) from pushing whole-stage codegen into fallback.  Each batch is
-its own ``agg().first()`` job and scan; nothing is cached between batches.
+its own job and scan; nothing is cached between batches.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -22,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from . import config
+from .expressions import q
 
 
 def string_columns(df: DataFrame) -> list[str]:
@@ -35,6 +48,12 @@ def _chunks(xs: list, size: int):
         yield xs[i : i + size]
 
 
+def _aggregate(df: DataFrame, fragments: list[str]) -> list:
+    """Values of the aggregate SQL ``fragments`` over ``df``, in order: one
+    ``selectExpr`` call of one ``array(...)`` fragment, one job."""
+    return df.selectExpr(f"array({', '.join(fragments)})").first()[0]
+
+
 def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATCH) -> list[str]:
     """STRING columns whose every value is "0", "1", "" or NULL.
 
@@ -44,21 +63,17 @@ def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATC
     ``batch_size`` columns, like the reference's batches; returns names in
     input-schema order.
     """
-    cols = string_columns(df)
-    if not cols:
-        return []
     found: list[str] = []
-    for batch in _chunks(cols, batch_size):
-        row = df.agg(*[_binary_flag(name) for name in batch]).first()
-        found.extend(name for name in batch if row[name])
+    for batch in _chunks(string_columns(df), batch_size):
+        flags = _aggregate(df, [_binary_flag(name) for name in batch])
+        found.extend(name for name, flag in zip(batch, flags) if flag)
     return found
 
 
-def _binary_flag(name: str):
-    """Single aggregate expression deciding the binary check for ``name``."""
-    c = F.col(name)
-    offending = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
-    return (F.count_if(offending) == 0).alias(name)
+def _binary_flag(name: str) -> str:
+    """Aggregate SQL deciding the binary check for ``name``."""
+    c = q(name)
+    return f"count_if(NOT ({c} = '0' OR {c} = '1' OR {c} IS NULL OR {c} = '')) = 0"
 
 
 def false_array_columns_from_reference(
@@ -109,19 +124,16 @@ def strict_false_array_columns(
     cols = [c for c in df.columns if c != "Connect_ID"]
     if use_reference:
         return false_array_columns_from_reference(cols, reference_file_path)
-    if not cols:
-        return []
 
     found: list[str] = []
     for batch in _chunks(cols, batch_size):
-        aggs = [_false_array_flag(name) for name in batch]
-        row = df.agg(*aggs).first()
-        found.extend(name for name in batch if row[name])
+        flags = _aggregate(df, [_false_array_flag(name) for name in batch])
+        found.extend(name for name, flag in zip(batch, flags) if flag)
     return found
 
 
-def _false_array_flag(name: str):
-    """Single aggregate expression deciding the strict false-array checks.
+def _false_array_flag(name: str) -> str:
+    """Aggregate SQL deciding the strict false-array checks for ``name``.
 
     Equivalent to the reference's three checks but **distinct-free**: under
     check 2 every non-null value lies in ``config.FALSE_ARRAY_VALUES`` (3
@@ -134,20 +146,18 @@ def _false_array_flag(name: str):
     amplification; presence flags keep the pass a plain one-shuffle-free
     partial aggregation.
     """
-    import re as _re
-
-    c = F.col(name)
-    bracketed_domain = [
-        v
+    c = q(name)
+    allowed = ", ".join(f"'{v}'" for v in config.FALSE_ARRAY_VALUES)
+    n_bracketed_present = " + ".join(
+        f"CAST(count_if({c} = '{v}') > 0 AS INT)"
         for v in config.FALSE_ARRAY_VALUES
-        if _re.fullmatch(r"\[\d{9}\]", v)
-    ]
-    values_ok = F.count_if(c.isNotNull() & ~c.isin(config.FALSE_ARRAY_VALUES)) == 0
-    some_non_null = F.count_if(c.isNotNull()) > 0
-    n_bracketed_present = sum(
-        (F.count_if(c == v) > 0).cast("int") for v in bracketed_domain
+        if re.fullmatch(r"\[\d{9}\]", v)
+    ) or "0"
+    return (
+        f"count_if({c} IS NOT NULL AND NOT {c} IN ({allowed})) = 0"
+        f" AND count_if({c} IS NOT NULL) > 0"
+        f" AND ({n_bracketed_present}) <= 1"
     )
-    return (values_ok & some_non_null & (n_bracketed_present <= 1)).alias(name)
 
 
 def profile_columns(
@@ -164,25 +174,22 @@ def profile_columns(
     Returns ``(binary_cols, false_array_cols)`` in input-schema order.
     """
     str_cols = set(string_columns(df))
-    cols = list(df.columns)
     bin_found: list[str] = []
     fa_found: list[str] = []
-    for batch in _chunks(cols, batch_size):
-        aggs = []
-        key_of = {}
+    for batch in _chunks(list(df.columns), batch_size):
+        fragments, targets = [], []
         for name in batch:
             if name in str_cols:
-                key_of[f"__bin_{name}"] = ("bin", name)
-                aggs.append(_binary_flag(name).alias(f"__bin_{name}"))
+                fragments.append(_binary_flag(name))
+                targets.append((bin_found, name))
             if name != "Connect_ID":
-                key_of[f"__fa_{name}"] = ("fa", name)
-                aggs.append(_false_array_flag(name).alias(f"__fa_{name}"))
-        if not aggs:
+                fragments.append(_false_array_flag(name))
+                targets.append((fa_found, name))
+        if not fragments:
             continue
-        row = df.agg(*aggs).first()
-        for alias, (kind, name) in key_of.items():
-            if row[alias]:
-                (bin_found if kind == "bin" else fa_found).append(name)
+        for (found, name), flag in zip(targets, _aggregate(df, fragments)):
+            if flag:
+                found.append(name)
     return bin_found, fa_found
 
 
@@ -196,31 +203,13 @@ def table_profile(df: DataFrame, columns: Optional[list[str]] = None) -> DataFra
     ``count_distinct`` only when the cost of its shuffle is justified.
     """
     cols = columns or df.columns
-    aggs = []
-    for name in cols:
-        c = F.col(name)
-        aggs += [
-            F.count(F.lit(1)).alias(f"__rows_{name}"),
-            F.count_if(c.isNull()).alias(f"__nulls_{name}"),
-            F.min(c).cast("string").alias(f"__min_{name}"),
-            F.max(c).cast("string").alias(f"__max_{name}"),
-            F.approx_count_distinct(c).alias(f"__approx_{name}"),
-        ]
-    row = df.agg(*aggs).first()
-    spark = df.sparkSession
-    out = [
-        (
-            name,
-            row[f"__rows_{name}"],
-            row[f"__nulls_{name}"],
-            row[f"__min_{name}"],
-            row[f"__max_{name}"],
-            row[f"__approx_{name}"],
-        )
-        for name in cols
-    ]
-    return spark.createDataFrame(
-        out,
+    stats = _aggregate(df, [
+        f"struct(count(1), count_if({c} IS NULL), CAST(min({c}) AS STRING), "
+        f"CAST(max({c}) AS STRING), approx_count_distinct({c}))"
+        for c in map(q, cols)
+    ])
+    return df.sparkSession.createDataFrame(
+        [(name, *s) for name, s in zip(cols, stats)],
         "column string, n_rows long, n_nulls long, min_value string, "
         "max_value string, approx_distinct long",
     )

@@ -1,3 +1,5 @@
+import threading
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -21,3 +23,30 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """``py4j_calls(fn, *args, **kwargs)`` runs ``fn`` and returns how many
+    commands its thread sent to the JVM meanwhile (every Py4J round trip
+    goes through the gateway client's ``send_command``).  Commands from
+    other threads, such as Py4J's finalizer releasing earlier garbage, are
+    not counted.  The method is restored when the test ends."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    sent = {}
+
+    def counting(self, *args, **kwargs):
+        thread = threading.get_ident()
+        sent[thread] = sent.get(thread, 0) + 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def measure(fn, *args, **kwargs):
+        thread = threading.get_ident()
+        before = sent.get(thread, 0)
+        fn(*args, **kwargs)
+        return sent.get(thread, 0) - before
+
+    return measure

@@ -1,9 +1,14 @@
 """Data-level golden tests for profiling + clean_rows (FIXTURES.md F3)."""
 
+import re
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
-from pr2_transformation_spark import profiling
+from pr2_transformation_spark import config, profiling
+from pr2_transformation_spark.expressions import q, render_select_sql
 from pr2_transformation_spark.operators.clean_rows import clean_rows_df, compose_clean_rows
 
 
@@ -154,3 +159,102 @@ def test_false_array_reference_ships_all_75_pairs():
     cols = [f"d_{a}_d_{b}", f"d_{a}_d_{b}_1_1", "d_111111111"]
     got = profiling.false_array_columns_from_reference(cols)
     assert f"d_{a}_d_{b}" in got and f"d_{a}_d_{b}_1_1" in got
+
+
+def test_detectors_on_dotted_and_backticked_names(spark):
+    """A top-level column named ``a.b`` is not a struct path and one named
+    ``c`d`` is not a syntax error: every detector, the recode and the
+    archived SQL quote them as single identifiers."""
+    df = spark.createDataFrame(
+        [("900000001", "1", "[]"), ("900000002", "0", "[178420302]"), ("900000003", None, None)],
+        "Connect_ID string, `a.b` string, `c``d` string",
+    )
+    assert profiling.binary_columns(df) == ["a.b"]
+    assert profiling.strict_false_array_columns(df, use_reference=False) == ["c`d"]
+    assert profiling.profile_columns(df) == (["a.b"], ["c`d"])
+
+    out = clean_rows_df(df, use_reference=False)
+    assert out.columns == ["a.b", "c`d", "Connect_ID"]
+    want = {
+        ("353358909", None, "900000001"),
+        ("104430631", "178420302", "900000002"),
+        (None, None, "900000003"),
+    }
+    assert {tuple(r) for r in out.collect()} == want
+
+    sql = render_select_sql(compose_clean_rows(df, use_reference=False), q("odd_names"), "dst`x")
+    spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    df.createOrReplaceTempView("odd_names")
+    replayed = spark.sql(sql[sql.index("\nSELECT\n") + 1:])
+    assert replayed.columns == out.columns
+    assert {tuple(r) for r in replayed.collect()} == want
+
+
+def test_profiling_py4j_calls_do_not_grow_with_width(spark, py4j_calls):
+    """Within one batch, ten times the columns costs (almost) no extra
+    driver-to-JVM round trips: the per-column aggregates are SQL text,
+    not pyspark Columns."""
+
+    def frame(width):
+        return spark.range(8).selectExpr(
+            *[f"CAST(id % {2 + i % 3} AS STRING) AS `d_{i}`" for i in range(width)]
+        )
+
+    narrow, wide = frame(30), frame(300)
+    for fn, kwargs in [
+        (profiling.binary_columns, {"batch_size": 1000}),
+        (profiling.profile_columns, {"batch_size": 1000}),
+        (profiling.strict_false_array_columns, {"batch_size": 1000}),
+        (profiling.table_profile, {}),
+    ]:
+        fn(narrow, **kwargs)  # warm
+        extra = py4j_calls(fn, wide, **kwargs) - py4j_calls(fn, narrow, **kwargs)
+        assert extra < 50, f"{fn.__name__}: {extra} more Py4J calls at 300 columns than at 30"
+
+
+_DOMAIN = [None, "", "0", "1", " 1", "01", "x", "[]",
+           "[178420302]", "[958239616]", "[123456789]"]
+
+
+def _model_binary(values) -> bool:
+    """Reference COUNTIF: no value outside {"0", "1", NULL, ""}."""
+    return all(v in (None, "0", "1", "") for v in values)
+
+
+def _model_false_array(values) -> bool:
+    """The three reference checks of ``strict_false_array_columns``."""
+    distinct = {v for v in values if v is not None}
+    return (
+        1 <= len(distinct) <= 3
+        and distinct <= set(config.FALSE_ARRAY_VALUES)
+        and sum(bool(re.fullmatch(r"\[\d{9}\]", v)) for v in distinct) <= 1
+    )
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.integers(1, 4).flatmap(
+        lambda width: st.lists(
+            st.lists(st.sampled_from(_DOMAIN), min_size=width + 1, max_size=width + 1),
+            min_size=1,
+            max_size=6,
+        )
+    )
+)
+@example([[None, None]])
+@example([["1", "[178420302]"]])
+@example([[None, None, "[]", "0"], ["0", None, "[958239616]", "1"]])
+@example([["x", "[178420302]", None], ["1", "[958239616]", None]])
+def test_detectors_match_python_model(spark, rows):
+    """All three detectors agree with a pure-Python evaluation of the
+    reference predicates; the first column is ``Connect_ID``, which the
+    false-array detectors skip."""
+    names = ["Connect_ID"] + [f"c{i}" for i in range(len(rows[0]) - 1)]
+    df = spark.createDataFrame(rows, ", ".join(f"{n} string" for n in names))
+    columns = {n: [r[i] for r in rows] for i, n in enumerate(names)}
+    binary = [n for n in names if _model_binary(columns[n])]
+    false_arrays = [n for n in names[1:] if _model_false_array(columns[n])]
+
+    assert profiling.binary_columns(df) == binary
+    assert profiling.strict_false_array_columns(df, use_reference=False) == false_arrays
+    assert profiling.profile_columns(df) == (binary, false_arrays)
