@@ -6,23 +6,28 @@ The canonical last step of near-duplicate removal at 100 TB: pair finders
 keep/drop decisions needs the transitive closure — if A~B and B~C, then
 {A,B,C} is one duplicate cluster even when A and C never matched directly.
 
-Spark has no built-in graph operator, so this is the standard iterative
-min-label propagation (the simple variant of Kiveris et al.'s "Connected
-Components in MapReduce and Beyond" two-phase algorithm):
+Spark has no built-in graph operator, so this is iterative min-label
+propagation with pointer jumping (Shiloach-Vishkin shortcutting):
 
 * state: one (id, comp) label per vertex, initialized comp = id;
 * step:  every vertex takes the min of its own label and its neighbors'
-  labels — one shuffle-on-key join + one groupBy per iteration;
+  labels, then follows that label one hop through the label table
+  (comp <- comp[comp]) — one neighbor join + one groupBy + one narrow
+  self-join per iteration;
 * stop:  when an iteration changes no label (driver-side count — the one
   place a driver round-trip is inherent, same as any iterative algorithm's
   convergence test).
 
-Scale posture: converges in O(diameter) iterations (real near-dup graphs
-are overwhelmingly tiny star/clique clusters, so 2-4 iterations); each
-iteration is one partial-aggregated shuffle of (id, comp) pairs — narrow
-8-byte rows regardless of document payload width.  `localCheckpoint`
-truncates the lineage each round so the plan doesn't grow with iteration
-count (without it, iteration N replays all N-1 prior joins).
+Scale posture: the pointer jump doubles the hop distance closed per
+round, so convergence needs O(log diameter) iterations (real near-dup
+graphs are overwhelmingly tiny star/clique clusters, so 2-4 iterations);
+each iteration shuffles only the narrow (id, comp) label frame — 8-byte
+rows regardless of document payload width.  `localCheckpoint` truncates
+the lineage each round so the plan doesn't grow with iteration count
+(without it, iteration N replays all N-1 prior joins).  On every graph
+shape measured (shallow near-dup stars, random graphs, long chains) this
+ran at least as fast as Kiveris et al.'s large-star/small-star algorithm
+with identical labels, so it is the only connected-components path.
 
 No reference-repo analogue (the reference has no graph surface); cited in
 SURVEY.md §2.12 EXT.
@@ -37,7 +42,6 @@ from ..checkpointing import checkpoint_frame
 
 __all__ = [
     "connected_components",
-    "connected_components_two_phase",
     "dedup_clusters",
 ]
 
@@ -61,8 +65,11 @@ def connected_components(
     per round and convergence needs O(log diameter) passes — the default
     25 covers any graph up to diameter ~2^25.  Raises ``RuntimeError`` if
     the bound is hit without convergence rather than silently returning
-    partial labels; :func:`connected_components_two_phase` remains the
-    alternative whose per-round edge set also *shrinks*.
+    partial labels.
+
+    Vertex ids may be any orderable type (long, string hash ids, ...):
+    ``min``/``least`` use the column's native ordering and no cast is
+    applied.  Vertices that appear only in self-loops are dropped.
 
     ``checkpoint`` selects how the per-iteration frames are materialized
     ("local" default; "reliable" survives executor loss on a real cluster
@@ -164,116 +171,8 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} iterations "
-        "(graph diameter exceeds the bound — use connected_components_two_phase "
-        "for long-chain graphs)"
+        f"(graph diameter exceeds ~2^{max_iterations}; raise max_iterations)"
     )
-
-
-def connected_components_two_phase(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-    checkpoint: str | None = "local",
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris,
-    Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
-    MapReduce and Beyond", SoCC'14): converges in O(log n) rounds on ANY
-    graph shape, vs :func:`connected_components`'s O(diameter) — a
-    200-vertex chain resolves in 9 rounds where min-label needs 200.
-
-    Per round (each a constant number of shuffles over the current edge
-    set, which only shrinks):
-
-    * **large-star**: every vertex connects its LARGER neighbors to the
-      minimum of its neighborhood (incl. itself) — long tails collapse
-      toward local minima;
-    * **small-star**: every vertex connects its smaller neighbors (and
-      itself) to their minimum — stars flatten onto the component root.
-
-    Convergence = the edge multiset stops changing, detected by a
-    (count, bit_xor of per-edge xxhash64) signature — order-independent
-    and overflow-free under ANSI mode.  A signature match between two
-    DIFFERENT consecutive edge sets (probability ~2^-64 per round) would
-    otherwise terminate with unconverged labels, so the match is
-    confirmed with ONE exact set comparison (symmetric anti-join counts)
-    before breaking — the confirmation runs once, at convergence, over
-    the already-shrunk edge set.
-
-    Vertex ids may be any orderable type (long, string hash ids, ...):
-    ``min``/``least`` and the ``<``/``>`` star splits use the column's
-    native ordering and ``xxhash64`` accepts any input type, so no cast
-    is applied — a cast to long would NULL out (ANSI off) or raise
-    (ANSI on) on the string document ids hash-based corpus dedup emits.
-
-    Returns ``(id, comp)`` with comp = the component's minimum vertex id
-    — same contract as :func:`connected_components` (self-loop-only
-    vertices are likewise dropped).
-    """
-    e = checkpoint_frame(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        checkpoint,
-    )
-    prev_sig = None
-    for _ in range(max_rounds):
-        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = sym.groupBy("a").agg(F.min("b").alias("__mn")).select(
-            "a", F.least(F.col("__mn"), F.col("a")).alias("m")
-        )
-        large = (
-            sym.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # After large-star every edge points downward (b < a): small-star
-        # groups those, linking each vertex and its smaller neighbors to
-        # their common minimum.
-        down = large.filter(F.col("b") < F.col("a"))
-        mins2 = down.groupBy("a").agg(F.min("b").alias("m"))
-        nxt = checkpoint_frame(
-            down.join(mins2, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .union(mins2.select("a", F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct(),
-            checkpoint,
-        )
-        sig_row = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).first()
-        sig = (sig_row["n"], sig_row["h"])
-        if prev_sig == sig:
-            # Signature match: confirm with an exact multiset comparison so
-            # a ~2^-64 xor collision between two different consecutive edge
-            # sets can never end the loop with unconverged labels.  Both
-            # frames are checkpointed and, at this point, small (the edge
-            # set only shrinks), so the two anti-join counts are cheap and
-            # run exactly once per call on the non-collision path.
-            stable = (
-                e.exceptAll(nxt).limit(1).count() == 0
-                and nxt.exceptAll(e).limit(1).count() == 0
-            )
-            e = nxt
-            if stable:
-                break
-        else:
-            e = nxt
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"connected_components_two_phase did not converge in {max_rounds} rounds"
-        )
-    # Stable state is a forest of stars rooted at component minima.
-    comp = e.select(F.col("a").alias("id"), F.col("b").alias("comp"))
-    roots = e.select(F.col("b").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
-    )
-    return comp.union(roots).groupBy("id").agg(F.min("comp").alias("comp"))
 
 
 def dedup_clusters(
@@ -282,7 +181,6 @@ def dedup_clusters(
     id_col: str,
     left_col: str,
     right_col: str,
-    algorithm: str = "label",
     checkpoint: str | None = "local",
 ) -> DataFrame:
     """Pairs → keep/drop decision per document.
@@ -291,23 +189,12 @@ def dedup_clusters(
     output); ``all_ids`` supplies the full id universe so singletons (docs
     with no near-dup) appear with themselves as keeper.  Returns
     ``(id, cluster, keep)`` where ``keep`` marks the minimum id of each
-    transitive cluster — the row a dedup pass would retain.
-
-    ``algorithm="label"`` (default) is min-label propagation — fewest
-    shuffles per pass, right for the star/clique clusters near-dup pairs
-    form; ``"two_phase"`` switches to the O(log n)-round star algorithm
-    for graphs that may contain long chains.
+    transitive cluster — the row a dedup pass would retain.  Clusters
+    come from :func:`connected_components`.
     """
-    if algorithm == "two_phase":
-        comp = connected_components_two_phase(
-            pairs, src=left_col, dst=right_col, checkpoint=checkpoint
-        )
-    elif algorithm == "label":
-        comp = connected_components(
-            pairs, src=left_col, dst=right_col, checkpoint=checkpoint
-        )
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r} (label | two_phase)")
+    comp = connected_components(
+        pairs, src=left_col, dst=right_col, checkpoint=checkpoint
+    )
     universe = all_ids.select(F.col(id_col).alias("id")).distinct()
     labeled = universe.join(comp, "id", "left").select(
         "id", F.coalesce("comp", F.col("id")).alias("cluster")

@@ -186,19 +186,27 @@ def prepare_training_corpus(
             _pool = ThreadPoolExecutor(max_workers=1)
             bad_future = _pool.submit(_ckpt, _bad, checkpoint)
             _pool.shutdown(wait=False)
-        pairs = dedup.near_dup_pairs_minhash(
-            out,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=jaccard_threshold,
-            hasher=hasher,
-            checkpoint=checkpoint,
-        )
-        keep = dedup_clusters(
-            pairs, out.select(id_col), id_col, "id_a", "id_b",
-            checkpoint=checkpoint,
-        ).filter(F.col("keep")).select(F.col("id").alias(id_col))
-        out = note("near_dup", out.join(keep, id_col, "left_semi"))
+        try:
+            pairs = dedup.near_dup_pairs_minhash(
+                out,
+                text_col=text_col,
+                id_col=id_col,
+                threshold=jaccard_threshold,
+                hasher=hasher,
+                checkpoint=checkpoint,
+            )
+            keep = dedup_clusters(
+                pairs, out.select(id_col), id_col, "id_a", "id_b",
+                checkpoint=checkpoint,
+            ).filter(F.col("keep")).select(F.col("id").alias(id_col))
+            out = note("near_dup", out.join(keep, id_col, "left_semi"))
+        except BaseException:
+            # never leave the gram job running behind a failed call:
+            # cancel it if it has not started, else wait for it (its
+            # own outcome is irrelevant — the near-dup error wins)
+            if bad_future is not None and not bad_future.cancel():
+                bad_future.exception()
+            raise
 
     if segment_dedup:
         # C4-style cross-document segment rewrite: each distinct

@@ -1,230 +1,47 @@
-"""DEFLATE decoder from scratch — RFC 1951, with the RFC 1952 gzip and
-RFC 1950 zlib wrappers.
+"""DEFLATE (RFC 1951) with the RFC 1950 zlib and RFC 1952 gzip wrappers.
 
-The last compression format the repo consumed only through a library:
-Snappy, LZ4 (block + frame) and Zstandard are already decoded from
-their specs (`parquet_data.py`, `zstd.py`); this module does the same
-for DEFLATE — stored blocks, fixed Huffman, dynamic Huffman (the
-code-length code with its 16/17/18 repeat operators), the 32 KiB LZ77
-window — so every byte of a gzip parquet page, a PNG IDAT stream, a
-deflate Avro block, or a `.warc.gz` member is inspectable without
-zlib.  The stdlib zlib stays the HOT path (C speed); this is the
-conformance twin, pinned equal to zlib on every shape the tests
-generate plus real container bytes.
+Decoding goes through stdlib ``zlib`` (C speed) behind three names:
+:func:`inflate` (raw stream -> payload and end offset, for containers
+that frame DEFLATE themselves: ZIP members, ORC zlib chunks),
+:func:`zlib_decompress` and :func:`gunzip` (multi-member, the .warc.gz
+shape).  The wrapper headers, Adler-32, CRC32 and ISIZE are checked
+here, and every decode failure — corrupt or truncated — raises
+``ValueError`` (``zlib.error`` is mapped onto it), the corruption
+contract callers such as ``zip_archive.zip_extract`` rely on.
 
-Checksums: gzip CRC32 and zlib Adler-32 are verified (Adler computed
-here; CRC via binascii, a table lookup, not a decompressor).
+Encoding is written from the spec: greedy hash-match LZ77 into a fixed
+or dynamic Huffman block (package-merge length-limited codes), the
+smaller picked per input by :func:`deflate_encode`.  Its output is
+byte-pinned — the ZIP, ORC and gzip-parquet writers promise
+deterministic bytes, which stdlib zlib's encoder does not guarantee
+across library versions — so the encoders stay in Python.
 """
 
 from __future__ import annotations
 
-# length codes 257-285: (base, extra bits)
-_LEN_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43,
-             51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258]
-_LEN_EXTRA = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
-              4, 4, 4, 4, 5, 5, 5, 5, 0]
-# distance codes 0-29
-_DIST_BASE = [1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-              257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193,
-              12289, 16385, 24577]
-_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8,
-               9, 9, 10, 10, 11, 11, 12, 12, 13, 13]
-_CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1,
-              15]
-
-
-class _Bits:
-    __slots__ = ("buf", "pos", "bit", "blen")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
-        self.bit = 0
-        self.blen = len(buf)
-
-    def read(self, n: int) -> int:
-        # all n bits in one slice + shift instead of a per-bit loop
-        # (r11, guide §4.2 — this read and the Huffman walk below were
-        # ~90% of inflate's runtime); (pos, bit) semantics unchanged,
-        # including the IndexError a truncated stream raised per-bit
-        end = self.pos + ((self.bit + n + 7) >> 3)
-        if end > self.blen and n:
-            # would read past the stream: preserve the scalar reader's
-            # failure mode exactly
-            raise IndexError("index out of range")
-        out = (
-            int.from_bytes(self.buf[self.pos:end], "little") >> self.bit
-        ) & ((1 << n) - 1)
-        t = self.bit + n
-        self.pos += t >> 3
-        self.bit = t & 7
-        return out
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-#: fast-table width: codes up to this many bits decode with ONE peek
-_ROOT_BITS = 10
-
-
-class _Huff:
-    """Canonical Huffman decoder from a code-length list (RFC 1951
-    3.2.2): codes assigned in symbol order within each length, read
-    MSB-first.  Decoding peeks ``_ROOT_BITS`` stream bits and resolves
-    codes up to that length with one flat-table lookup (the standard
-    fast-inflate shape); longer codes and near-end-of-stream positions
-    fall back to the exact per-bit walk."""
-
-    __slots__ = ("by_len", "root")
-
-    def __init__(self, lengths: list[int]):
-        # by_len[l] = (first_code, first_symbol_index_map)
-        self.by_len: dict[int, dict[int, int]] = {}
-        max_len = max(lengths, default=0)
-        code = 0
-        bl_count = [0] * (max_len + 1)
-        for ln in lengths:
-            if ln:
-                bl_count[ln] += 1
-        next_code = [0] * (max_len + 2)
-        for ln in range(1, max_len + 1):
-            code = (code + bl_count[ln - 1]) << 1
-            next_code[ln] = code
-        root: list = [None] * (1 << _ROOT_BITS)
-        for sym, ln in enumerate(lengths):
-            if ln:
-                c = next_code[ln]
-                self.by_len.setdefault(ln, {})[c] = sym
-                next_code[ln] += 1
-                if ln <= _ROOT_BITS:
-                    # the stream presents the code LSB-first: index the
-                    # table by the bit-reversed code, replicated across
-                    # every padding of the remaining root bits
-                    rc = 0
-                    for i in range(ln):
-                        rc |= ((c >> i) & 1) << (ln - 1 - i)
-                    step = 1 << ln
-                    for idx in range(rc, 1 << _ROOT_BITS, step):
-                        root[idx] = (sym, ln)
-        self.root = root
-
-    def decode(self, bits: _Bits) -> int:
-        # fast path: peek ROOT bits (needs 2 whole bytes beyond the
-        # current one in the buffer), one table lookup, consume
-        pos, bit = bits.pos, bits.bit
-        buf = bits.buf
-        if pos + 3 <= bits.blen:
-            chunk = (
-                (buf[pos] | (buf[pos + 1] << 8) | (buf[pos + 2] << 16))
-                >> bit
-            ) & 0x3FF
-            hit = self.root[chunk]
-            if hit is not None:
-                sym, ln = hit
-                t = bit + ln
-                bits.pos = pos + (t >> 3)
-                bits.bit = t & 7
-                return sym
-        code = 0
-        for ln in range(1, 16):
-            code = (code << 1) | bits.read(1)
-            table = self.by_len.get(ln)
-            if table is not None and code in table:
-                return table[code]
-        raise ValueError("inflate: invalid Huffman code")
-
-
-_FIXED_LIT = _Huff([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
-_FIXED_DIST = _Huff([5] * 30)
+import zlib
 
 
 def inflate(buf: bytes, pos: int = 0) -> tuple[bytes, int]:
-    """Raw DEFLATE stream -> (payload, end position in buf)."""
-    bits = _Bits(buf, pos)
-    out = bytearray()
-    while True:
-        bfinal = bits.read(1)
-        btype = bits.read(2)
-        if btype == 0:  # stored
-            bits.align()
-            ln = int.from_bytes(buf[bits.pos:bits.pos + 2], "little")
-            nln = int.from_bytes(buf[bits.pos + 2:bits.pos + 4], "little")
-            if ln ^ nln != 0xFFFF:
-                raise ValueError("inflate: stored block LEN/NLEN mismatch")
-            bits.pos += 4
-            out += buf[bits.pos:bits.pos + ln]
-            bits.pos += ln
-        elif btype in (1, 2):
-            if btype == 1:
-                lit, dist = _FIXED_LIT, _FIXED_DIST
-            else:
-                hlit = bits.read(5) + 257
-                hdist = bits.read(5) + 1
-                hclen = bits.read(4) + 4
-                cl_lens = [0] * 19
-                for i in range(hclen):
-                    cl_lens[_CLC_ORDER[i]] = bits.read(3)
-                clc = _Huff(cl_lens)
-                lens: list[int] = []
-                while len(lens) < hlit + hdist:
-                    sym = clc.decode(bits)
-                    if sym < 16:
-                        lens.append(sym)
-                    elif sym == 16:
-                        if not lens:
-                            raise ValueError("inflate: repeat with no prior")
-                        lens.extend([lens[-1]] * (3 + bits.read(2)))
-                    elif sym == 17:
-                        lens.extend([0] * (3 + bits.read(3)))
-                    else:
-                        lens.extend([0] * (11 + bits.read(7)))
-                if len(lens) != hlit + hdist:
-                    raise ValueError("inflate: code-length overrun")
-                lit = _Huff(lens[:hlit])
-                dist = _Huff(lens[hlit:])
-            while True:
-                sym = lit.decode(bits)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                else:
-                    li = sym - 257
-                    length = _LEN_BASE[li] + bits.read(_LEN_EXTRA[li])
-                    ds = dist.decode(bits)
-                    distance = _DIST_BASE[ds] + bits.read(_DIST_EXTRA[ds])
-                    start = len(out) - distance
-                    if start < 0:
-                        raise ValueError("inflate: distance beyond window")
-                    if distance >= length:
-                        out += out[start:start + length]
-                    else:
-                        for i in range(length):
-                            out.append(out[start + i])
-        else:
-            raise ValueError("inflate: reserved block type")
-        if bfinal:
-            break
-    bits.align()
-    return bytes(out), bits.pos
-
-
-def _adler32(data: bytes) -> int:
-    a, b = 1, 0
-    for chunk_start in range(0, len(data), 5552):  # mod deferral bound
-        for byte in data[chunk_start:chunk_start + 5552]:
-            a += byte
-            b += a
-        a %= 65521
-        b %= 65521
-    return (b << 16) | a
+    """Raw DEFLATE stream starting at ``buf[pos]`` -> (payload, end
+    position in buf).  Bytes after the final block are left unread, so
+    ``end`` is where a container's trailer starts.  Corrupt or truncated
+    streams raise ``ValueError``."""
+    d = zlib.decompressobj(-15)
+    try:
+        out = d.decompress(memoryview(buf)[pos:])
+    except zlib.error as e:
+        raise ValueError(f"inflate: {e}") from None
+    if not d.eof:
+        # stdlib returns the partial output of a cut stream without error
+        raise ValueError("inflate: truncated stream")
+    return out, len(buf) - len(d.unused_data)
 
 
 def zlib_decompress(buf: bytes) -> bytes:
     """RFC 1950 wrapper: CMF/FLG header + deflate + Adler-32."""
+    if len(buf) < 2:
+        raise ValueError("zlib: truncated header")
     cmf, flg = buf[0], buf[1]
     if cmf & 0x0F != 8:
         raise ValueError("zlib: method is not deflate")
@@ -234,7 +51,7 @@ def zlib_decompress(buf: bytes) -> bytes:
         raise ValueError("zlib: preset dictionaries unsupported")
     payload, end = inflate(buf, 2)
     stored = int.from_bytes(buf[end:end + 4], "big")
-    if _adler32(payload) != stored:
+    if zlib.adler32(payload) != stored:
         raise ValueError("zlib: Adler-32 mismatch")
     return payload
 
@@ -243,11 +60,11 @@ def gunzip(buf: bytes) -> bytes:
     """RFC 1952 member(s): header (FLG-gated fields), deflate, CRC32 +
     ISIZE verified.  Concatenated members decode to the concatenation
     (the .warc.gz shape)."""
-    import binascii
-
     out = bytearray()
     pos = 0
     while pos < len(buf):
+        if len(buf) - pos < 10:
+            raise ValueError("gzip: truncated header")
         if buf[pos:pos + 2] != b"\x1f\x8b":
             raise ValueError("gzip: bad magic")
         if buf[pos + 2] != 8:
@@ -264,10 +81,12 @@ def gunzip(buf: bytes) -> bytes:
         if flg & 2:  # FHCRC
             pos += 2
         payload, pos = inflate(buf, pos)
+        if len(buf) - pos < 8:
+            raise ValueError("gzip: truncated trailer")
         crc = int.from_bytes(buf[pos:pos + 4], "little")
         isize = int.from_bytes(buf[pos + 4:pos + 8], "little")
         pos += 8
-        if binascii.crc32(payload) & 0xFFFFFFFF != crc:
+        if zlib.crc32(payload) != crc:
             raise ValueError("gzip: CRC32 mismatch")
         if len(payload) % (1 << 32) != isize:
             raise ValueError("gzip: ISIZE mismatch")
@@ -276,6 +95,21 @@ def gunzip(buf: bytes) -> bytes:
 
 
 # ------------------------------------------------------------- encoder
+
+# length codes 257-285: (base, extra bits)
+_LEN_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43,
+             51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258]
+_LEN_EXTRA = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
+              4, 4, 4, 4, 5, 5, 5, 5, 0]
+# distance codes 0-29
+_DIST_BASE = [1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
+              257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193,
+              12289, 16385, 24577]
+_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8,
+               9, 9, 10, 10, 11, 11, 12, 12, 13, 13]
+_CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1,
+              15]
+
 
 _FIXED_LIT_CODE = {}
 for _s in range(144):
@@ -592,15 +426,13 @@ def zlib_compress(raw: bytes) -> bytes:
     """RFC 1950 wrapper around :func:`deflate_encode` (CMF 0x78, a
     valid FLG, trailing Adler-32)."""
     flg = 31 - (0x78 * 256) % 31
-    return bytes([0x78, flg]) + deflate_encode(raw) + _adler32(raw).to_bytes(4, "big")
+    return bytes([0x78, flg]) + deflate_encode(raw) + zlib.adler32(raw).to_bytes(4, "big")
 
 
 def gzip_compress(raw: bytes) -> bytes:
     """RFC 1952 member around :func:`deflate_encode` (mtime 0, CRC32 +
     ISIZE trailer) — deterministic bytes for a given input."""
-    import binascii
-
     return (b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x00\xff"
             + deflate_encode(raw)
-            + (binascii.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "little")
+            + zlib.crc32(raw).to_bytes(4, "little")
             + (len(raw) % (1 << 32)).to_bytes(4, "little"))

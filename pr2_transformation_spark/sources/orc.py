@@ -3,12 +3,13 @@ beside parquet (`parquet_meta`/`parquet_data`/`parquet_write`) and Avro
 (`avro.py`), implemented entirely from the public ORC v1 specification
 (https://orc.apache.org/specification/ORCv1/).
 
-Everything is decoded library-free on top of in-repo pieces:
+Everything is decoded without an ORC library, on top of in-repo pieces:
 
 * postscript / file footer / stripe footers: protobuf wire format via
   the same varint/tag machinery as `protowire.py`,
 * stream compression framing (3-byte chunk headers, isOriginal bit)
-  over the in-repo codecs — raw deflate (`inflate.py`), Snappy
+  over the repo's codec layer — raw deflate (`inflate.inflate`, stdlib
+  zlib underneath; a corrupt chunk raises ``ValueError``), Snappy
   (`parquet_data.snappy_decompress`), LZ4 (`parquet_data.
   lz4_block_decompress`) and Zstandard (`zstd.zstd_decompress`),
 * Byte-RLE and Boolean-RLE (PRESENT bitmaps, tinyint/bool data),

@@ -1,10 +1,11 @@
 """From-scratch ZIP archive READER (APPNOTE.TXT / PKZIP format):
 end-of-central-directory locate (comment-tolerant scan), central
 directory walk, local-header offset resolution, STORED and DEFLATE
-members through the IN-REPO `inflate.py` decoder, CRC-32 verification
-(stdlib zlib.crc32 — the polynomial table, not a format library),
-ZIP64 end-of-central-directory and extra-field offsets for large
-archives, and data-descriptor tolerance.
+members (DEFLATE decoded by stdlib zlib through `inflate.inflate`),
+CRC-32 verification (stdlib zlib.crc32), ZIP64 end-of-central-directory
+and extra-field offsets for large archives, and data-descriptor
+tolerance.  Every corrupt member — bad DEFLATE stream, truncated
+data, size or CRC mismatch — raises ``ValueError``.
 
 Why here: corpus drops arrive zipped constantly (Common Crawl
 derivatives, Kaggle exports, annotation bundles); at 100 TB they are
@@ -149,7 +150,7 @@ def zip_write_bytes(members: "list[tuple[str, bytes]]",
     """From-scratch ZIP WRITER — the write-side twin of
     :func:`zip_entries` (round-8 plane symmetry: every other format
     pillar is bidirectional).  STORED or DEFLATE members, the latter
-    compressed by the IN-REPO encoder (`inflate.deflate_fixed` — so a
+    compressed by the IN-REPO encoder (`inflate.deflate_encode` — so a
     stdlib ``zipfile`` reading the archive independently validates both
     the container layout AND the repo's DEFLATE bitstream).  Output is
     deterministic: fixed DOS timestamp (1980-01-01), no extra fields,

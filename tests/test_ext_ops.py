@@ -173,7 +173,9 @@ def test_duplicate_stats_hash_matches_exact(spark):
 
 def test_connected_components_known_graph(spark):
     """Two multi-edge components + transitive link + a disconnected pair:
-    labels must be the min reachable id, including across indirect hops."""
+    labels must be the min reachable id, including across indirect hops.
+    String vertex ids (hash-based corpus doc ids) label by the string
+    ordering's minimum, with no cast to long."""
     from pr2_transformation_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -184,19 +186,32 @@ def test_connected_components_known_graph(spark):
     # 5 only appears in a self-loop -> dropped from the vertex set entirely.
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
+    edges = spark.createDataFrame(
+        [("doc_b", "doc_a"), ("doc_b", "doc_c"), ("doc_x", "doc_y")],
+        "src string, dst string",
+    )
+    got = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
+    assert got == {
+        "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
+        "doc_x": "doc_x", "doc_y": "doc_x",
+    }
+
 
 def test_connected_components_long_chain_converges(spark):
-    """A 20-vertex path needs multiple propagation rounds; the label must
-    still reach the far end (exercises the iteration/checkpoint loop)."""
+    """Paths need multiple propagation rounds; the label must still reach
+    the far end (exercises the iteration/checkpoint loop).  The 200-vertex
+    chain has a diameter far above the 25-round bound, so it converges
+    only because the pointer jump closes O(2^round) hops per round."""
     from pr2_transformation_spark.operators.graph import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "src long, dst long"
-    )
-    got = connected_components(edges)
-    assert got.count() == 21
-    assert got.agg(F.count_distinct("comp")).collect()[0][0] == 1
-    assert got.filter(F.col("comp") != 0).count() == 0
+    for n in (20, 200):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "src long, dst long"
+        )
+        got = connected_components(edges)
+        assert got.count() == n + 1
+        assert got.agg(F.count_distinct("comp")).collect()[0][0] == 1
+        assert got.filter(F.col("comp") != 0).count() == 0
 
 
 def test_dedup_clusters_keeps_min_and_singletons(spark):
@@ -209,6 +224,77 @@ def test_dedup_clusters_keeps_min_and_singletons(spark):
     got = {r["id"]: (r["cluster"], r["keep"]) for r in
            dedup_clusters(pairs, ids, "doc_id", "id_a", "id_b").collect()}
     assert got == {1: (1, True), 3: (3, True), 7: (3, False), 9: (3, False)}
+
+    # string ids: the singleton keeps itself, the cluster keeps its min
+    pairs = spark.createDataFrame(
+        [("doc_b", "doc_a"), ("doc_b", "doc_c"), ("doc_x", "doc_y")],
+        "src string, dst string",
+    )
+    ids = spark.createDataFrame(
+        [("doc_a",), ("doc_b",), ("doc_c",), ("doc_x",), ("doc_y",), ("solo",)],
+        "doc_id string",
+    )
+    got = {r["id"]: (r["cluster"], r["keep"]) for r in
+           dedup_clusters(pairs, ids, "doc_id", "src", "dst").collect()}
+    assert got == {
+        "doc_a": ("doc_a", True), "doc_b": ("doc_a", False),
+        "doc_c": ("doc_a", False), "doc_x": ("doc_x", True),
+        "doc_y": ("doc_x", False), "solo": ("solo", True),
+    }
+
+
+def _union_find_components(edges):
+    """Pure-Python reference: id -> min id of its undirected component,
+    over the vertices of non-self-loop edges (the operator's contract)."""
+    parent = {}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Hypothesis: on random edge lists over <= 60 vertices — self-loops,
+    duplicate edges and both edge directions included — the labels equal
+    a pure-Python union-find's component minimum, for long and string
+    vertex ids alike."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from pr2_transformation_spark.operators.graph import connected_components
+
+    vertex = st.integers(min_value=0, max_value=59)
+
+    @settings(max_examples=12, deadline=None)
+    @given(st.lists(st.tuples(vertex, vertex), min_size=1, max_size=90),
+           st.booleans())
+    @example([(3, 3), (4, 4)], False)  # self-loops only: no vertices
+    @example([(9, 8), (8, 9), (9, 8), (10, 7), (7, 8)], True)
+    def check(edges, as_string):
+        if as_string:
+            # unpadded, so string order differs from int order
+            # ("v7" > "v10"): the min must follow the column's ordering
+            edges = [(f"v{a}", f"v{b}") for a, b in edges]
+            schema = "src string, dst string"
+        else:
+            schema = "src long, dst long"
+        got = {r["id"]: r["comp"] for r in connected_components(
+            spark.createDataFrame(edges, schema)).collect()}
+        assert got == _union_find_components(edges)
+
+    check()
 
 
 def test_approx_distinct_accuracy(spark):
@@ -715,77 +801,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     assert {k: norm(v) for k, v in expected.items()} == {k: norm(v) for k, v in got.items()}
 
 
-def test_two_phase_cc_matches_min_label_and_handles_long_chains(spark):
-    """Kiveris et al. two-phase CC: identical components to min-label
-    propagation wherever the latter converges, AND resolves a 200-vertex
-    chain (which exceeds min-label's diameter bound) in O(log n) rounds."""
-    import random
-
-    from pr2_transformation_spark.operators.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    random.seed(5)
-    for es in (
-        [(i, i - i % 4) for i in range(40) if i % 4],
-        [(random.randrange(300), random.randrange(300)) for _ in range(250)],
-        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
-        [(i, i + 1) for i in range(20)],
-    ):
-        ed = spark.createDataFrame(
-            [e for e in es if e[0] != e[1]], "src long, dst long"
-        )
-        ref = {r["id"]: r["comp"] for r in connected_components(ed).collect()}
-        got = {r["id"]: r["comp"]
-               for r in connected_components_two_phase(ed).collect()}
-        assert got == ref
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "src long, dst long"
-    )
-    # r11: min-label now pointer-jumps (comp <- comp[comp]) each round,
-    # so a diameter-200 chain converges in O(log d) rounds instead of
-    # exceeding the 25-round bound and raising — both algorithms must
-    # resolve the chain to the single component rooted at 0
-    comp_ml = {r["id"]: r["comp"]
-               for r in connected_components(chain).collect()}
-    assert len(comp_ml) == 201 and set(comp_ml.values()) == {0}
-    comp = {r["id"]: r["comp"]
-            for r in connected_components_two_phase(chain).collect()}
-    assert len(comp) == 201 and set(comp.values()) == {0}
-
-
-def test_two_phase_cc_string_ids(spark):
-    """Two-phase CC must work on non-integral vertex ids (hash-based corpus
-    doc ids are strings) — regression for a cast-to-long that NULLed or
-    raised on string ids.  Components use the string ordering's minimum."""
-    from pr2_transformation_spark.operators.graph import (
-        connected_components,
-        connected_components_two_phase,
-        dedup_clusters,
-    )
-
-    edges = [("doc_b", "doc_a"), ("doc_b", "doc_c"), ("doc_x", "doc_y")]
-    ed = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["id"]: r["comp"] for r in connected_components_two_phase(ed).collect()}
-    assert got == {
-        "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
-        "doc_x": "doc_x", "doc_y": "doc_x",
-    }
-    assert got == {r["id"]: r["comp"] for r in connected_components(ed).collect()}
-
-    ids = spark.createDataFrame(
-        [("doc_a",), ("doc_b",), ("doc_c",), ("doc_x",), ("doc_y",), ("solo",)],
-        "doc_id string",
-    )
-    keep = {r["id"]: (r["cluster"], r["keep"]) for r in dedup_clusters(
-        ed, ids, "doc_id", "src", "dst", algorithm="two_phase"
-    ).collect()}
-    assert keep["solo"] == ("solo", True)
-    assert keep["doc_a"] == ("doc_a", True) and keep["doc_c"] == ("doc_a", False)
-
-
 def test_ensure_parallelism_post_shuffle_uses_exact_partitions(spark, tmp_path):
     """ensure_parallelism must not trust the file-size estimate for frames
     downstream of a shuffle — inputFiles() still reports the scan there, but
@@ -825,17 +840,14 @@ def test_ensure_parallelism_post_shuffle_uses_exact_partitions(spark, tmp_path):
 def test_reliable_checkpoint_mode(spark, tmp_path):
     """checkpoint='reliable' writes recovery state to the configured
     checkpoint dir and produces identical results to the local mode for
-    minhash pairs, semantic dedup, and both CC algorithms; without a
+    minhash pairs, semantic dedup, and connected components; without a
     checkpoint dir it fails fast with a clear error."""
     import os
 
     from pr2_transformation_spark.checkpointing import checkpoint_frame
     from pr2_transformation_spark.functions.dedup import near_dup_pairs_minhash
     from pr2_transformation_spark.functions.similarity import semantic_dedup
-    from pr2_transformation_spark.operators.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
+    from pr2_transformation_spark.operators.graph import connected_components
 
     sc = spark.sparkContext
     prior = sc.getCheckpointDir()
@@ -868,12 +880,6 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
             lambda ck: connected_components(
                 spark.createDataFrame(
                     [(1, 2), (2, 3), (7, 8)], "src long, dst long"
-                ),
-                checkpoint=ck,
-            ),
-            lambda ck: connected_components_two_phase(
-                spark.createDataFrame(
-                    [(i, i + 1) for i in range(30)], "src long, dst long"
                 ),
                 checkpoint=ck,
             ),

@@ -1,5 +1,7 @@
-"""From-scratch DEFLATE/zlib/gzip decoder (sources/inflate.py) vs the
-stdlib zlib across block types, levels, and container wrappers."""
+"""DEFLATE/zlib/gzip codec (sources/inflate.py): the decode names
+against stdlib-produced streams across block types, levels and
+container wrappers, the failure contract (every corrupt or truncated
+stream raises ValueError), and the byte-pinned in-repo encoders."""
 
 from __future__ import annotations
 
@@ -61,9 +63,73 @@ def test_corruption_trips():
         gunzip(bytes(g))
 
 
+def test_truncated_streams_raise_value_error():
+    """A cut stream is a decode failure, never partial output or an
+    IndexError: raw deflate, zlib and gzip all raise ValueError at
+    every cut point (inside the header, the blocks and the trailer)."""
+    raw = b"truncate me " * 400 + bytes(range(256))
+    c = zlib.compressobj(6, wbits=-15)
+    cases = [
+        (inflate, c.compress(raw) + c.flush()),
+        (zlib_decompress, zlib.compress(raw)),
+        (gunzip, gzip.compress(raw)),
+        (gunzip, gzip.compress(b"one") + gzip.compress(raw)),
+    ]
+    for decode, full in cases:
+        for cut in (1, 5, 11, len(full) // 2, len(full) - 5, len(full) - 1):
+            with pytest.raises(ValueError):
+                decode(full[:cut])
+
+
+def test_corrupt_zip_member_and_orc_chunk_raise_value_error(tmp_path):
+    """An invalid DEFLATE stream inside a container surfaces as the
+    codec's ValueError, not ``zlib.error``: first byte 0xFF makes the
+    first block's BTYPE the reserved value 3."""
+    import io
+    import struct
+    import zipfile
+
+    import pyarrow as pa
+    import pyarrow.orc as po
+
+    from pr2_transformation_spark.sources import orc
+    from pr2_transformation_spark.sources.zip_archive import (
+        zip_entries,
+        zip_extract,
+    )
+
+    bio = io.BytesIO()
+    with zipfile.ZipFile(bio, "w", zipfile.ZIP_DEFLATED) as z:
+        z.writestr("m.txt", b"zip member payload " * 200)
+    buf = bytearray(bio.getvalue())
+    entry = zip_entries(bytes(buf))[0]
+    nlen, elen = struct.unpack_from("<HH", buf, entry["offset"] + 26)
+    buf[entry["offset"] + 30 + nlen + elen] = 0xFF
+    with pytest.raises(ValueError, match="inflate"):
+        zip_extract(bytes(buf), entry)
+
+    path = str(tmp_path / "z.orc")
+    po.write_table(pa.table({"s": [f"orc row {i % 97} " * 3
+                                   for i in range(3000)]}),
+                   path, compression="ZLIB")
+    buf = bytearray(open(path, "rb").read())
+    footer, compression = orc._read_tail(bytes(buf))
+    assert compression == "zlib"
+    streams, _, _ = orc._stripe_layout(
+        bytes(buf), orc._pb_decode(footer[3][0]), compression)
+    # first compressed chunk (header bit 0 clear) of a stream the column
+    # reader decodes: DATA / LENGTH / DICTIONARY_DATA of column 1
+    spos = next(p for kind, col, p, n in streams
+                if col == 1 and kind in (1, 2, 3) and n > 3
+                and not buf[p] & 1)
+    buf[spos + 3] = 0xFF
+    with pytest.raises(ValueError, match="inflate"):
+        orc.read_orc_bytes(bytes(buf))
+
+
 def test_parquet_gzip_page_through_from_scratch_inflate(tmp_path):
     """A gzip parquet page body decodes identically via stdlib zlib and
-    the from-scratch gunzip — the conformance-twin claim."""
+    the repo's gunzip wrapper."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

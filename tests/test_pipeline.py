@@ -171,3 +171,35 @@ def test_pipeline_chunking_emits_window_rows(spark, corpus):
         stitched += r["text"].split()[20 - 15:]
     full = " ".join(stitched)
     assert full.endswith("unique tail number 5")
+
+
+def test_pipeline_near_dup_failure_leaves_no_spark_job(spark, corpus, monkeypatch):
+    """Fault injection: the near-dup stage raises while the overlapped
+    decontamination job is running.  The error propagates, and the
+    background job has been cancelled or awaited — no orphaned Spark job
+    is left running behind the failed call."""
+    import time
+
+    from pr2_transformation_spark.functions import dedup
+
+    sc = spark.sparkContext
+
+    def boom(*args, **kwargs):
+        # fire only once the background gram job is on the cluster
+        deadline = time.monotonic() + 60
+        while not sc.statusTracker().getActiveJobsIds():
+            assert time.monotonic() < deadline, "decontamination job never started"
+            time.sleep(0.005)
+        raise RuntimeError("injected near-dup failure")
+
+    monkeypatch.setattr(dedup, "near_dup_pairs_minhash", boom)
+    eval_docs = spark.createDataFrame(
+        [(0, "unique tail number 7 " * 2)], "doc_id long, text string"
+    )
+    with pytest.raises(RuntimeError, match="injected near-dup failure"):
+        prepare_training_corpus(
+            corpus, near_dup=True, eval_docs=eval_docs, checkpoint="local"
+        )
+    # job-end events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
