@@ -15,9 +15,10 @@ Data layer: encapsulated messages (continuation marker + metadata
 length + flatbuffer + 8-aligned body), the file footer's Block index,
 validity bitmaps (LSB-first), fixed-width primitive buffers, and
 32-bit-offset utf8/binary columns.  Body compression per the spec's
-BodyCompression header rides the IN-REPO codecs: LZ4 FRAME
+BodyCompression header rides the codec layer: LZ4 FRAME
 (`parquet_data.lz4_frame_decompress`) and Zstandard
-(`zstd.zstd_decompress`), each buffer carrying the spec's 8-byte
+(`zstd.zstd_decompress`), thin calls into the liblz4 and libzstd
+pyarrow bundles, each buffer carrying the spec's 8-byte
 uncompressed-length prefix with the -1 stored-as-is escape.
 
 Scope (honest seam): flat schemas of bool / int8-64 (signed+unsigned) /

@@ -407,10 +407,10 @@ def avro_write(rows: list, schema: dict, codec: str = "null",
                block_rows: int = 1000) -> bytes:
     """Serialize dict rows to a complete Avro Object Container File.
     ``codec``: the spec's full set — ``null``, ``deflate`` (raw zlib),
-    ``snappy`` (from-scratch block codec + big-endian CRC32),
-    ``bzip2`` / ``xz`` (stdlib), and ``zstandard`` (written by the
-    from-scratch predefined-FSE LZ encoder `zstd.zstd_compress`, read
-    by the full from-scratch RFC 8878 decoder — so libzstd-written
+    ``snappy`` (from-scratch block encoder + big-endian CRC32, read
+    through libsnappy), ``bzip2`` / ``xz`` (stdlib), and ``zstandard``
+    (written by the from-scratch predefined-FSE LZ encoder
+    `zstd.zstd_compress`, read through libzstd — so libzstd-written
     files ingest too).  The sync marker derives deterministically from the
     schema so identical inputs produce identical bytes."""
     if codec not in AVRO_CODECS:

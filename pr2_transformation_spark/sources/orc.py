@@ -9,9 +9,10 @@ Everything is decoded without an ORC library, on top of in-repo pieces:
   the same varint/tag machinery as `protowire.py`,
 * stream compression framing (3-byte chunk headers, isOriginal bit)
   over the repo's codec layer — raw deflate (`inflate.inflate`, stdlib
-  zlib underneath; a corrupt chunk raises ``ValueError``), Snappy
-  (`parquet_data.snappy_decompress`), LZ4 (`parquet_data.
-  lz4_block_decompress`) and Zstandard (`zstd.zstd_decompress`),
+  zlib underneath), Snappy (`parquet_data.snappy_decompress`), LZ4
+  (`parquet_data.lz4_block_decompress`) and Zstandard
+  (`zstd.zstd_decompress`) — the last three call the C libraries
+  pyarrow bundles; a corrupt chunk of any codec raises ``ValueError``,
 * Byte-RLE and Boolean-RLE (PRESENT bitmaps, tinyint/bool data),
 * Integer RLE v1 (run/delta/literal) and the full RLE v2 quartet —
   SHORT_REPEAT, DIRECT, PATCHED_BASE (base + patch-list high bits),

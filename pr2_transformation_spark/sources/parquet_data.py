@@ -1,15 +1,22 @@
 """Pure-python Parquet DATA-PLANE reader — pages, levels, codecs.
 
 `parquet_meta.py` (round 6) parsed the footer; this module completes
-the format from scratch: page headers (Thrift Compact), page-body
-compression codecs implemented from their public wire specs —
-**Snappy** (raw block format) and **LZ4** (raw block format) in pure
-python, GZIP via stdlib zlib — the RLE/bit-packed hybrid used for
-definition levels and dictionary indexes, PLAIN decoding for every
-flat physical type, and dictionary-page materialization.  Together
-the two modules read a Spark/pyarrow/DuckDB-written parquet file with
-zero parquet libraries, which makes the format's every layer — varint,
-level run, snappy tag, dictionary index — inspectable and graded.
+the format: page headers (Thrift Compact), page-body decompression,
+the RLE/bit-packed hybrid used for definition levels and dictionary
+indexes, PLAIN decoding for every flat physical type, and
+dictionary-page materialization.  Together the two modules read a
+Spark/pyarrow/DuckDB-written parquet file with no parquet library,
+which makes the format's every layer — varint, level run, page header,
+dictionary index — inspectable and graded.
+
+Codecs: each has ONE decoder, the C library pyarrow bundles — Snappy
+and LZ4 (raw blocks and frames) here, ZSTD in `zstd.py`, GZIP via
+stdlib zlib — behind `_native_decompress`, which turns the library's
+errors into ``ValueError``.  Raw blocks need their decoded length up
+front: Snappy reads it from its varint preamble, raw LZ4 sums it from
+the sequence tokens.  The encoders (`snappy_compress`,
+`lz4_block_compress`, `lz4_frame_compress`) are written here from the
+public specs and pinned against those libraries in tests.
 
 Graded q359 writes a snappy-compressed dictionary-encoded multi-row-
 group file and reads it back DISTRIBUTED (binaryFile scan -> Arrow
@@ -21,9 +28,9 @@ Scope (honest seam): flat schemas plus one-level LISTs (Dremel
 repetition-level assembly), data page v1 + v2, PLAIN /
 PLAIN_DICTIONARY / RLE_DICTIONARY / DELTA_BINARY_PACKED /
 BYTE_STREAM_SPLIT encodings, UNCOMPRESSED / SNAPPY /
-GZIP / LZ4_RAW / ZSTD codecs (ZSTD via the from-scratch RFC 8878
-decoder in `zstd.py`).  Anything else raises with the exact feature
-named — same contract as the codec seams in `functions/multimodal.py`.
+GZIP / LZ4_RAW / ZSTD codecs.  Anything else raises with the exact
+feature named — same contract as the codec seams in
+`functions/multimodal.py`.
 
 Specs: https://github.com/apache/parquet-format (PageHeader,
 Encodings.md, Compression.md), https://github.com/google/snappy
@@ -35,6 +42,7 @@ for the 100 TB lake north star.
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
 
@@ -58,62 +66,22 @@ _CODEC_NAMES = {0: "UNCOMPRESSED", 1: "SNAPPY", 2: "GZIP", 3: "LZO",
 # ---------------------------------------------------------------- codecs
 
 def snappy_decompress(buf: bytes) -> bytes:
-    """Raw Snappy block decode (google/snappy format_description.txt).
+    """Raw Snappy block decode (google/snappy format_description.txt)
+    with the libsnappy pyarrow bundles.
 
-    Preamble: varint uncompressed length.  Then tagged elements —
-    tag & 3 selects: 0 literal (length-1 in the high 6 bits, or
-    60..63 -> that many extra little-endian length bytes), 1 copy with
-    11-bit offset / 4..11 length, 2 copy with 16-bit offset,
-    3 copy with 32-bit offset.  Copies may overlap themselves
-    (offset < length replays recent output byte-by-byte).
+    The block opens with its decoded length as a varint; libsnappy
+    checks that the tagged elements produce exactly that many bytes and
+    that no copy reaches outside the window.
     """
-    pos, n = 0, 0
-    shift = 0
-    while True:  # uncompressed-length varint
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    out = bytearray()
-    while pos < len(buf):
-        tag = buf[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59
-                ln = int.from_bytes(buf[pos:pos + extra], "little")
-                pos += extra
-            ln += 1
-            out += buf[pos:pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset tail
-            ln = ((tag >> 2) & 0x07) + 4
-            off = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset outside window")
-        start = len(out) - off
-        if off >= ln:
-            out += out[start:start + ln]
-        else:  # overlapping copy: replay bytes as they materialize
-            for i in range(ln):
-                out.append(out[start + i])
-    if len(out) != n:
-        raise ValueError(f"snappy: expected {n} bytes, produced {len(out)}")
-    return bytes(out)
+    try:
+        n, _ = _uvarint(buf, 0)
+    except IndexError:
+        raise ValueError("snappy: truncated length preamble") from None
+    # a 3-byte copy element emits at most 64 bytes: a larger claim is
+    # corrupt, and would otherwise be allocated before libsnappy says so
+    if n > 22 * len(buf):
+        raise ValueError(f"snappy: length preamble {n} exceeds the block")
+    return _native_decompress("snappy", "snappy", buf, n)
 
 
 def snappy_compress(raw: bytes) -> bytes:
@@ -188,18 +156,18 @@ def snappy_compress(raw: bytes) -> bytes:
 
 
 def lz4_block_decompress(buf: bytes, expected: int | None = None) -> bytes:
-    """Raw LZ4 block decode (lz4 block-format spec; parquet LZ4_RAW).
+    """Raw LZ4 block decode (lz4 block-format spec; parquet LZ4_RAW, ORC
+    LZ4) with the liblz4 pyarrow bundles.
 
-    Sequences of: token byte (high nibble literal length, low nibble
-    match length - 4; nibble 15 extends with 255-valued continuation
-    bytes), literals, 2-byte little-endian match offset, match copy
-    (overlap-safe).  The final sequence has no match part.
+    A raw block does not store its decoded length, and pyarrow returns
+    as many bytes as it is asked for, so the length is summed from the
+    sequence tokens first (:func:`_lz4_block_size`); liblz4 then checks
+    every match offset against the window.
     """
-    out = bytearray()
-    _lz4_decode_into(buf, out)
-    if expected is not None and len(out) != expected:
-        raise ValueError(f"lz4: expected {expected} bytes, got {len(out)}")
-    return bytes(out)
+    n = _lz4_block_size(buf)
+    if expected is not None and n != expected:
+        raise ValueError(f"lz4: expected {expected} bytes, got {n}")
+    return _native_decompress("lz4", "lz4_raw", buf, n)
 
 
 def lz4_block_compress(raw: bytes) -> bytes:
@@ -268,46 +236,66 @@ def lz4_block_compress(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _lz4_decode_into(buf: bytes, out: bytearray) -> None:
-    """Decode one raw block APPENDING to ``out`` — matches may reach
-    into bytes already present (the LZ4-frame linked-blocks mode, where
-    each block's window includes its predecessors)."""
-    pos = 0
-    end = len(buf)
-    while pos < end:
+def _lz4_block_size(buf: bytes) -> int:
+    """Decoded length of a raw LZ4 block: the sum of every sequence's
+    literal length and match length (token nibbles plus 255-valued
+    extension bytes), read without copying a byte.  The last sequence
+    is literals only."""
+    pos, n, end = 0, 0, len(buf)
+    while True:
+        if pos >= end:
+            raise ValueError("lz4: truncated block")
         token = buf[pos]
         pos += 1
         ln = token >> 4
         if ln == 15:
-            while True:
-                b = buf[pos]
-                pos += 1
-                ln += b
-                if b != 255:
-                    break
-        out += buf[pos:pos + ln]
+            ln, pos = _lz4_length(buf, pos, ln)
         pos += ln
-        if pos >= end:  # last sequence: literals only
-            break
-        off = int.from_bytes(buf[pos:pos + 2], "little")
-        pos += 2
-        if off == 0 or off > len(out):
-            raise ValueError("lz4: match offset outside window")
-        mlen = token & 0x0F
-        if mlen == 15:
-            while True:
-                b = buf[pos]
-                pos += 1
-                mlen += b
-                if b != 255:
-                    break
-        mlen += 4
-        start = len(out) - off
-        if off >= mlen:
-            out += out[start:start + mlen]
-        else:
-            for i in range(mlen):
-                out.append(out[start + i])
+        n += ln
+        if pos >= end:
+            if pos > end:
+                raise ValueError("lz4: truncated block")
+            return n
+        pos += 2  # match offset
+        ml = token & 0x0F
+        if ml == 15:
+            ml, pos = _lz4_length(buf, pos, ml)
+        n += ml + 4
+
+
+def _lz4_length(buf: bytes, pos: int, ln: int) -> tuple[int, int]:
+    """A token nibble of 15 continues in bytes until one is not 255."""
+    while True:
+        if pos >= len(buf):
+            raise ValueError("lz4: truncated block")
+        b = buf[pos]
+        pos += 1
+        ln += b
+        if b != 255:
+            return ln, pos
+
+
+def _native_decompress(name: str, codec: str, buf: bytes,
+                       size: int | None = None) -> bytes:
+    """Decode ``buf`` with the C library pyarrow bundles for ``codec``.
+
+    Framed formats (``zstd``, ``lz4`` frames) carry their own sizes and
+    checksums and are streamed (``size=None``); raw blocks (``snappy``,
+    ``lz4_raw``) decode into exactly ``size`` bytes.  pyarrow reports
+    corrupt input as ``OSError``; the readers above this layer (ORC,
+    Avro, Arrow IPC, ZIP, the page reader) expect ``ValueError``.
+    """
+    import pyarrow as pa
+
+    try:
+        if size is None:
+            return pa.CompressedInputStream(pa.BufferReader(buf), codec).read()
+        return pa.Codec(codec).decompress(buf, size, asbytes=True)
+    except OSError as exc:
+        # liblz4 names its errors in camelCase (ERROR_headerChecksum_invalid)
+        msg = re.sub(r"([a-z])([A-Z])",
+                     lambda m: f"{m[1]} {m[2].lower()}", str(exc))
+        raise ValueError(f"{name}: {msg}") from exc
 
 
 def _decompress(body: bytes, codec: int, uncompressed_size: int) -> bytes:
@@ -1006,65 +994,15 @@ def lz4_frame_compress(raw: bytes, block_max: int = 4 << 20) -> bytes:
 
 def lz4_frame_decompress(buf: bytes, expected: int | None = None) -> bytes:
     """LZ4 FRAME decode (lz4_Frame_format.md) — the container around the
-    raw blocks :func:`lz4_block_decompress` handles: magic 0x184D2204,
-    FLG/BD descriptor (version, block-independence, block/content
-    checksums, content size) with its xxh32-verified header checksum,
-    data blocks whose high size bit marks stored-uncompressed payloads,
-    optional per-block xxh32, and the optional content xxh32 — all
-    verified via the from-scratch `functions/xxhash.py`."""
-    from ..functions.xxhash import xxh32
-
+    raw blocks :func:`lz4_block_decompress` handles — with the liblz4
+    pyarrow bundles, which verifies the version, the xxh32 header
+    checksum, optional per-block and content xxh32 checksums and the
+    content size, and decodes linked blocks against a shared window.
+    Concatenated frames decode one after another; trailing bytes that
+    are not a frame raise ``ValueError``."""
     if int.from_bytes(buf[0:4], "little") != 0x184D2204:
         raise ValueError("lz4 frame: bad magic")
-    flg = buf[4]
-    version = flg >> 6
-    if version != 1:
-        raise ValueError(f"lz4 frame: unsupported version {version}")
-    b_indep = (flg >> 5) & 1
-    b_checksum = (flg >> 4) & 1
-    c_size_flag = (flg >> 3) & 1
-    c_checksum = (flg >> 2) & 1
-    dict_id = flg & 1
-    pos = 6  # FLG + BD
-    content_size = None
-    if c_size_flag:
-        content_size = int.from_bytes(buf[pos:pos + 8], "little")
-        pos += 8
-    if dict_id:
-        pos += 4
-    hc = buf[pos]
-    pos += 1
-    # header checksum: (xxh32(descriptor) >> 8) & 0xFF
-    if ((xxh32(buf[4:pos - 1]) >> 8) & 0xFF) != hc:
-        raise ValueError("lz4 frame: header checksum mismatch")
-    out = bytearray()
-    while True:
-        bsize = int.from_bytes(buf[pos:pos + 4], "little")
-        pos += 4
-        if bsize == 0:  # EndMark
-            break
-        stored = bsize >> 31
-        bsize &= 0x7FFFFFFF
-        block = buf[pos:pos + bsize]
-        pos += bsize
-        if b_checksum:
-            bc = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4
-            if xxh32(block) != bc:
-                raise ValueError("lz4 frame: block checksum mismatch")
-        if stored:
-            out += block
-        elif b_indep:
-            out += lz4_block_decompress(block)
-        else:  # linked blocks share the frame window
-            _lz4_decode_into(block, out)
-    if c_checksum:
-        cc = int.from_bytes(buf[pos:pos + 4], "little")
-        pos += 4
-        if xxh32(bytes(out)) != cc:
-            raise ValueError("lz4 frame: content checksum mismatch")
-    if content_size is not None and len(out) != content_size:
-        raise ValueError("lz4 frame: content size mismatch")
+    out = _native_decompress("lz4 frame", "lz4", buf)
     if expected is not None and len(out) != expected:
         raise ValueError(f"lz4 frame: expected {expected}, got {len(out)}")
-    return bytes(out)
+    return out

@@ -1,153 +1,35 @@
-"""Pure-python Zstandard DECODER — RFC 8878 from scratch.
+"""Zstandard for the format layer: libzstd decode, in-repo encoders.
 
-Completes the parquet data plane's codec matrix: UNCOMPRESSED, SNAPPY,
-GZIP and LZ4 (parquet_data.py) were joined by the one modern codec the
-from-scratch reader still raised on.  Everything here is implemented
-from the public spec (RFC 8878 / zstd format documentation): frame
-headers, raw/RLE/compressed blocks, the FSE (tANS) entropy stage —
-normalized-count parsing with the variable-bit remainder trick, table
-spread, state machines — canonical Huffman literals (direct and
-FSE-compressed weights, 1- and 4-stream variants), the three
-interleaved sequence state machines (literal length / offset / match
-length) over a BACKWARD bitstream, repeat-offset history, and sequence
-execution against the sliding window.
+`zstd_decompress` decodes with the libzstd pyarrow bundles, the one
+decoder the parquet, ORC, Avro and Arrow IPC readers share.  libzstd
+skips skippable frames and verifies frame content sizes and XXH64
+content checksums; this module keeps the 4-byte magic check and the
+caller's ``expected`` size, and any corrupt or cut frame raises
+``ValueError``.
 
-Scope (honest seam): single-segment and windowed frames; dictionaries
-absent (parquet/avro never use them).  Content checksums ARE verified
-when present (low 32 bits of XXH64(payload, 0) via the from-scratch
-`functions/xxhash.py`); skippable frames are handled.  The write side
-(`zstd_compress_raw` stored blocks; `zstd_compress` a real
-predefined-FSE LZ encoder) emits frames any decoder
-accepts.
-
-Test strategy mirrors the other codecs: conformance against pyarrow's
-bundled libzstd across content shapes and levels (tests drive both
-compressors), plus parquet files written with compression='zstd' read
-end-to-end by the from-scratch page reader.
+The write side is written from the public spec (RFC 8878 / zstd format
+documentation): `zstd_compress_raw` emits stored blocks and
+`zstd_compress` is a real LZ encoder — sequences entropy-coded with the
+predefined FSE (tANS) tables over the spec's backward bitstream,
+literals as RLE, raw or canonical Huffman (direct or FSE-compressed
+weights), and an XXH64 content checksum via the from-scratch
+`functions/xxhash.py`.  Both emit frames any decoder accepts; tests
+decode every frame with pyarrow's libzstd.
 """
 
 from __future__ import annotations
 
+from .parquet_data import _native_decompress
+
 ZSTD_MAGIC = 0xFD2FB528
 SKIPPABLE_LO = 0x184D2A50
 
-# ---------------------------------------------------------- bit readers
-
-
-class _BackBits:
-    """Backward bitstream (FSE/Huffman/sequences): bits are written
-    little-endian and read from the LAST byte toward the first; the
-    final byte carries a 1-bit end marker above the payload bits."""
-
-    __slots__ = ("acc", "nbits")
-
-    def __init__(self, buf: bytes):
-        if not buf:
-            raise ValueError("zstd: empty backward bitstream")
-        acc = int.from_bytes(buf, "little")
-        top = buf[-1]
-        if top == 0:
-            raise ValueError("zstd: backward bitstream missing end marker")
-        nbits = 8 * len(buf) - (8 - top.bit_length() + 1)
-        self.acc = acc
-        self.nbits = nbits  # number of valid payload bits below the marker
-
-    def read(self, n: int) -> int:
-        """Read ``n`` bits from the current top (MSB side); bits past the
-        stream start read as zero and drive ``nbits`` negative — the
-        exhaustion signal the two-state FSE weight loop terminates on
-        (mirrors the reference decoder's negative bit offset)."""
-        if n == 0:
-            return 0
-        avail = self.nbits if self.nbits > 0 else 0
-        take = n if n < avail else avail
-        val = ((self.acc >> (self.nbits - take)) & ((1 << take) - 1)
-               if take > 0 else 0)
-        self.nbits -= n
-        return val << (n - take)
-
-    def empty(self) -> bool:
-        return self.nbits <= 0
-
-
-class _FwdBits:
-    """Forward little-endian bitstream (FSE table descriptions)."""
-
-    __slots__ = ("buf", "pos", "bitpos")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
-        self.bitpos = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        got = 0
-        while got < n:
-            byte = self.buf[self.pos + (self.bitpos + got) // 8]
-            bit = (byte >> ((self.bitpos + got) % 8)) & 1
-            out |= bit << got
-            got += 1
-        self.bitpos += n
-        return out
-
-    def byte_align_consumed(self) -> int:
-        """Bytes consumed, rounding the bit cursor up."""
-        return (self.bitpos + 7) // 8
-
-
-# ------------------------------------------------------------------ FSE
-
-
-def fse_read_ncount(buf: bytes, pos: int, max_symbol: int):
-    """Parse an FSE table description (RFC 8878 4.1.1 / FSE_readNCount).
-    Returns (accuracy_log, normalized counts list, bytes consumed)."""
-    br = _FwdBits(buf, pos)
-    accuracy_log = br.read(4) + 5
-    if accuracy_log > 9:
-        raise ValueError(f"zstd: FSE accuracy_log {accuracy_log} > 9")
-    table_size = 1 << accuracy_log
-    remaining = table_size + 1
-    threshold = table_size
-    nb_bits = accuracy_log + 1
-    norm: list[int] = []
-    previous0 = False
-    while remaining > 1 and len(norm) <= max_symbol:
-        if previous0:
-            # runs of zero-probability symbols, 2-bit repeat codes
-            while True:
-                rep = br.read(2)
-                norm.extend([0] * rep)
-                if rep != 3:
-                    break
-            previous0 = False
-            continue
-        maxv = (2 * threshold - 1) - remaining
-        val = br.read(nb_bits - 1)
-        if val < maxv:
-            # small value: nb_bits - 1 bits suffice
-            count = val
-        else:
-            extra = br.read(1)
-            val |= extra << (nb_bits - 1)
-            if val >= threshold:
-                val -= maxv
-            count = val
-        count -= 1  # -1 denotes "less than one" probability
-        remaining -= -count if count < 0 else count
-        norm.append(count)
-        if count == 0:
-            previous0 = True
-        while remaining < threshold:
-            nb_bits -= 1
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd: corrupt FSE normalized counts")
-    return accuracy_log, norm, br.byte_align_consumed()
+# ------------------------------------------------------------ FSE tables
 
 
 def fse_build_table(norm: list[int], accuracy_log: int):
-    """Build the FSE decode table: per state (symbol, nb_bits, baseline).
+    """Build the FSE decode table: per state (symbol, nb_bits, baseline);
+    the encoders derive their state transitions from it.
     Spread per the spec: -1 symbols take one cell each at the high end;
     the rest scatter with step (ts>>1)+(ts>>3)+3 skipping the high cells."""
     table_size = 1 << accuracy_log
@@ -183,122 +65,6 @@ def fse_build_table(norm: list[int], accuracy_log: int):
     return table
 
 
-class _FseState:
-    __slots__ = ("table", "log", "state")
-
-    def __init__(self, table, log, bits: _BackBits):
-        self.table = table
-        self.log = log
-        self.state = bits.read(log)
-
-    def symbol(self) -> int:
-        return self.table[self.state][0]
-
-    def update(self, bits: _BackBits) -> None:
-        _, nb, baseline = self.table[self.state]
-        self.state = baseline + bits.read(nb)
-
-
-# -------------------------------------------------------------- Huffman
-
-
-def _huff_weights(buf: bytes, pos: int):
-    """Huffman weights: direct 4-bit (header >= 128) or FSE-compressed
-    (two alternating states over a backward stream).  Returns
-    (weights list incl. the implied last one, bytes consumed)."""
-    header = buf[pos]
-    pos += 1
-    if header >= 128:
-        n = header - 127
-        raw = buf[pos:pos + (n + 1) // 2]
-        weights = []
-        for i in range(n):
-            b = raw[i // 2]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0x0F))
-        consumed = 1 + (n + 1) // 2
-    else:
-        comp = buf[pos:pos + header]
-        log, norm, used = fse_read_ncount(comp, 0, 255)
-        table = fse_build_table(norm, log)
-        bits = _BackBits(comp[used:])
-        s1 = _FseState(table, log, bits)
-        s2 = _FseState(table, log, bits)
-        # two interleaved states; after the update that exhausts the
-        # stream, the OTHER state contributes one final symbol
-        weights = []
-        while True:
-            weights.append(s1.symbol())
-            s1.update(bits)
-            if bits.nbits < 0:  # strictly overdrawn — exact-end keeps going
-                weights.append(s2.symbol())
-                break
-            weights.append(s2.symbol())
-            s2.update(bits)
-            if bits.nbits < 0:
-                weights.append(s1.symbol())
-                break
-        consumed = 1 + header
-    # implied last weight: total must complete a power of two
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd: empty huffman weights")
-    # smallest power of two STRICTLY above total; the gap must itself be
-    # a power of two and becomes the implied last weight
-    left = (1 << total.bit_length()) - total
-    last_w = left.bit_length()
-    if (1 << (last_w - 1)) != left:
-        raise ValueError("zstd: huffman weights do not sum to a power of 2")
-    weights.append(last_w)
-    return weights, consumed
-
-
-class _HuffTable:
-    """Canonical Huffman decode table (max 11 bits, weight order)."""
-
-    __slots__ = ("nbits", "lookup", "max_bits")
-
-    def __init__(self, weights: list[int]):
-        total = sum((1 << (w - 1)) for w in weights if w > 0)
-        max_bits = total.bit_length() - 1
-        if (1 << max_bits) != total:
-            raise ValueError("zstd: huffman weight total not a power of 2")
-        self.max_bits = max_bits
-        # number of bits per symbol: max_bits + 1 - weight (weight>0)
-        entries = []
-        for sym, w in enumerate(weights):
-            if w > 0:
-                entries.append((w, sym))
-        # canonical order: ascending weight, then symbol — low weights
-        # (long codes) first, starting at code 0
-        entries.sort()
-        self.lookup = [None] * (1 << max_bits)
-        code = 0
-        for w, sym in entries:
-            nb = max_bits + 1 - w
-            span = 1 << (max_bits - nb)
-            base = code
-            for i in range(span):
-                self.lookup[base + i] = (sym, nb)
-            code += span
-        if code != (1 << max_bits):
-            raise ValueError("zstd: huffman table does not fill")
-
-    def decode_stream(self, bits: _BackBits, out: bytearray,
-                      n_expected: int | None = None) -> None:
-        produced = 0
-        while bits.nbits > 0:
-            idx = bits.read(self.max_bits)
-            sym, nb = self.lookup[idx]
-            # give back the unused low bits
-            bits.nbits += self.max_bits - nb
-            out.append(sym)
-            produced += 1
-            if n_expected is not None and produced == n_expected:
-                return
-        if n_expected is not None and produced != n_expected:
-            raise ValueError("zstd: huffman stream ended early")
-
-
 # ------------------------------------------------------------ sequences
 
 # literal-length codes: (baseline, extra bits)
@@ -324,276 +90,26 @@ _ML_DEFAULT = (6, [1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
 _OF_DEFAULT = (5, [1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
                    1, 1, 1, 1, 1, -1, -1, -1, -1, -1])
 
-_PREDEF = {
-    "ll": fse_build_table(_LL_DEFAULT[1], _LL_DEFAULT[0]),
-    "ml": fse_build_table(_ML_DEFAULT[1], _ML_DEFAULT[0]),
-    "of": fse_build_table(_OF_DEFAULT[1], _OF_DEFAULT[0]),
-}
 _PREDEF_LOG = {"ll": 6, "ml": 6, "of": 5}
-_MAX_SYMBOL = {"ll": 35, "ml": 52, "of": 31}
-_MAX_LOG = {"ll": 9, "ml": 9, "of": 8}
 
 
-def _seq_table(kind: str, mode: int, buf: bytes, pos: int, repeat):
-    """Resolve one sequence-section table per its 2-bit mode.
-    Returns (table, log, new_pos, repeat_entry)."""
-    if mode == 0:  # predefined
-        return _PREDEF[kind], _PREDEF_LOG[kind], pos, None
-    if mode == 1:  # RLE: one byte symbol, log 0
-        sym = buf[pos]
-        return [(sym, 0, 0)], 0, pos + 1, None
-    if mode == 2:  # FSE-compressed description
-        log, norm, used = fse_read_ncount(buf, pos, _MAX_SYMBOL[kind])
-        if log > _MAX_LOG[kind]:
-            raise ValueError(f"zstd: {kind} accuracy log {log} too large")
-        return fse_build_table(norm, log), log, pos + used, None
-    # mode == 3: repeat previous table
-    if repeat is None:
-        raise ValueError(f"zstd: {kind} repeat mode without previous table")
-    return repeat[0], repeat[1], pos, None
-
-
-# -------------------------------------------------------------- decoder
-
-
-class _FrameCtx:
-    __slots__ = ("huff", "ll", "ml", "of", "rep")
-
-    def __init__(self):
-        self.huff: _HuffTable | None = None
-        self.ll = self.ml = self.of = None  # (table, log) repeats
-        self.rep = [1, 4, 8]  # repeat offsets
-
-
-def _decode_literals(block: bytes, pos: int, ctx: _FrameCtx):
-    """Literals section. Returns (literals bytes, new pos)."""
-    b0 = block[pos]
-    lit_type = b0 & 3
-    size_format = (b0 >> 2) & 3
-    if lit_type in (0, 1):  # raw / RLE
-        if size_format in (0, 2):  # 00 or 10: 5-bit size
-            size = b0 >> 3
-            pos += 1
-        elif size_format == 1:  # 01: 12-bit
-            size = (b0 >> 4) | (block[pos + 1] << 4)
-            pos += 2
-        else:  # 11: 20-bit
-            size = (b0 >> 4) | (block[pos + 1] << 4) | (block[pos + 2] << 12)
-            pos += 3
-        if lit_type == 0:
-            lits = block[pos:pos + size]
-            pos += size
-        else:
-            lits = block[pos:pos + 1] * size
-            pos += 1
-        return bytes(lits), pos
-    # compressed (2) or treeless (3)
-    if size_format == 0:  # 1 stream, 10-bit sizes
-        h = int.from_bytes(block[pos:pos + 3], "little")
-        regen = (h >> 4) & 0x3FF
-        comp = (h >> 14) & 0x3FF
-        pos += 3
-        streams = 1
-    elif size_format == 1:  # 4 streams, 10-bit sizes
-        h = int.from_bytes(block[pos:pos + 3], "little")
-        regen = (h >> 4) & 0x3FF
-        comp = (h >> 14) & 0x3FF
-        pos += 3
-        streams = 4
-    elif size_format == 2:  # 4 streams, 14-bit sizes
-        h = int.from_bytes(block[pos:pos + 4], "little")
-        regen = (h >> 4) & 0x3FFF
-        comp = (h >> 18) & 0x3FFF
-        pos += 4
-        streams = 4
-    else:  # 4 streams, 18-bit sizes
-        h = int.from_bytes(block[pos:pos + 5], "little")
-        regen = (h >> 4) & 0x3FFFF
-        comp = (h >> 22) & 0x3FFFF
-        pos += 5
-        streams = 4
-    section = block[pos:pos + comp]
-    pos += comp
-    spos = 0
-    if lit_type == 2:  # new huffman table
-        weights, used = _huff_weights(section, 0)
-        ctx.huff = _HuffTable(weights)
-        spos = used
-    if ctx.huff is None:
-        raise ValueError("zstd: treeless literals without a previous table")
-    out = bytearray()
-    body = section[spos:]
-    if streams == 1:
-        ctx.huff.decode_stream(_BackBits(body), out, regen)
-    else:
-        j1 = int.from_bytes(body[0:2], "little")
-        j2 = int.from_bytes(body[2:4], "little")
-        j3 = int.from_bytes(body[4:6], "little")
-        cuts = [6, 6 + j1, 6 + j1 + j2, 6 + j1 + j2 + j3, len(body)]
-        per = (regen + 3) // 4
-        sizes = [per, per, per, regen - 3 * per]
-        for i in range(4):
-            ctx.huff.decode_stream(
-                _BackBits(body[cuts[i]:cuts[i + 1]]), out, sizes[i])
-    if len(out) != regen:
-        raise ValueError("zstd: literals regenerated size mismatch")
-    return bytes(out), pos
-
-
-def _decode_block(block: bytes, ctx: _FrameCtx, window: bytearray) -> None:
-    """Decode one compressed block into ``window``."""
-    lits, pos = _decode_literals(block, 0, ctx)
-    # sequence count
-    b0 = block[pos]
-    if b0 < 128:
-        nseq = b0
-        pos += 1
-    elif b0 < 255:
-        nseq = ((b0 - 128) << 8) + block[pos + 1]
-        pos += 2
-    else:
-        nseq = int.from_bytes(block[pos + 1:pos + 3], "little") + 0x7F00
-        pos += 3
-    if nseq == 0:
-        window.extend(lits)
-        return
-    modes = block[pos]
-    pos += 1
-    if modes & 3:
-        raise ValueError("zstd: reserved sequence mode bits set")
-    ll_tab, ll_log, pos, _ = _seq_table(
-        "ll", (modes >> 6) & 3, block, pos, ctx.ll)
-    of_tab, of_log, pos, _ = _seq_table(
-        "of", (modes >> 4) & 3, block, pos, ctx.of)
-    ml_tab, ml_log, pos, _ = _seq_table(
-        "ml", (modes >> 2) & 3, block, pos, ctx.ml)
-    ctx.ll, ctx.of, ctx.ml = (ll_tab, ll_log), (of_tab, of_log), (ml_tab, ml_log)
-
-    bits = _BackBits(block[pos:])
-    ll_state = _FseState(ll_tab, ll_log, bits)
-    of_state = _FseState(of_tab, of_log, bits)
-    ml_state = _FseState(ml_tab, ml_log, bits)
-
-    lit_pos = 0
-    rep = ctx.rep
-    for i in range(nseq):
-        of_code = of_state.symbol()
-        ml_code = ml_state.symbol()
-        ll_code = ll_state.symbol()
-        # extra bits: offset, then match, then literal
-        of_val = (1 << of_code) + bits.read(of_code)
-        ml_base, ml_bits = _ML_TABLE[ml_code]
-        ml = ml_base + bits.read(ml_bits)
-        ll_base, ll_bits = _LL_TABLE[ll_code]
-        ll = ll_base + bits.read(ll_bits)
-        # repeat-offset resolution
-        if of_val > 3:
-            offset = of_val - 3
-            rep[2] = rep[1]
-            rep[1] = rep[0]
-            rep[0] = offset
-        else:
-            idx = of_val - 1 + (1 if ll == 0 else 0)
-            if idx == 0:
-                offset = rep[0]
-            elif idx < 3:
-                offset = rep[idx]
-                rep[2] = rep[1] if idx == 2 else rep[2]
-                rep[1] = rep[0]
-                rep[0] = offset
-            else:  # idx == 3: repeat1 - 1
-                offset = rep[0] - 1
-                if offset == 0:
-                    raise ValueError("zstd: zero offset from repeat-1-minus-1")
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-        # execute
-        window.extend(lits[lit_pos:lit_pos + ll])
-        lit_pos += ll
-        start = len(window) - offset
-        if start < 0:
-            raise ValueError("zstd: match offset beyond window start")
-        if offset >= ml:
-            window.extend(window[start:start + ml])
-        else:
-            for k in range(ml):
-                window.append(window[start + k])
-        # state updates for the next sequence (skipped after the last)
-        if i + 1 < nseq:
-            ll_state.update(bits)
-            ml_state.update(bits)
-            of_state.update(bits)
-    window.extend(lits[lit_pos:])
+# --------------------------------------------------------------- decoder
 
 
 def zstd_decompress(buf: bytes, expected: int | None = None) -> bytes:
-    """Decode a complete zstd frame sequence (RFC 8878)."""
-    pos = 0
-    out = bytearray()
-    while pos < len(buf):
-        magic = int.from_bytes(buf[pos:pos + 4], "little")
-        pos += 4
-        if SKIPPABLE_LO <= magic <= SKIPPABLE_LO + 15:
-            size = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4 + size
-            continue
-        if magic != ZSTD_MAGIC:
-            raise ValueError(f"zstd: bad magic {magic:#x}")
-        fhd = buf[pos]
-        pos += 1
-        dict_id_flag = fhd & 3
-        checksum = (fhd >> 2) & 1
-        single_segment = (fhd >> 5) & 1
-        fcs_flag = (fhd >> 6) & 3
-        if not single_segment:
-            pos += 1  # window descriptor (we keep the whole output anyway)
-        pos += (0, 1, 2, 4)[dict_id_flag]
-        fcs_len = (1 if single_segment else 0, 2, 4, 8)[fcs_flag]
-        content_size = None
-        if fcs_len:
-            content_size = int.from_bytes(buf[pos:pos + fcs_len], "little")
-            if fcs_len == 2:
-                content_size += 256
-            pos += fcs_len
-        ctx = _FrameCtx()
-        frame_start = len(out)
-        while True:
-            header = int.from_bytes(buf[pos:pos + 3], "little")
-            pos += 3
-            last = header & 1
-            btype = (header >> 1) & 3
-            bsize = header >> 3
-            if btype == 0:  # raw
-                out.extend(buf[pos:pos + bsize])
-                pos += bsize
-            elif btype == 1:  # RLE
-                out.extend(buf[pos:pos + 1] * bsize)
-                pos += 1
-            elif btype == 2:
-                _decode_block(buf[pos:pos + bsize], ctx, out)
-                pos += bsize
-            else:
-                raise ValueError("zstd: reserved block type")
-            if last:
-                break
-        if checksum:
-            # content checksum: low 32 bits of XXH64(decoded, seed 0)
-            from ..functions.xxhash import xxh64
-            stored = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4
-            got = xxh64(bytes(out[frame_start:])) & 0xFFFFFFFF
-            if got != stored:
-                raise ValueError(
-                    f"zstd: content checksum mismatch "
-                    f"({got:#010x} != {stored:#010x})")
-        if content_size is not None and len(out) - frame_start != content_size:
-            raise ValueError(
-                f"zstd: frame content size mismatch "
-                f"({len(out) - frame_start} != {content_size})")
+    """Decode a complete zstd frame sequence (RFC 8878) with libzstd.
+
+    Frames and skippable frames may follow one another; a truncated
+    stream, a corrupt block, a content-size or content-checksum
+    mismatch, or an output of other than ``expected`` bytes raises
+    ``ValueError``."""
+    magic = int.from_bytes(buf[:4], "little")
+    if magic != ZSTD_MAGIC and not SKIPPABLE_LO <= magic <= SKIPPABLE_LO + 15:
+        raise ValueError(f"zstd: bad magic {magic:#x}")
+    out = _native_decompress("zstd", "zstd", buf)
     if expected is not None and len(out) != expected:
         raise ValueError(f"zstd: expected {expected} bytes, got {len(out)}")
-    return bytes(out)
+    return out
 
 
 def zstd_compress_raw(raw: bytes) -> bytes:
@@ -633,18 +149,16 @@ def zstd_compress_raw(raw: bytes) -> bytes:
 #
 # Real COMPRESSING encoder (round 7): LZ77 sequences entropy-coded with
 # the PREDEFINED FSE distributions (RFC 8878 3.1.1.3.2.2) over the
-# spec's backward bitstream, raw-literals section.  Reuses the exact
-# spec tables the decoder above carries, but the conformance pin is
-# INDEPENDENT: tests decode every emitted frame with pyarrow's bundled
-# libzstd (and cross-check the pure-python decoder agrees), so an
-# encoder/decoder shared-typo cannot survive.  Emits single-segment
+# spec's backward bitstream, raw-literals section.  The conformance pin
+# is INDEPENDENT: tests decode every emitted frame with pyarrow's bundled
+# libzstd, the same library `zstd_decompress` calls.  Emits single-segment
 # frames with explicit content size and a verified XXH64 content
 # checksum; falls back per 128 KB block to RAW when sequences don't pay.
 
 
 class _BackWriter:
-    """Backward-bitstream writer: first-written field is read FIRST by
-    `_BackBits` (it sits highest below the 1-bit end marker)."""
+    """Backward-bitstream writer: a decoder reads the first-written
+    field FIRST (it sits highest below the 1-bit end marker)."""
 
     __slots__ = ("acc", "n")
 
@@ -702,7 +216,7 @@ def _encode_sequences(seqs: list) -> bytes:
     mode for all three machines.  States are chosen on a BACKWARD pass
     (each cell must transition into the already-fixed next state); the
     fields are then emitted in the decoder's READ order — `_BackWriter`
-    places first-written bits where `_BackBits` reads first, the
+    places first-written bits where a decoder reads first, the
     byte-level reversal being the backward stream's job."""
     n = len(seqs)
     codes = []
@@ -839,8 +353,8 @@ def zstd_compress(raw: bytes, checksum: bool = True) -> bytes:
     either predefined-FSE compressed or RAW (whichever is smaller).
     Deterministic bytes for a given input (match table keyed by window
     bytes, not salted hash()).  Conformance-pinned against libzstd via
-    pyarrow in tests/test_zstd.py; the pure-python decoder above and
-    the parquet/avro zstd paths consume it end-to-end."""
+    pyarrow in tests/test_zstd.py; the parquet, ORC, Avro and Arrow IPC
+    writers emit it."""
     out = bytearray(ZSTD_MAGIC.to_bytes(4, "little"))
     n = len(raw)
     cs_bit = (1 << 2) if checksum else 0
@@ -1068,9 +582,9 @@ def _fse_normalize(freqs: dict, max_sym: int, log: int) -> "list | None":
 
 
 def _fse_write_ncount(norm: list, log: int) -> bytes:
-    """Serialize an FSE table description (mirror of
-    `fse_read_ncount`): 4-bit accuracy, variable-bit counts with the
-    threshold trick, 2-bit zero-run repeats."""
+    """Serialize an FSE table description (RFC 8878 4.1.1): 4-bit
+    accuracy, variable-bit counts with the threshold trick, 2-bit
+    zero-run repeats."""
     bits = []  # (value, nbits) forward little-endian
 
     def put(v, n):

@@ -1,8 +1,9 @@
 """Parquet DATA-plane reader (sources/parquet_data.py) vs pyarrow's
 independent C++ implementation: page decode across the full
-codec x page-version x encoding matrix, the from-scratch Snappy and
-LZ4 block codecs against pyarrow's compressors, RLE/bit-packed hybrid
-semantics, and the distributed Spark ingestion path."""
+codec x page-version x encoding matrix, the Snappy and LZ4 codecs
+(in-repo encoders, library decoders) against pyarrow's compressors,
+malformed input rejected as ValueError by every decoder, RLE/bit-packed
+hybrid semantics, and the distributed Spark ingestion path."""
 
 from __future__ import annotations
 
@@ -334,3 +335,66 @@ def test_lz4_frame_compress_conformance_against_liblz4():
     assert lz4_frame_decompress(frame) == big
     assert codec.decompress(frame, decompressed_size=len(big)
                             ).to_pybytes() == big
+
+
+_MALFORMED = [
+    (codec, case)
+    for codec in ("zstd", "snappy", "lz4_block", "lz4_frame")
+    for case in ("empty", "cut_1", "cut_5", "cut_half", "cut_9", "cut_last",
+                 "size_plus_1", "size_minus_1")
+] + [("zstd", "checksum"), ("lz4_frame", "checksum"),
+     ("lz4_frame", "header_checksum")]
+
+
+@pytest.mark.parametrize("codec,case", _MALFORMED,
+                         ids=[f"{c}-{k}" for c, k in _MALFORMED])
+def test_malformed_input_raises_value_error(codec, case):
+    """Every decoder rejects malformed input with ValueError — never
+    IndexError, OSError or silently short output: empty input, input
+    cut at several points, a flipped checksum byte, and a size off by
+    one (``expected`` for zstd/LZ4, the varint preamble for snappy,
+    whose signature carries no size)."""
+    from pr2_transformation_spark.sources.parquet_data import (
+        lz4_block_compress, lz4_frame_compress, lz4_frame_decompress,
+        snappy_compress)
+    from pr2_transformation_spark.sources.zstd import (
+        zstd_compress, zstd_decompress)
+
+    compress, decompress = {
+        "zstd": (zstd_compress, zstd_decompress),
+        "snappy": (snappy_compress, lambda b, n=None: snappy_decompress(b)),
+        "lz4_block": (lz4_block_compress, lz4_block_decompress),
+        "lz4_frame": (lz4_frame_compress, lz4_frame_decompress),
+    }[codec]
+    raw = b"".join(b"row %d: value-%d; " % (i, i % 7) for i in range(200))
+    comp = compress(raw)
+    assert decompress(comp, len(raw)) == raw
+    expected = None
+    if case == "empty":
+        bad = b""
+    elif case.startswith("cut_"):
+        cut = {"1": 1, "5": 5, "half": len(comp) // 2, "9": len(comp) - 9,
+               "last": len(comp) - 1}[case[4:]]
+        bad = comp[:cut]
+    elif case == "checksum":  # content checksum: the frame's last bytes
+        bad = comp[:-1] + bytes([comp[-1] ^ 0xFF])
+    elif case == "header_checksum":  # FLG, BD, 8-byte size, then HC
+        bad = comp[:14] + bytes([comp[14] ^ 0xFF]) + comp[15:]
+    else:
+        delta = 1 if case == "size_plus_1" else -1
+        if codec == "snappy":
+            preamble = len(_varint(len(raw)))
+            bad = _varint(len(raw) + delta) + comp[preamble:]
+        else:
+            bad, expected = comp, len(raw) + delta
+    with pytest.raises(ValueError):
+        decompress(bad, expected)
+
+
+def _varint(n):
+    out = bytearray()
+    while True:
+        b, n = n & 0x7F, n >> 7
+        out.append(b | (0x80 if n else 0))
+        if not n:
+            return bytes(out)

@@ -1,6 +1,7 @@
-"""From-scratch Zstandard decoder (sources/zstd.py) vs pyarrow's bundled
-libzstd: frame/block/FSE/Huffman/sequence conformance across content
-shapes, sizes and compression levels, plus the parquet integration."""
+"""Zstandard (sources/zstd.py): `zstd_decompress` over libzstd-written
+frames across content shapes, sizes and compression levels, skippable
+frames and integrity rejects, the parquet integration, and the in-repo
+compressor pinned against pyarrow's bundled libzstd."""
 
 from __future__ import annotations
 
