@@ -38,37 +38,6 @@ def norm(v):
     return str(v)
 
 
-def check_query_index(qs) -> list[str]:
-    """The generated QUERY INDEX at the top of __spark_entry__.py must
-    list exactly the queries() keys (scripts/gen_query_index.py rewrites
-    it); returns drift messages, empty when in sync."""
-    import re
-
-    entry_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "__spark_entry__.py")
-    src = open(entry_path).read()
-    m = re.search(r"# === QUERY INDEX.*?# === END QUERY INDEX ===", src, re.S)
-    if not m:
-        return ["QUERY INDEX block missing (run scripts/gen_query_index.py)"]
-    indexed = set(re.findall(r"^# (q\d+[a-z0-9_]*)\s", m.group(0), re.M))
-    msgs = []
-    if missing := set(qs) - indexed:
-        msgs.append(f"QUERY INDEX missing entries: {sorted(missing)[:5]}...")
-    if stale := indexed - set(qs):
-        msgs.append(f"QUERY INDEX has stale entries: {sorted(stale)[:5]}...")
-    # the header's declared count must equal len(queries()) — round-7
-    # VERDICT item 9: sweep prose said "397 queries" while the registry
-    # held 396; prose and registry may not drift
-    hdr = re.search(r"QUERY INDEX — (\d+) queries", m.group(0))
-    if hdr is None:
-        msgs.append("QUERY INDEX header lacks a query count")
-    elif int(hdr.group(1)) != len(qs):
-        msgs.append(
-            f"QUERY INDEX header declares {hdr.group(1)} queries but "
-            f"queries() registers {len(qs)} (run gen_query_index.py)")
-    return msgs
-
-
 def check_coverage_crosswalk(qs) -> list[str]:
     """Every queries() name must resolve to a COVERAGE.md citation, so
     the SURVEY §2 crosswalk can't silently rot as the surface grows.
@@ -122,8 +91,8 @@ def main():
         con.execute(f"SET TimeZone='{ambient_tz}'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    index_msgs = check_query_index(qs) + check_coverage_crosswalk(qs)
-    for msg in index_msgs:
+    coverage_msgs = check_coverage_crosswalk(qs)
+    for msg in coverage_msgs:
         print(f"FAIL  {msg}")
     unknown = only - set(qs)
     if unknown:
@@ -182,7 +151,7 @@ def main():
             continue
         print(f"OK    {name}: {len(spark_rows)} rows match")
 
-    failures.extend(index_msgs)
+    failures.extend(coverage_msgs)
     print(f"\n{'ALL OK' if not failures else 'FAILURES: ' + ', '.join(failures)}")
     spark.stop()
     return 1 if failures else 0

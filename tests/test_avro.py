@@ -3,6 +3,8 @@ corruption behavior, schema translation, and the distributed
 binaryFile -> mapInPandas read path."""
 
 import json
+import os
+import re
 
 import pytest
 
@@ -527,6 +529,19 @@ def test_logical_types_property_roundtrip():
         assert back == [row]
 
     run()
+
+
+def test_q418_scratch_holds_only_committed_shards(spark):
+    """q418's shard writers write a per-attempt temp file and rename it
+    into place, so once the query has run its scratch directory holds
+    only the committed ``part-NNNNN.avro`` shards the read unions."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.q418_avro_schema_resolution(spark, entrymod.DEFAULT_SF_DIR)
+    assert df.count() > 0
+    names = sorted(os.listdir(entrymod._Q418_SCRATCH))
+    assert names and all(
+        re.fullmatch(r"part-\d{5}\.avro", n) for n in names), names
 
 
 def test_schema_resolution_matrix():

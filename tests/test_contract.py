@@ -1,14 +1,19 @@
 """Driver-contract consistency: every oracle key names a real query, every
-query callable has the (spark, sf_dir) signature, and the bench list only
-references declared queries.  Guards against silent-skip typos — unknown
-names are ignored by comparison harnesses, so a typo looks like a pass."""
+query callable has the (spark, sf_dir) signature, every ``qNNN_`` function
+is registered, and the bench list only references declared queries.  Guards
+against silent-skip typos — unknown names are ignored by comparison
+harnesses, so a typo looks like a pass."""
 
 from __future__ import annotations
 
 import inspect
+import re
+
+import pytest
 
 import __spark_entry__ as entrymod
 import bench
+from scripts.check_oracle import check_coverage_crosswalk
 
 
 def test_oracles_subset_of_queries():
@@ -42,3 +47,33 @@ def test_rows_only_queries_are_the_documented_ones():
         "q64_approx_distinct",
         "q97_approx_quantiles",
     ], f"unexpected rows-only set: {rows_only}"
+
+
+def test_every_query_function_is_registered():
+    # a forgotten @query would silently drop the function from
+    # check_oracle, plan_lint and the bench
+    defined = {
+        name for name, obj in vars(entrymod).items()
+        if re.fullmatch(r"q\d+_\w+", name) and inspect.isfunction(obj)
+    }
+    assert defined == set(entrymod.queries())
+
+
+def test_query_registry_rejects_duplicate_and_malformed_names():
+    def q01_pricing_summary(spark, sf_dir):
+        raise AssertionError("never called")
+
+    def pricing(spark, sf_dir):
+        raise AssertionError("never called")
+
+    before = entrymod.queries()
+    with pytest.raises(ValueError, match="already registered"):
+        entrymod.query(oracle="SELECT 1")(q01_pricing_summary)
+    with pytest.raises(ValueError, match="does not match"):
+        entrymod.query()(pricing)
+    assert entrymod.queries() == before
+    assert entrymod.queries()["q01_pricing_summary"] is entrymod.q01_pricing_summary
+
+
+def test_every_query_has_a_coverage_row():
+    assert check_coverage_crosswalk(entrymod.queries()) == []
