@@ -442,113 +442,3 @@ class Catalog:
         os.rename(staged, path)
         self.spark.catalog.refreshByPath(path)
         return n_files
-
-    # ------------------------------------------------------ time travel
-
-    def write_versioned(self, df: DataFrame, fq_table: str) -> int:
-        """Snapshot-versioned write (Iceberg/Delta-style time travel on
-        plain parquet): each write lands in an immutable ``v=N``
-        directory and a tiny ``_VERSION`` pointer file names the current
-        one LAST — readers either see the old pointer or the new one,
-        never a half-written snapshot (pointer write is a rename).
-        Returns the new version number.
-
-        Old snapshots stay readable (:meth:`read_versioned` with
-        ``version=``) until :meth:`vacuum_versions` retires them — the
-        audit/reproducibility property the reference gets from archiving
-        every generated SQL query, applied to the data itself.
-        """
-        import os
-
-        root = self.path_for(fq_table)
-        if root is None:
-            raise ValueError("versioned writes need a path-backed catalog root")
-        current = self.latest_version(fq_table)
-        version = (current if current is not None else -1) + 1
-        snap = os.path.join(root, f"v={version}")
-        df.write.mode("errorifexists").parquet(snap)
-        tmp = os.path.join(root, "_VERSION.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(root, "_VERSION"))
-        return version
-
-    def latest_version(self, fq_table: str) -> Optional[int]:
-        import os
-
-        root = self.path_for(fq_table)
-        ptr = os.path.join(root, "_VERSION") if root else None
-        if not ptr or not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return int(fh.read().strip())
-
-    def read_versioned(
-        self, fq_table: str, version: Optional[int] = None
-    ) -> DataFrame:
-        """Read a snapshot: latest by default, any retained ``version=``
-        for time travel."""
-        import os
-
-        root = self.path_for(fq_table)
-        if version is None:
-            version = self.latest_version(fq_table)
-        if version is None:
-            raise ValueError(f"{fq_table} has no versioned snapshots")
-        snap = os.path.join(root, f"v={version}")
-        if not os.path.isdir(snap):
-            raise ValueError(f"{fq_table} version {version} not retained")
-        return self.spark.read.parquet(snap)
-
-    def snapshot_diff(
-        self, fq_table: str, from_version: int, to_version: int, keys: list[str]
-    ) -> DataFrame:
-        """Changelog between two snapshots: full-outer join on ``keys``
-        with a ``__change`` column (insert / delete / update) — CDC
-        derived from time travel, one key-partitioned join."""
-        from pyspark.sql import functions as F
-
-        old = self.read_versioned(fq_table, from_version)
-        new = self.read_versioned(fq_table, to_version)
-        o = old.select(
-            *[F.col(k) for k in keys],
-            F.struct(*[c for c in old.columns if c not in keys]).alias("__old"),
-        )
-        nw = new.select(
-            *[F.col(k) for k in keys],
-            F.struct(*[c for c in new.columns if c not in keys]).alias("__new"),
-        )
-        joined = o.join(nw, keys, "full_outer")
-        return joined.select(
-            *keys,
-            F.when(F.col("__old").isNull(), F.lit("insert"))
-            .when(F.col("__new").isNull(), F.lit("delete"))
-            .when(F.col("__old") != F.col("__new"), F.lit("update"))
-            .alias("__change"),
-            "__old",
-            "__new",
-        ).filter(F.col("__change").isNotNull())
-
-    def vacuum_versions(self, fq_table: str, keep_last: int = 2) -> list[int]:
-        """Retire all but the newest ``keep_last`` snapshots.  Never
-        removes the pointer's current version.  Returns removed ids."""
-        import os
-        import re
-        import shutil
-
-        root = self.path_for(fq_table)
-        latest = self.latest_version(fq_table)
-        if root is None or latest is None:
-            return []
-        versions = sorted(
-            int(m.group(1))
-            for d in os.listdir(root)
-            if (m := re.fullmatch(r"v=(\d+)", d))
-        )
-        keep = set(versions[-keep_last:]) | {latest}
-        removed = []
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(os.path.join(root, f"v={v}"))
-                removed.append(v)
-        return removed

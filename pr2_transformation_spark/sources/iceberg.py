@@ -69,6 +69,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .avro import avro_read, avro_write
+from .file_stats import (any_key_within, candidate_files, footer_stats,
+                         may_contain)
 
 MANIFEST_SCHEMA = {
     "type": "record",
@@ -316,20 +318,12 @@ def _transform_prunes(transform: str, part_value, op: str, val) -> bool:
     # comparing; if the coercion fails the types genuinely disagree and
     # we must NOT prune (false negatives lose rows silently).
     part_value = _coerce_like(part_value, tv)
-    if part_value is None:
+    if part_value is None or transform.startswith("bucket[") and op != "=":
         return False
-    if transform.startswith("bucket["):
-        return op == "=" and tv != part_value
-    try:
-        if op == "=":
-            return part_value != tv
-        if op in (">", ">="):
-            return part_value < tv
-        if op in ("<", "<="):
-            return part_value > tv
-    except TypeError:
-        return False  # incomparable after coercion: keep the file
-    return False
+    # the file's transformed values all equal part_value; a monotone
+    # transform keeps >= / <= but may merge values, so strict ops widen
+    op = {">": ">=", "<": "<="}.get(op, op)
+    return not may_contain(part_value, part_value, op, tv)
 
 
 def _coerce_like(stored, typed):
@@ -361,38 +355,45 @@ def _coerce_like(stored, typed):
     return None
 
 
-def _bounds_may_match(entry: dict, col: str, op: str, val) -> bool:
-    """False only when the manifest entry's lower/upper bounds PROVE no
-    row of the data file can satisfy ``col <op> val`` — the
-    no-false-negatives contract data skipping lives by (delta.py's
-    ``_stats_may_match`` twin, fed from manifest JSON bounds instead of
-    add.stats).  Missing bounds (pre-round-8 manifests, failed footer
-    probes, unknown ops) keep the file."""
+def _entry_bounds(entry: dict, col: str) -> tuple:
+    """(lo, hi, all_null) of ``col`` from a manifest entry's JSON
+    bounds; missing bounds (pre-round-8 manifests, failed footer
+    probes, delete files) give (None, None, False)."""
     lo_raw = entry.get("lower_bounds_json") or ""
     hi_raw = entry.get("upper_bounds_json") or ""
     if not lo_raw or not hi_raw:
-        return True
-    lo = json.loads(lo_raw).get(col)
-    hi = json.loads(hi_raw).get(col)
-    if lo is None or hi is None:
-        # a file whose every value is NULL can't match any comparison
-        nulls = json.loads(entry.get("null_counts_json") or "{}").get(col)
-        rc = entry.get("record_count") or 0
-        return not (nulls is not None and rc and nulls == rc)
-    try:
-        if op == "=":
-            return lo <= val <= hi
-        if op == "<":
-            return lo < val
-        if op == "<=":
-            return lo <= val
-        if op == ">":
-            return hi > val
-        if op == ">=":
-            return hi >= val
-    except TypeError:
-        return True  # incomparable literal type: keep the file
-    return True
+        return None, None, False
+    nulls = json.loads(entry.get("null_counts_json") or "{}").get(col)
+    rc = entry.get("record_count") or 0
+    return (json.loads(lo_raw).get(col), json.loads(hi_raw).get(col),
+            bool(nulls is not None and rc and nulls == rc))
+
+
+def _bounds_may_match(entry: dict, col: str, op: str, val) -> bool:
+    """False only when the manifest entry's lower/upper bounds PROVE no
+    row of the data file can satisfy ``col <op> val``
+    (:func:`file_stats.may_contain`)."""
+    lo, hi, all_null = _entry_bounds(entry, col)
+    return may_contain(lo, hi, op, val, all_null)
+
+
+def _sql_literal(v) -> str:
+    """A collected key as a typed Spark SQL literal.  Strings escape by
+    doubled single quotes (repr() only matches the SQL lexer for tame
+    strings); a timestamp is rebuilt from its epoch micros, because
+    ``collect()`` returns a naive datetime in the Python process's local
+    time, not the session time zone."""
+    import datetime
+
+    if isinstance(v, str):
+        return "'" + v.replace("'", "''") + "'"
+    if isinstance(v, datetime.datetime):
+        micros = (int(v.replace(microsecond=0).timestamp()) * 1_000_000
+                  + v.microsecond)
+        return f"timestamp_micros({micros})"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    return str(v)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -633,8 +634,6 @@ class IcebergTable:
         ts = int(now_ms if now_ms is not None else time.time() * 1000)
         read_version = self._current_version()
 
-        from .delta import _file_stats  # shared parquet-footer stats probe
-
         # hidden partitioning: a partitioned table's spec is fixed at
         # creation; appends must re-state it (or omit it to reuse), and
         # the spec recorded in metadata wins over a mismatched request.
@@ -715,18 +714,7 @@ class IcebergTable:
             dst = os.path.join(self.data_dir, name)
             os.rename(src_path, dst)
             staged_list.append((parts, dst, name))
-        # footer stats probes in a small thread pool (r10, guide §5):
-        # pyarrow's read_metadata releases the GIL, and a partitioned
-        # commit stages hundreds of files — serial driver probes were
-        # ~1 s of q403's write
-        from concurrent.futures import ThreadPoolExecutor
-
-        if len(staged_list) > 4:
-            with ThreadPoolExecutor(max_workers=16) as pool:
-                stats_list = list(pool.map(
-                    lambda t: _file_stats(t[1]), staged_list))
-        else:
-            stats_list = [_file_stats(dst) for _, dst, _ in staged_list]
+        stats_list = footer_stats([dst for _, dst, _ in staged_list])
         for (parts, dst, name), stats in zip(staged_list, stats_list):
             if stats is None:
                 count_missing = True
@@ -1403,29 +1391,10 @@ class IcebergTable:
             # the probe measured the intended behavior through its own
             # spy.  One schema generation == bounds keys ARE the
             # current names, which is the actual precondition.)
-            # bisect over the sorted key list — a file survives iff
-            # some key lies inside [lo, hi].
-            import bisect
-
             col, keys = prune_keys
             skeys = sorted(keys)
-
-            def _file_may_hold(e: dict) -> bool:
-                lo_raw = e.get("lower_bounds_json") or ""
-                hi_raw = e.get("upper_bounds_json") or ""
-                if not lo_raw or not hi_raw:
-                    return True
-                lo = json.loads(lo_raw).get(col)
-                hi = json.loads(hi_raw).get(col)
-                if lo is None or hi is None:
-                    return True
-                try:
-                    i = bisect.bisect_left(skeys, lo)
-                    return i < len(skeys) and skeys[i] <= hi
-                except TypeError:
-                    return True
-
-            pruned = [e for e in entries if _file_may_hold(e)]
+            pruned = [e for e in entries
+                      if any_key_within(skeys, *_entry_bounds(e, col)[:2])]
             # an all-pruned result would leave nothing to scan; keep
             # the unpruned set so the commit path (empty tombstone
             # parquet + snapshot) is byte-identical to the unhinted one
@@ -1750,61 +1719,27 @@ class IcebergTable:
                 f"{sorted(cur_cols)}, got {sorted(source.columns)}")
         # r11 (guide §6, VERDICT r10 item 2): the matched-key stats and
         # the insert/update joins only need target keys that SOME source
-        # key could equal, and a target key always lies inside its data
-        # file's manifest [lower, upper] bounds — so the keys projection
-        # scans only CANDIDATE files (those whose bounds admit at least
-        # one distinct source key), not the whole table.  The candidate
-        # test runs as one broadcast interval join of the distinct
-        # source keys against the (few, driver-collected) file bounds;
-        # files with missing bounds are always kept (no-false-negatives)
-        # and evolved tables (renamed bounds keys) skip pruning
-        # entirely.  Merge-on-read stays exact: read(paths_subset=...)
-        # applies the delete files as usual, and pruned-away files by
-        # construction hold no key equal to any source key.  This is
-        # what makes a bounded-key MERGE's stats job O(touched files)
-        # instead of O(table keys scan) at 100 TB — the delete scan got
-        # the same treatment in r10 (prune_keys below).
+        # key could equal, so the keys projection scans only the files
+        # file_stats.candidate_files keeps (None: every file).  Merge-
+        # on-read stays exact: read(paths_subset=...) applies the delete
+        # files as usual, and pruned-away files hold no key equal to any
+        # source key.  The delete scan got the same treatment in r10
+        # (prune_keys below).  Evolved tables (renamed bounds keys)
+        # skip pruning.
         src_keys = (
             source.groupBy(on).agg(F.count(F.lit(1)).alias("__c"))
             .persist()
         )
         tgt_keys = None
         try:
-            entries = self._data_file_entries()
-            bounds_rows, keep_always = [], []
-            # the interval-join probe is one extra job: below a few
-            # dozen files the full keys projection is the measured-
-            # cheaper path (q417 A/B, the delta twin's gate), above it
-            # the probe keeps the stats scan O(touched files)
-            if (len(meta.get("schemas", [])) <= 1
-                    and 32 < len(entries) <= 4096):
-                for i, e in enumerate(entries):
-                    lo_raw = e.get("lower_bounds_json") or ""
-                    hi_raw = e.get("upper_bounds_json") or ""
-                    lo = json.loads(lo_raw).get(on) if lo_raw else None
-                    hi = json.loads(hi_raw).get(on) if hi_raw else None
-                    if lo is None or hi is None:
-                        keep_always.append(e["file_path"])
-                    else:
-                        bounds_rows.append((e["file_path"], lo, hi))
-            if bounds_rows:
-                bdf = spark.createDataFrame(
-                    bounds_rows, ["__fp", "__lo", "__hi"])
-                hit = {
-                    r["__fp"]
-                    for r in src_keys.select(F.col(on).alias("__k"))
-                    .join(F.broadcast(bdf),
-                          (F.col("__k") >= F.col("__lo"))
-                          & (F.col("__k") <= F.col("__hi")))
-                    .select("__fp").distinct().collect()
-                }
-                tgt_keys = self.read(
-                    spark, paths_subset=hit | set(keep_always)
-                ).select(on).distinct().persist()
-            else:
-                # evolved table / oversized manifest list / no bounds:
-                # fall back to the full keys projection
-                tgt_keys = self.read(spark).select(on).distinct().persist()
+            hit = None
+            if len(meta.get("schemas", [])) <= 1:
+                hit = candidate_files(src_keys, on, {
+                    e["file_path"]: _entry_bounds(e, on)[:2]
+                    for e in self._data_file_entries()})
+            tgt_keys = (self.read(spark) if hit is None
+                        else self.read(spark, paths_subset=hit)
+                        ).select(on).distinct().persist()
             # ONE bounded collect yields the matched key list, each
             # matched key's source multiplicity AND the unmatched
             # source row count (r10 guide §1.2: previously three jobs —
@@ -1849,12 +1784,7 @@ class IcebergTable:
                     f"{on!r} first")
             delete_snap = -1
             if keys and when_matched != "ignore":
-                # escape for Spark SQL (doubled single-quotes), not
-                # repr(): ADVICE r09 — repr only coincides with the
-                # SQL lexer for tame strings
-                in_list = ", ".join(
-                    "'" + k.replace("'", "''") + "'"
-                    if isinstance(k, str) else str(k) for k in keys)
+                in_list = ", ".join(_sql_literal(k) for k in keys)
                 # prune_keys: the IN predicate can only match rows
                 # whose key is in the list, so delete_where skips data
                 # files whose manifest bounds exclude every key — the

@@ -48,6 +48,8 @@ from __future__ import annotations
 
 import struct
 
+from .file_stats import may_contain
+
 ORC_MAGIC = b"ORC"
 
 # postscript compression enum
@@ -702,15 +704,10 @@ def orc_stripe_statistics(buf: bytes) -> "list[dict[str, dict]]":
 
 
 def _stats_may_match(st: "dict | None", lo, hi) -> bool:
-    """False only when stats PROVE no value in [lo, hi] exists — the
-    no-false-negatives contract (parquet_meta/_bounds_may_match twin).
-    Missing stats keep the range."""
-    if st is None or st["min"] is None or st["max"] is None:
-        return True
-    try:
-        return not (st["max"] < lo or st["min"] > hi)
-    except TypeError:
-        return True  # incomparable literal: keep
+    """False only when stripe or row-group stats PROVE no value in
+    [lo, hi] exists (:func:`file_stats.may_contain`)."""
+    mn, mx = (st["min"], st["max"]) if st else (None, None)
+    return may_contain(mn, mx, ">=", lo) and may_contain(mn, mx, "<=", hi)
 
 
 def _stripe_row_index(buf: bytes, streams, compression: str, cid: int,

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from .file_stats import may_contain
+
 # thrift compact type codes
 _STOP, _TRUE, _FALSE, _BYTE, _I16, _I32, _I64 = 0, 1, 2, 3, 4, 5, 6
 _DOUBLE, _BINARY, _LIST, _SET, _MAP, _STRUCT = 7, 8, 9, 10, 11, 12
@@ -312,14 +314,11 @@ def prune_pages(column_index: dict, offset_index: list,
         first = loc["first_row_index"]
         last = (offset_index[i + 1]["first_row_index"]
                 if i + 1 < n_pages else rg_num_rows) - 1
-        if column_index is None:
-            selected, mn, mx = True, None, None
-        elif column_index["null_pages"][i]:
-            selected, mn, mx = False, None, None
-        else:
-            mn, mx = column_index["min"][i], column_index["max"][i]
-            selected = (True if mn is None or mx is None
-                        else not (mx < lo or mn > hi))
+        null_page = bool(column_index and column_index["null_pages"][i])
+        mn, mx = ((column_index["min"][i], column_index["max"][i])
+                  if column_index and not null_page else (None, None))
+        selected = (may_contain(mn, mx, ">=", lo, null_page)
+                    and may_contain(mn, mx, "<=", hi, null_page))
         out.append({"page": i, "first_row": first, "last_row": last,
                     "min": mn, "max": mx, "selected": selected})
     return out
@@ -336,7 +335,8 @@ def prune_row_groups(footer: dict, column: str, lo, hi) -> list[dict]:
         if col is None:
             raise ValueError(f"column {column!r} not in row group {i}")
         mn, mx = col["min"], col["max"]
-        selected = True if mn is None or mx is None else not (mx < lo or mn > hi)
+        selected = (may_contain(mn, mx, ">=", lo)
+                    and may_contain(mn, mx, "<=", hi))
         out.append({"row_group": i, "min": mn, "max": mx,
                     "num_values": col["num_values"], "selected": selected})
     return out

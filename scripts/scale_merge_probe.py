@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from pr2_transformation_spark.session import build_session
+from pr2_transformation_spark.sources.file_stats import any_key_within
 from pr2_transformation_spark.sources import iceberg as icemod
 from pr2_transformation_spark.sources.iceberg import IcebergTable
 
@@ -60,19 +61,13 @@ def probe(spark, n_rows: int, n_files: int, prune: bool) -> dict:
         wall = time.perf_counter() - t0
         IcebergTable.delete_where = orig
         # recompute the prune verdict the shipped code applied
-        import bisect
-        import json as _json
         keys = sorted(
             int(x["okey"]) for x in
             src.select("okey").toPandas().to_dict("records"))
         ents = t._data_file_entries(snapshot_id=1)
-        kept = 0
-        for e in ents:
-            lo_b = _json.loads(e["lower_bounds_json"]).get("okey")
-            hi_b = _json.loads(e["upper_bounds_json"]).get("okey")
-            i = bisect.bisect_left(keys, lo_b)
-            if i < len(keys) and keys[i] <= hi_b:
-                kept += 1
+        kept = sum(
+            1 for e in ents
+            if any_key_within(keys, *icemod._entry_bounds(e, "okey")[:2]))
         return {"rows": n_rows, "files": len(ents),
                 "files_scanned": kept if prune else len(ents),
                 "wall_s": round(wall, 2),

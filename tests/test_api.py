@@ -495,43 +495,3 @@ def test_merge_upsert_empties_fully_deleted_bucket(spark, tmp_path):
     )
     cat.merge_upsert("p.d.tiny", kill, ["k"], "ts", num_buckets=4, delete_col="deleted")
     assert not glob.glob(f"{root}/__bucket=*/*.parquet")
-
-
-def test_versioned_snapshots_time_travel_diff_vacuum(spark, tmp_path):
-    """write_versioned keeps immutable v=N snapshots behind an atomic
-    pointer: time-travel reads return old data exactly, snapshot_diff
-    derives the CDC changelog, vacuum retires old versions but never
-    the current one."""
-    from pyspark.sql import functions as F
-
-    from pr2_transformation_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, root=str(tmp_path / "lake"))
-    v0_df = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    assert cat.write_versioned(v0_df, "p.d.t") == 0
-    v1_df = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (4, "d")], "k long, v string"
-    )
-    assert cat.write_versioned(v1_df, "p.d.t") == 1
-    assert cat.latest_version("p.d.t") == 1
-
-    # latest read = v1; time travel = v0 exactly
-    assert {r["v"] for r in cat.read_versioned("p.d.t").collect()} == {"a", "B", "d"}
-    assert {r["v"] for r in cat.read_versioned("p.d.t", 0).collect()} == {"a", "b", "c"}
-
-    diff = {
-        r["k"]: r["__change"]
-        for r in cat.snapshot_diff("p.d.t", 0, 1, ["k"]).collect()
-    }
-    assert diff == {2: "update", 3: "delete", 4: "insert"}  # k=1 unchanged
-
-    cat.write_versioned(v1_df.withColumn("v", F.upper("v")), "p.d.t")
-    removed = cat.vacuum_versions("p.d.t", keep_last=2)
-    assert removed == [0]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        cat.read_versioned("p.d.t", 0)
-    assert cat.latest_version("p.d.t") == 2
