@@ -128,12 +128,21 @@ def connected_components(
                 F.col("id").alias("a"), F.col("id").alias("b"), "comp"
             )
         )
-        nbr_min = contrib.groupBy("a").agg(
-            F.min("comp").alias("comp"),
-            F.min(
-                F.when(F.col("b") == F.col("a"), F.col("comp"))
-            ).alias("__own"),
-        ).withColumnRenamed("a", "id")
+        # LAZY checkpoint: the pointer jump below reads nbr_min twice,
+        # and column pruning gives the two reads different aggregates
+        # (the parent side drops __own), so exchange reuse cannot merge
+        # them and the neighbor join would run twice per round.  The
+        # checkpoint computes it once, when the probe below runs.
+        nbr_min = checkpoint_frame(
+            contrib.groupBy("a").agg(
+                F.min("comp").alias("comp"),
+                F.min(
+                    F.when(F.col("b") == F.col("a"), F.col("comp"))
+                ).alias("__own"),
+            ).withColumnRenamed("a", "id"),
+            checkpoint,
+            eager=False,
+        )
         # POINTER JUMP (r11, guide §1.2 "the distributed algorithm"):
         # follow the freshly aggregated label one hop through the label
         # table itself (comp <- comp[comp]).  Every comp value is a

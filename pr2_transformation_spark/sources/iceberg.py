@@ -157,6 +157,14 @@ def _iceberg_type_to_spark(t: str) -> str:
     return _ICEBERG_TO_SPARK[t]
 
 
+def _schema_ddl(fields: list) -> str:
+    """Spark DDL of an Iceberg schema's ``fields``: the pinned read
+    schema every scan of the table's parquet files passes, so no scan
+    infers it from a file footer at plan time."""
+    return ", ".join(
+        f"{f['name']} {_iceberg_type_to_spark(f['type'])}" for f in fields)
+
+
 def _spark_type_to_iceberg(dt: str) -> str:
     m = {
         "long": "long", "bigint": "long", "int": "int", "integer": "int",
@@ -1143,9 +1151,7 @@ class IcebergTable:
                        if e["file_path"] in paths_subset]
         files = [e["file_path"] for e in entries]
         cur_fields = meta["schema"]["fields"]
-        cur_ddl = ", ".join(
-            f"{f['name']} {_iceberg_type_to_spark(f['type'])}"
-            for f in cur_fields)
+        cur_ddl = _schema_ddl(cur_fields)
         if not files:
             if skipping or paths_subset is not None:
                 # every file provably irrelevant: empty frame, pinned schema
@@ -1211,9 +1217,7 @@ class IcebergTable:
             for sid in sorted(groups):
                 hist = schemas.get(sid, meta["schema"])
                 hist_by_id = {f["id"]: f for f in hist["fields"]}
-                ddl = ", ".join(
-                    f"{f['name']} {_iceberg_type_to_spark(f['type'])}"
-                    for f in hist["fields"])
+                ddl = _schema_ddl(hist["fields"])
                 aliases = []
                 for f in cur_fields:
                     h = hist_by_id.get(f["id"])
@@ -1246,9 +1250,10 @@ class IcebergTable:
                 F.col(c_rel) == p, F.lit(seq)).otherwise(seq_expr)
         out = base.withColumn(c_seq, seq_expr)
         for d in dels:
-            del_df = spark.read.parquet(os.path.join(self.path, d["path"]))
+            del_path = os.path.join(self.path, d["path"])
             if d["content"] == 1:  # positional
-                del_df = del_df.select(
+                del_df = spark.read.schema(
+                    "file_path string, pos long").parquet(del_path).select(
                     F.col("file_path").alias(c_rel + "_d"),
                     F.col("pos").alias(c_pos + "_d"))
                 out = out.join(
@@ -1259,7 +1264,7 @@ class IcebergTable:
                 )
             else:  # equality, sequence-scoped
                 ren = {c: f"{c}__ice_d{sfx}" for c in d["cols"]}
-                del_df = del_df.select(
+                del_df = spark.read.parquet(del_path).select(
                     *[F.col(c).alias(a) for c, a in ren.items()])
                 eq = None
                 for c in d["cols"]:
@@ -1404,7 +1409,8 @@ class IcebergTable:
         cur_sid = meta.get("current-schema-id", 0)
         if "schemas" not in meta or all(
                 sids[p] == cur_sid for p in files):
-            base = spark.read.parquet(
+            base = spark.read.schema(
+                _schema_ddl(meta["schema"]["fields"])).parquet(
                 *[os.path.join(self.path, p) for p in files])
         else:
             # evolved table: the predicate references CURRENT names —
@@ -1421,9 +1427,7 @@ class IcebergTable:
             for sid in sorted(groups):
                 hist = schemas.get(sid, meta["schema"])
                 hist_by_id = {f["id"]: f for f in hist["fields"]}
-                ddl = ", ".join(
-                    f"{f['name']} {_iceberg_type_to_spark(f['type'])}"
-                    for f in hist["fields"])
+                ddl = _schema_ddl(hist["fields"])
                 aliases = []
                 for f in cur_fields:
                     h = hist_by_id.get(f["id"])
@@ -1792,19 +1796,19 @@ class IcebergTable:
                 delete_snap = self.delete_where(
                     spark, f"{on} IN ({in_list})", now_ms=now_ms,
                     prune_keys=(on, keys))
-            if when_not_matched == "insert":
-                inserts = source.join(tgt_keys, on, "left_anti")
-            else:
-                inserts = source.limit(0)
-            to_append = inserts
-            if keys and when_matched == "update":
-                # semi-join against the persisted target keys: source
-                # rows with a matched key ARE the update images (the
-                # former ``matched`` frame re-derived the same set)
-                to_append = to_append.unionByName(
-                    source.join(tgt_keys, on, "left_semi"))
             append_snap = -1
             if n_ins > 0 or (keys and when_matched == "update"):
+                if when_not_matched == "ignore":
+                    # semi-join against the persisted target keys:
+                    # source rows with a matched key ARE the update images
+                    to_append = source.join(tgt_keys, on, "left_semi")
+                elif when_matched == "update":
+                    # upsert: every source row is an insert (no target
+                    # key, NULL keys included) or an update image, so
+                    # the append is the source itself
+                    to_append = source
+                else:
+                    to_append = source.join(tgt_keys, on, "left_anti")
                 append_snap = self.write(
                     to_append, mode="append",
                     now_ms=None if now_ms is None else now_ms + 1)
@@ -1877,10 +1881,8 @@ class IcebergTable:
                 added_paths = [p for p in self._data_files(cur)
                                if p not in prev_files]
                 if added_paths:
-                    ddl = ", ".join(
-                        f"{f['name']} {_iceberg_type_to_spark(f['type'])}"
-                        for f in meta["schema"]["fields"])
-                    tag(spark.read.schema(ddl).parquet(
+                    tag(spark.read.schema(
+                        _schema_ddl(meta["schema"]["fields"])).parquet(
                         *[os.path.join(self.path, p)
                           for p in added_paths]), "insert", cur)
                 continue
@@ -1889,11 +1891,9 @@ class IcebergTable:
             tag(after.exceptAll(before), "insert", cur)
             tag(before.exceptAll(after), "delete", cur)
         if not frames:
-            ddl = ", ".join(
-                f"{f['name']} {_iceberg_type_to_spark(f['type'])}"
-                for f in meta["schema"]["fields"])
             return spark.createDataFrame(
-                [], ddl + ", _change_type string, _snapshot_id long")
+                [], _schema_ddl(meta["schema"]["fields"])
+                + ", _change_type string, _snapshot_id long")
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)

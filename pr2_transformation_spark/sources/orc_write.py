@@ -36,6 +36,7 @@ image per task, no coordination.
 
 from __future__ import annotations
 
+import math
 import struct
 
 from .orc import _WIDTH_CODES, COMPRESSION
@@ -377,9 +378,14 @@ def _stats_pb(kind: str, vals: list) -> bytes:
             sub = (_varint((1 << 3) | 0) + _varint(_zigzag(min(nonnull)))
                    + _varint((2 << 3) | 0) + _varint(_zigzag(max(nonnull))))
         elif kind in ("float", "double"):
-            fid = 3
-            sub = (_varint((1 << 3) | 1) + struct.pack("<d", min(nonnull))
-                   + _varint((2 << 3) | 1) + struct.pack("<d", max(nonnull)))
+            # bounds over the non-NaN values (min()/max() over a list
+            # holding NaN answer NaN whenever it comes first); an
+            # all-NaN slice records no bounds, which never prunes
+            finite = [v for v in nonnull if not math.isnan(v)]
+            if finite:
+                fid = 3
+                sub = (_varint((1 << 3) | 1) + struct.pack("<d", min(finite))
+                       + _varint((2 << 3) | 1) + struct.pack("<d", max(finite)))
         elif kind == "string":
             fid = 4
             lo = min(nonnull).encode("utf-8")

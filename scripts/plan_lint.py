@@ -96,7 +96,6 @@ CARTESIAN_ALLOWED = {
     "q299_chi_square": "n/r/c totals scalar (1 row) rides a broadcast cross onto the category-bounded cell frame",
     "q301_wasserstein_length_drift": "dense 20 x S bucket grid is a bounded cross of two tiny frames (q285 pattern)",
     "q302_largest_remainder": "corpus-total and leftover-slot scalars (1 row each) ride broadcast crosses onto the stratum frame",
-    "q304_kcore_peeling": "per-round before-count scalar (1 row) rides a broadcast cross onto the census row",
     "q310_encoding_advisor": "per-column plain/dict 1-row aggregates assembled via broadcast crosses",
     "q312_neyman_allocation": "Nh*sigma normalizer and leftover scalars (1 row each) ride broadcast crosses onto the stratum frame",
     "q316_bh_fdr": "test-count and step-up-kmax scalars (1 row each) ride broadcast crosses onto the m-row test frame",

@@ -197,6 +197,33 @@ def test_connected_components_known_graph(spark):
     }
 
 
+def test_connected_components_round_aggregates_neighbours_once(
+        spark, monkeypatch):
+    """Each round's plans hold exactly one neighbour aggregate: the
+    pointer jump reads the checkpointed neighbour minimum instead of
+    planning the neighbour join a second time (column pruning makes the
+    two copies differ, so exchange reuse would not merge them)."""
+    from pr2_transformation_spark.operators import graph
+
+    plans = []
+    real = graph.checkpoint_frame
+
+    def spy(df, mode, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, mode, eager)
+
+    monkeypatch.setattr(graph, "checkpoint_frame", spy)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long")
+    graph.connected_components(edges).collect()
+    # the edge list and the initial labels, then two frames per round
+    rounds = plans[2:]
+    assert rounds and len(rounds) % 2 == 0
+    aggs = [line for p in rounds for line in p.splitlines()
+            if "HashAggregate" in line and "partial_min(comp" in line]
+    assert len(aggs) == len(rounds) // 2
+
+
 def test_connected_components_long_chain_converges(spark):
     """Paths need multiple propagation rounds; the label must still reach
     the far end (exercises the iteration/checkpoint loop).  The 200-vertex

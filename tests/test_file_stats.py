@@ -47,9 +47,10 @@ def test_any_key_within_bisects_sorted_keys():
 
 
 def test_nan_bounds_keep_the_orc_stripe():
-    """The in-repo ORC writer takes Python min()/max(), so a stripe
-    whose first double is NaN records NaN bounds; the range probe must
-    still read it (``max >= lo`` is False for a NaN max)."""
+    """A stripe whose first double is NaN stays readable by a range
+    probe around its finite value (the writer's bounds skip NaN; a NaN
+    bound from another writer keeps the stripe, see
+    ``test_may_contain_prunes_only_on_proof``)."""
     from pr2_transformation_spark.sources.orc import read_orc_bytes_pruned
     from pr2_transformation_spark.sources.orc_write import write_orc_bytes
 

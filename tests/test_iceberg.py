@@ -670,6 +670,25 @@ def test_merge_upsert_merge_on_read(spark, tmp_path):
         t.merge(spark, df, on="k", max_keys=10)
 
 
+def test_merge_upsert_appends_null_key_source_rows(spark, tmp_path):
+    """An upsert appends every source row exactly once: matched keys as
+    update images, new and NULL keys as inserts (a NULL key matches no
+    target row), whatever the source's column order."""
+    t = IcebergTable(str(tmp_path / "mg"))
+    t.write(spark.range(10).selectExpr("id as k", "id * 10 as v"),
+            mode="overwrite", now_ms=1000)
+    src = spark.createDataFrame(
+        [(300, 3), (-1, None), (-2, None), (2000, 20)], "v long, k long")
+    res = t.merge(spark, src, on="k", now_ms=2000)
+    assert res["rows_updated"] == 1 and res["rows_inserted"] == 3
+    got = sorted((r["k"] is None, r["k"] or 0, r["v"])
+                 for r in t.read(spark).collect())
+    want = sorted([(False, k, k * 10) for k in range(10) if k != 3]
+                  + [(False, 3, 300), (True, 0, -1), (True, 0, -2),
+                     (False, 20, 2000)])
+    assert got == want
+
+
 def test_refs_pin_snapshots(spark, tmp_path):
     """Tags pin snapshots through expire_snapshots; drop releases;
     duplicate/unknown refs raise."""

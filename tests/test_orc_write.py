@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime
 import io
+import math
 import random
 
 import pyarrow.orc as po
@@ -207,3 +208,31 @@ def test_write_side_stripe_statistics_prune(spark, tmp_path):
     got = spark.read.orc(p)
     assert got.count() == n
     assert got.agg({"k": "max"}).collect()[0][0] == n - 1
+
+
+def test_double_stripe_statistics_skip_nan():
+    """Double stripe bounds come from the non-NaN values: a stripe
+    holding [nan, 1.0] records min = max = 1.0 (Python's min()/max()
+    answer NaN when NaN comes first), a range probe still finds the
+    1.0 row and a range beyond it prunes the stripe; an all-NaN stripe
+    records no bounds and is always read."""
+    from pr2_transformation_spark.sources.orc import (
+        orc_stripe_statistics,
+        read_orc_bytes_pruned,
+    )
+
+    nan = float("nan")
+    buf = write_orc_bytes([("x", "double", [nan, 1.0])])
+    [stripe] = orc_stripe_statistics(buf)
+    assert (stripe["x"]["min"], stripe["x"]["max"]) == (1.0, 1.0)
+    _, cols, acc = read_orc_bytes_pruned(buf, "x", 0.5, 1.5)
+    assert cols["x"] == [1.0] and acc["stripes_read"] == 1
+    _, cols, acc = read_orc_bytes_pruned(buf, "x", 2.0, 3.0)
+    assert cols["x"] == [] and acc["stripes_read"] == 0
+
+    all_nan = write_orc_bytes([("x", "double", [nan, nan])])
+    [stripe] = orc_stripe_statistics(all_nan)
+    assert stripe["x"]["min"] is None and stripe["x"]["max"] is None
+    _, _, acc = read_orc_bytes_pruned(all_nan, "x", 2.0, 3.0)
+    assert acc["stripes_read"] == 1
+    assert [math.isnan(v) for v in read_orc_bytes(all_nan)[1]["x"]] == [True, True]

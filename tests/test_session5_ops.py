@@ -3,6 +3,7 @@ gate checks cross-engine equality; these pin the SEMANTICS)."""
 
 from __future__ import annotations
 
+import duckdb
 import pyspark.sql.functions as F
 
 import __spark_entry__ as e
@@ -86,6 +87,45 @@ def test_kcore_census_is_monotone(spark):
     nodes = [rows[i]["n_nodes"] for i in range(1, 5)]
     assert all(nodes[i + 1] <= nodes[i] for i in range(3))
     assert all(rows[i]["n_removed"] >= 0 for i in range(1, 5))
+
+
+def test_kcore_matches_duckdb_oracle(spark):
+    """q304's four-round census equals its unrolled DuckDB replay, with
+    the census column types pinned."""
+    df = e.q304_kcore_peeling(spark, SF)
+    assert df.dtypes == [("round", "int"), ("n_nodes", "bigint"),
+                         ("n_edges", "bigint"), ("n_removed", "bigint")]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW customer AS "
+                f"SELECT * FROM read_parquet('{SF}/customer.parquet')")
+    oracle = con.sql(e.oracle_sql()["q304_kcore_peeling"]).fetchall()
+    assert sorted(tuple(r) for r in df.collect()) == sorted(oracle)
+    assert len(oracle) == 4
+
+
+#: q304's Spark jobs per execution at local[4] with AQE on: each round's
+#: degree frame and survivor list is computed once (lazy checkpoints),
+#: and the census reads the degree frames instead of re-aggregating
+KCORE_JOB_BUDGET = 34
+
+
+def test_kcore_job_budget(spark):
+    """One q304 execution submits at most KCORE_JOB_BUDGET jobs, and the
+    same number on a second run."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    counts = []
+    try:
+        for rep in range(2):
+            group = f"kcore-job-budget-{rep}"
+            sc.setJobGroup(group, group)
+            e.q304_kcore_peeling(spark, SF).collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            bus.waitUntilEmpty(30_000)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts[0] == counts[1] and counts[0] <= KCORE_JOB_BUDGET, counts
 
 
 def test_soft_dedup_weights_conserve_clusters(spark):
