@@ -19,7 +19,6 @@ ORC and parquet readers stay importable without either.
 
 from __future__ import annotations
 
-import bisect
 import datetime
 
 
@@ -121,22 +120,6 @@ def may_contain(lo, hi, op: str, val, all_null: bool = False) -> bool:
     except TypeError:
         return True
     return True
-
-
-def any_key_within(sorted_keys: list, lo, hi) -> bool:
-    """Whether some key of ``sorted_keys`` may lie in ``[lo, hi]`` —
-    the driver-side MERGE prune over a bounded key list (one bisect per
-    file, not one comparison per key).  Same contract as
-    :func:`may_contain`: missing or incomparable bounds keep the file."""
-    if lo is None or hi is None:
-        return True
-    try:
-        i = bisect.bisect_left(sorted_keys, lo)
-    except TypeError:
-        return True
-    # sorted_keys[i] is the smallest key >= lo: the file may hold a
-    # key iff that one is <= hi
-    return i < len(sorted_keys) and may_contain(lo, hi, "=", sorted_keys[i])
 
 
 def candidate_files(keys_df, key: str,

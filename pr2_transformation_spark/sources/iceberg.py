@@ -69,8 +69,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .avro import avro_read, avro_write
-from .file_stats import (any_key_within, candidate_files, footer_stats,
-                         may_contain)
+from .file_stats import candidate_files, footer_stats, may_contain
 
 MANIFEST_SCHEMA = {
     "type": "record",
@@ -383,25 +382,6 @@ def _bounds_may_match(entry: dict, col: str, op: str, val) -> bool:
     (:func:`file_stats.may_contain`)."""
     lo, hi, all_null = _entry_bounds(entry, col)
     return may_contain(lo, hi, op, val, all_null)
-
-
-def _sql_literal(v) -> str:
-    """A collected key as a typed Spark SQL literal.  Strings escape by
-    doubled single quotes (repr() only matches the SQL lexer for tame
-    strings); a timestamp is rebuilt from its epoch micros, because
-    ``collect()`` returns a naive datetime in the Python process's local
-    time, not the session time zone."""
-    import datetime
-
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, datetime.datetime):
-        micros = (int(v.replace(microsecond=0).timestamp()) * 1_000_000
-                  + v.microsecond)
-        return f"timestamp_micros({micros})"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v.isoformat()}'"
-    return str(v)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1132,6 +1112,22 @@ class IcebergTable:
         manifest partition tuples (hidden partitioning: the user
         predicates the SOURCE column; the planner maps it through the
         spec's transform)."""
+        return self._scan(spark, snapshot_id, skipping, paths_subset)[0]
+
+    def _scan(self, spark: SparkSession,
+              snapshot_id: "int | None" = None,
+              skipping: "list[tuple] | None" = None,
+              paths_subset: "set[str] | None" = None,
+              positions: bool = False,
+              deletes: bool = True) -> "tuple[DataFrame, str, str]":
+        """:meth:`read`'s scan, returned as ``(frame, rel, pos)``.  With
+        ``positions`` the frame also carries each row's data file
+        relative to the table (``data/<name>``) as column ``rel`` and
+        its ordinal within that file as column ``pos`` — the
+        coordinates a positional-delete file records; both names are
+        uniquified against the table's columns.  ``deletes=False``
+        skips merge-on-read: every row of the chosen files, tombstoned
+        or not."""
         from pyspark.sql import functions as F
 
         meta = self._load_metadata()
@@ -1152,14 +1148,7 @@ class IcebergTable:
         files = [e["file_path"] for e in entries]
         cur_fields = meta["schema"]["fields"]
         cur_ddl = _schema_ddl(cur_fields)
-        if not files:
-            if skipping or paths_subset is not None:
-                # every file provably irrelevant: empty frame, pinned schema
-                return spark.createDataFrame([], cur_ddl)
-            raise ValueError("empty snapshot")
-        spark.catalog.refreshByPath(self.path)
         cols = [f["name"] for f in cur_fields]
-        dels = self._delete_entries(snapshot_id)
         # Helper/join columns must not collide with user columns (a table
         # may itself carry file_path/pos or __-prefixed names): uniquify
         # the helper names against the table schema and RENAME the delete
@@ -1170,15 +1159,27 @@ class IcebergTable:
             sfx += "_"
         c_rel, c_pos, c_seq = (f"__ice_rel{sfx}", f"__ice_pos{sfx}",
                                f"__ice_seq{sfx}")
+        keep = [c_rel, c_pos] if positions else []
+        if not files:
+            if skipping or paths_subset is not None:
+                # every file provably irrelevant: empty frame, pinned schema
+                empty = spark.createDataFrame([], cur_ddl).select(
+                    "*", *[F.lit(None).cast(t).alias(c)
+                             for c, t in zip(keep, ("string", "long"))])
+                return empty, c_rel, c_pos
+            raise ValueError("empty snapshot")
+        spark.catalog.refreshByPath(self.path)
+        dels = self._delete_entries(snapshot_id) if deletes else []
 
-        def _scan(paths: "list[str]", ddl: str, aliases: list) -> DataFrame:
+        def scan_files(paths: "list[str]", ddl: str,
+                       aliases: list) -> DataFrame:
             # merge-on-read helpers are projected AT SCAN TIME (the only
             # node where _metadata resolves once evolution aliases the
             # user columns)
             sc = spark.read.schema(ddl).parquet(
                 *[os.path.join(self.path, p) for p in paths])
             sel = list(aliases)
-            if dels:
+            if positions or dels:
                 sel += [
                     F.concat(
                         F.lit("data/"),
@@ -1199,7 +1200,7 @@ class IcebergTable:
             # physical types across snapshots (e.g. an int32 literal
             # appended onto a long column) would otherwise fail
             # conversion read-order-dependently
-            base = _scan(files, cur_ddl, [F.col(n) for n in cols])
+            base = scan_files(files, cur_ddl, [F.col(n) for n in cols])
         else:
             # SCHEMA EVOLUTION (field-id resolution, the Iceberg spec's
             # core read rule): group files by write-time schema-id,
@@ -1227,12 +1228,12 @@ class IcebergTable:
                         aliases.append(
                             F.lit(None).cast(_iceberg_type_to_spark(
                                 f["type"])).alias(f["name"]))
-                frames.append(_scan(groups[sid], ddl, aliases))
+                frames.append(scan_files(groups[sid], ddl, aliases))
             base = frames[0]
             for fr in frames[1:]:
                 base = base.unionByName(fr)
         if not dels:
-            return base
+            return base, c_rel, c_pos
         # MERGE-ON-READ.  Positional deletes anti-join on (file,
         # original row position) — _metadata.row_index is the immutable
         # within-file ordinal the delete files were written against;
@@ -1275,7 +1276,7 @@ class IcebergTable:
                     eq & (F.col(c_seq) < F.lit(d["seq"])),
                     "left_anti",
                 )
-        return out.select(*cols)
+        return out.select(*cols, *keep), c_rel, c_pos
 
     def delete_where_equality(self, spark: SparkSession, predicate: str,
                               columns: list[str],
@@ -1287,205 +1288,67 @@ class IcebergTable:
         later appends matching the values survive (the spec's
         sequence-number scoping).  Returns the new snapshot id."""
         ts = int(now_ms if now_ms is not None else time.time() * 1000)
-        from pyspark.sql import functions as F  # noqa: F401
         read_version = self._current_version()
         meta = self._load_metadata()
         vals = self.read(spark).filter(predicate).select(*columns).distinct()
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
-        vals.coalesce(1).write.mode("overwrite").parquet(staging)
-        del_name = f"eq-delete-{uuid.uuid4().hex[:12]}.parquet"
-        for f in sorted(os.listdir(staging)):
-            if f.endswith(".parquet"):
-                os.rename(os.path.join(staging, f),
-                          os.path.join(self.data_dir, del_name))
-        shutil.rmtree(staging, ignore_errors=True)
-        import pyarrow.parquet as pq
-        n_del = pq.read_metadata(
-            os.path.join(self.data_dir, del_name)).num_rows
-
-        snap_id = len(meta["snapshots"]) + 1
-        manifest_name = f"m-{uuid.uuid4().hex[:12]}.avro"
-        manifest_path = os.path.join(self.meta_dir, manifest_name)
-        with open(manifest_path, "wb") as f:
-            f.write(avro_write([{
-                "status": 1,
-                "snapshot_id": snap_id,
-                "data_file": {
-                    "file_path": f"data/{del_name}",
-                    "file_format": "PARQUET",
-                    "record_count": n_del,
-                    "file_size_in_bytes": os.path.getsize(
-                        os.path.join(self.data_dir, del_name)),
-                    "content": 2,
-                    "equality_cols": ",".join(columns),
-                    "lower_bounds_json": "",
-                    "upper_bounds_json": "",
-                    "null_counts_json": "",
-                    "partition_json": "",
-                    "schema_id": 0,
-                },
-            }], MANIFEST_SCHEMA))
-        prev = next(s for s in meta["snapshots"]
-                    if s["snapshot-id"] == meta["current-snapshot-id"])
-        _, prev_rows = avro_read(
-            open(os.path.join(self.path, prev["manifest-list"]), "rb").read())
-        entries = [{**r, "content": r.get("content", 0)} for r in prev_rows]
-        entries.append({
-            "manifest_path": f"metadata/{manifest_name}",
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 1,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": 0,
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": n_del,
-        })
-        list_name = f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.avro"
-        with open(os.path.join(self.meta_dir, list_name), "wb") as f:
-            f.write(avro_write(entries, MANIFEST_LIST_SCHEMA))
-        meta["format-version"] = 2
-        meta["snapshots"].append({
-            "snapshot-id": snap_id,
-            "timestamp-ms": ts,
-            "manifest-list": f"metadata/{list_name}",
-            "summary": {"operation": "delete"},
-        })
-        meta["current-snapshot-id"] = snap_id
-        meta["last-updated-ms"] = ts
-        meta["snapshot-log"].append(
-            {"snapshot-id": snap_id, "timestamp-ms": ts})
-        try:
-            self._publish_metadata(meta, read_version + 1)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"delete read table version {read_version} but a "
-                f"concurrent commit won; its rows/files were not seen by "
-                f"this tombstone set ({self.path})") from None
-        return snap_id
+        del_name = self._stage_delete_file(vals.coalesce(1), "eq-delete")
+        return self._commit_delete_file(meta, read_version, del_name, ts,
+                                        equality_cols=columns)
 
     def delete_where(self, spark: SparkSession, predicate: str,
-                     now_ms: "int | None" = None,
-                     prune_keys: "tuple[str, list] | None" = None) -> int:
+                     now_ms: "int | None" = None) -> int:
         """Format-version-2 POSITIONAL DELETE commit: rows of the
         current snapshot matching ``predicate`` are tombstoned as
         (file_path, pos) pairs in a delete parquet file, referenced by
         a content=1 manifest — data files are never rewritten (the
         merge-on-read trade: cheap deletes, a broadcast anti-join at
-        read time).  Returns the new snapshot id.
-
-        ``prune_keys=(col, keys)`` is a caller's promise that the
-        predicate can only match rows whose ``col`` is in ``keys``:
-        data files whose manifest lower/upper bounds PROVE no key falls
-        inside them are skipped before the scan (r10, guide §6 — the
-        move that makes a 1k-key MERGE on a 100 TB table scan only the
-        touched files instead of every live file).  Missing bounds keep
-        the file (the no-false-negatives skipping contract), so the
-        tombstone set is identical with or without the hint."""
+        read time).  Returns the new snapshot id."""
         ts = int(now_ms if now_ms is not None else time.time() * 1000)
         from pyspark.sql import functions as F
         read_version = self._current_version()
         meta = self._load_metadata()
-        entries = self._data_file_entries()
-        if prune_keys is not None and len(meta.get("schemas", [])) <= 1:
-            # single-schema-generation tables only: bounds keys are the
-            # current names.  (r11 FIX: the r10 guard tested
-            # `"schemas" not in meta`, but every table written since
-            # the round-9 evolution work carries a one-entry "schemas"
-            # list — the prune silently never fired on current tables;
-            # the probe measured the intended behavior through its own
-            # spy.  One schema generation == bounds keys ARE the
-            # current names, which is the actual precondition.)
-            col, keys = prune_keys
-            skeys = sorted(keys)
-            pruned = [e for e in entries
-                      if any_key_within(skeys, *_entry_bounds(e, col)[:2])]
-            # an all-pruned result would leave nothing to scan; keep
-            # the unpruned set so the commit path (empty tombstone
-            # parquet + snapshot) is byte-identical to the unhinted one
-            entries = pruned or entries
-        files = [e["file_path"] for e in entries]
-        sids = {e["file_path"]: e.get("schema_id", 0) for e in entries}
-        cur_sid = meta.get("current-schema-id", 0)
-        if "schemas" not in meta or all(
-                sids[p] == cur_sid for p in files):
-            base = spark.read.schema(
-                _schema_ddl(meta["schema"]["fields"])).parquet(
-                *[os.path.join(self.path, p) for p in files])
-        else:
-            # evolved table: the predicate references CURRENT names —
-            # scan each generation under its write-time schema and
-            # alias by field id (read()'s resolution rule), keeping the
-            # positional helpers bound at the scan node
-            schemas = {s.get("schema-id", 0): s
-                       for s in meta["schemas"]}
-            cur_fields = meta["schema"]["fields"]
-            groups: dict[int, list[str]] = {}
-            for p in files:
-                groups.setdefault(sids[p], []).append(p)
-            frames = []
-            for sid in sorted(groups):
-                hist = schemas.get(sid, meta["schema"])
-                hist_by_id = {f["id"]: f for f in hist["fields"]}
-                ddl = _schema_ddl(hist["fields"])
-                aliases = []
-                for f in cur_fields:
-                    h = hist_by_id.get(f["id"])
-                    aliases.append(
-                        F.col(h["name"]).alias(f["name"]) if h is not None
-                        else F.lit(None).cast(_iceberg_type_to_spark(
-                            f["type"])).alias(f["name"]))
-                sc = spark.read.schema(ddl).parquet(
-                    *[os.path.join(self.path, p) for p in groups[sid]])
-                frames.append(sc.select(
-                    *aliases, F.col("_metadata.file_path").alias(
-                        "__ice_fp"),
-                    F.col("_metadata.row_index").alias("__ice_ri")))
-            base = frames[0]
-            for fr in frames[1:]:
-                base = base.unionByName(fr)
-        if "__ice_fp" in base.columns:
-            hits = (
-                base.filter(predicate)
-                .select(
-                    F.concat(
-                        F.lit("data/"),
-                        F.element_at(F.split(F.col("__ice_fp"), "/"), -1),
-                    ).alias("file_path"),
-                    F.col("__ice_ri").alias("pos"))
-            )
-        else:
-            hits = (
-                base.filter(predicate)
-                .select(
-                    F.concat(
-                        F.lit("data/"),
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"),
-                            -1),
-                    ).alias("file_path"),
-                    F.col("_metadata.row_index").alias("pos"),
-                )
-            )
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
+        # the predicate references CURRENT names: _scan resolves evolved
+        # generations by field id and binds the positions at the scan
+        base, rel, pos = self._scan(spark, positions=True, deletes=False)
+        hits = base.filter(predicate).select(
+            F.col(rel).alias("file_path"), F.col(pos).alias("pos"))
         # spec: delete files sorted by (file_path, pos).  The single
         # output file means one task holds every hit anyway, so sort
         # INSIDE that task (coalesce -> sortWithinPartitions) instead of
         # a global orderBy, whose RangePartitioning exchange costs an
         # extra range-sampling job per delete commit (r10, guide §2.4)
-        hits.coalesce(1).sortWithinPartitions("file_path", "pos") \
-            .write.mode("overwrite").parquet(staging)
-        n_del = 0
-        del_name = f"delete-{uuid.uuid4().hex[:12]}.parquet"
+        del_name = self._stage_delete_file(
+            hits.coalesce(1).sortWithinPartitions("file_path", "pos"),
+            "delete")
+        return self._commit_delete_file(meta, read_version, del_name, ts)
+
+    def _stage_delete_file(self, rows: DataFrame, prefix: str) -> str:
+        """Write the one-partition ``rows`` as the table's data file
+        ``<prefix>-<uuid>.parquet``; returns its name."""
+        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
+        rows.write.mode("overwrite").parquet(staging)
+        del_name = f"{prefix}-{uuid.uuid4().hex[:12]}.parquet"
         for f in sorted(os.listdir(staging)):
             if f.endswith(".parquet"):
                 os.rename(os.path.join(staging, f),
                           os.path.join(self.data_dir, del_name))
         shutil.rmtree(staging, ignore_errors=True)
-        import pyarrow.parquet as pq
-        n_del = pq.read_metadata(
-            os.path.join(self.data_dir, del_name)).num_rows
+        return del_name
 
+    def _commit_delete_file(self, meta: dict, read_version: int,
+                            del_name: str, ts: int,
+                            equality_cols: "list[str] | None" = None) -> int:
+        """Commit the delete file ``data/<del_name>`` as a new snapshot
+        on top of ``meta``, the metadata read at ``read_version``:
+        positional (content=1) or, with ``equality_cols``, equality
+        (content=2).  Its manifest ``record_count`` is the file's row
+        count off its footer.  Raises :class:`ConcurrentCommitError`
+        when another commit won the next version — the tombstones were
+        computed against the snapshot read.  Returns the snapshot id."""
+        import pyarrow.parquet as pq
+
+        del_path = os.path.join(self.data_dir, del_name)
+        n_del = pq.read_metadata(del_path).num_rows
         snap_id = len(meta["snapshots"]) + 1
         manifest_name = f"m-{uuid.uuid4().hex[:12]}.avro"
         manifest_path = os.path.join(self.meta_dir, manifest_name)
@@ -1497,10 +1360,9 @@ class IcebergTable:
                     "file_path": f"data/{del_name}",
                     "file_format": "PARQUET",
                     "record_count": n_del,
-                    "file_size_in_bytes": os.path.getsize(
-                        os.path.join(self.data_dir, del_name)),
-                    "content": 1,
-                    "equality_cols": "",
+                    "file_size_in_bytes": os.path.getsize(del_path),
+                    "content": 2 if equality_cols else 1,
+                    "equality_cols": ",".join(equality_cols or []),
                     "lower_bounds_json": "",
                     "upper_bounds_json": "",
                     "null_counts_json": "",
@@ -1702,7 +1564,12 @@ class IcebergTable:
         guard fails loudly rather than silently collecting a table).
         Returns {"delete_snapshot", "append_snapshot", "rows_updated",
         "rows_deleted", "rows_inserted"}."""
+        import datetime
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType, TimestampType
 
         if not isinstance(on, str):
             raise NotImplementedError(
@@ -1712,110 +1579,106 @@ class IcebergTable:
             raise ValueError(f"when_matched {when_matched!r}")
         if when_not_matched not in ("insert", "ignore"):
             raise ValueError(f"when_not_matched {when_not_matched!r}")
-        # schema check straight off the table metadata (r11): building
-        # the merge-on-read frame just for .columns paid the tombstone
-        # load + broadcast construction per merge call
+        ts = int(now_ms if now_ms is not None else time.time() * 1000)
+        # the tombstones are computed against this version's snapshot;
+        # the delete commit publishes its successor or raises
+        read_version = self._current_version()
         meta = self._load_metadata()
         cur_cols = [f["name"] for f in meta["schema"]["fields"]]
         if set(source.columns) != set(cur_cols):
             raise ValueError(
                 f"merge source must carry the target schema "
                 f"{sorted(cur_cols)}, got {sorted(source.columns)}")
-        # r11 (guide §6, VERDICT r10 item 2): the matched-key stats and
-        # the insert/update joins only need target keys that SOME source
-        # key could equal, so the keys projection scans only the files
-        # file_stats.candidate_files keeps (None: every file).  Merge-
-        # on-read stays exact: read(paths_subset=...) applies the delete
-        # files as usual, and pruned-away files hold no key equal to any
-        # source key.  The delete scan got the same treatment in r10
-        # (prune_keys below).  Evolved tables (renamed bounds keys)
-        # skip pruning.
-        src_keys = (
-            source.groupBy(on).agg(F.count(F.lit(1)).alias("__c"))
-            .persist()
+        # ONE discovery collect: the source's per-key row counts join
+        # the live target rows that hold a source key, and re-grouping
+        # by ``matched ? key : NULL`` returns per matched key its source
+        # multiplicity and its (file_path, pos) tombstones, while every
+        # unmatched source key (NULL keys included: NULL matches
+        # nothing) folds into one NULL-group row whose summed count is
+        # the insert row count — max_keys + 2 rows bound the collect,
+        # the matched target rows bound the tombstones.  The target scan
+        # covers only the files file_stats.candidate_files keeps (None:
+        # every file): a pruned file holds no key equal to a source key,
+        # so MERGE stays O(touched files).  Evolved tables (renamed
+        # bounds keys) skip pruning.
+        src_keys = source.groupBy(on).agg(F.count(F.lit(1)).alias("__c"))
+        hit = None
+        if len(meta.get("schemas", [])) <= 1:
+            hit = candidate_files(src_keys, on, {
+                e["file_path"]: _entry_bounds(e, on)[:2]
+                for e in self._data_file_entries()})
+        tgt, rel, pos = self._scan(spark, paths_subset=hit, positions=True)
+        matched = F.col(pos).isNotNull()
+        stats = (
+            src_keys.join(tgt.select(on, rel, pos), on, "left")
+            .groupBy(F.when(matched, F.col(on)).alias("__k"))
+            .agg(F.sum("__c").alias("__rows"),
+                 # one source count per target row of a matched key
+                 F.max("__c").alias("__c"),
+                 F.collect_list(F.when(matched, F.struct(rel, pos)))
+                 .alias("__t"))
+            .limit(max_keys + 2)
+            .collect()
         )
-        tgt_keys = None
-        try:
-            hit = None
-            if len(meta.get("schemas", [])) <= 1:
-                hit = candidate_files(src_keys, on, {
-                    e["file_path"]: _entry_bounds(e, on)[:2]
-                    for e in self._data_file_entries()})
-            tgt_keys = (self.read(spark) if hit is None
-                        else self.read(spark, paths_subset=hit)
-                        ).select(on).distinct().persist()
-            # ONE bounded collect yields the matched key list, each
-            # matched key's source multiplicity AND the unmatched
-            # source row count (r10 guide §1.2: previously three jobs —
-            # matched-keys collect, duplicate-check count, inserts
-            # count).  Source keys group to per-key counts; a left join
-            # marks target membership; re-grouping by
-            # ``matched ? key : NULL`` collapses every unmatched key
-            # into one NULL-group row whose summed count is exactly the
-            # insert row count, so the collect stays bounded by
-            # max_keys + 1 rows.
-            per_key = src_keys.join(
-                tgt_keys.withColumn("__m", F.lit(1)), on, "left")
-            stats = (
-                per_key.groupBy(
-                    F.when(F.col("__m") == 1, F.col(on)).alias("__k"))
-                .agg(F.sum("__c").alias("__c"))
-                .limit(max_keys + 2)
-                .collect()
-            )
-            keys = [r["__k"] for r in stats if r["__k"] is not None]
-            if len(keys) > max_keys:
-                raise ValueError(
-                    f"merge batch has more than max_keys={max_keys} "
-                    f"matched keys; split the batch (the key list is "
-                    f"driver-bounded by design)")
-            n_keys = len(keys)
-            n_upd = sum(
-                int(r["__c"]) for r in stats if r["__k"] is not None)
-            n_ins = sum(
-                int(r["__c"]) for r in stats if r["__k"] is None)
-            if when_not_matched != "insert":
-                n_ins = 0
-            if keys and when_matched == "update" and n_upd > n_keys:
-                # multiple source rows per matched key would append
-                # duplicate update images while the positional delete
-                # removes only the old copies — raise, matching
-                # Spark/Delta MERGE's multiple-match error (ADVICE r09)
-                raise ValueError(
-                    f"MERGE source has multiple rows for a matched "
-                    f"key ({n_upd} update images for {n_keys} "
-                    f"distinct keys); deduplicate the source on "
-                    f"{on!r} first")
-            delete_snap = -1
-            if keys and when_matched != "ignore":
-                in_list = ", ".join(_sql_literal(k) for k in keys)
-                # prune_keys: the IN predicate can only match rows
-                # whose key is in the list, so delete_where skips data
-                # files whose manifest bounds exclude every key — the
-                # O(touched files) scan a MERGE needs at scale (r10)
-                delete_snap = self.delete_where(
-                    spark, f"{on} IN ({in_list})", now_ms=now_ms,
-                    prune_keys=(on, keys))
-            append_snap = -1
-            if n_ins > 0 or (keys and when_matched == "update"):
-                if when_not_matched == "ignore":
-                    # semi-join against the persisted target keys:
-                    # source rows with a matched key ARE the update images
-                    to_append = source.join(tgt_keys, on, "left_semi")
-                elif when_matched == "update":
-                    # upsert: every source row is an insert (no target
-                    # key, NULL keys included) or an update image, so
-                    # the append is the source itself
-                    to_append = source
-                else:
-                    to_append = source.join(tgt_keys, on, "left_anti")
-                append_snap = self.write(
-                    to_append, mode="append",
-                    now_ms=None if now_ms is None else now_ms + 1)
-        finally:
-            src_keys.unpersist()
-            if tgt_keys is not None:
-                tgt_keys.unpersist()
+        hits = [r for r in stats if r["__k"] is not None]
+        if len(hits) > max_keys:
+            raise ValueError(
+                f"merge batch has more than max_keys={max_keys} "
+                f"matched keys; split the batch (the key list is "
+                f"driver-bounded by design)")
+        n_keys = len(hits)
+        n_upd = sum(int(r["__c"]) for r in hits)
+        n_ins = sum(int(r["__rows"]) for r in stats if r["__k"] is None)
+        if when_not_matched != "insert":
+            n_ins = 0
+        if hits and when_matched == "update" and n_upd > n_keys:
+            # multiple source rows per matched key would append
+            # duplicate update images while the positional delete
+            # removes only the old copies — raise, matching
+            # Spark/Delta MERGE's multiple-match error (ADVICE r09)
+            raise ValueError(
+                f"MERGE source has multiple rows for a matched "
+                f"key ({n_upd} update images for {n_keys} "
+                f"distinct keys); deduplicate the source on "
+                f"{on!r} first")
+        delete_snap = -1
+        if hits and when_matched != "ignore":
+            # the tombstones are already on the driver: write the spec-
+            # sorted delete file with pyarrow, no second target scan
+            tombs = [t for r in hits for t in r["__t"]]
+            table = pa.table({
+                "file_path": pa.array([t[0] for t in tombs], pa.string()),
+                "pos": pa.array([t[1] for t in tombs], pa.int64()),
+            }).sort_by([("file_path", "ascending"), ("pos", "ascending")])
+            del_name = f"delete-{uuid.uuid4().hex[:12]}.parquet"
+            pq.write_table(table, os.path.join(self.data_dir, del_name))
+            delete_snap = self._commit_delete_file(
+                meta, read_version, del_name, ts)
+        append_snap = -1
+        if n_ins > 0 or (hits and when_matched == "update"):
+            if when_matched == "update" and when_not_matched == "insert":
+                # upsert: every source row is an insert (no target
+                # key, NULL keys included) or an update image, so
+                # the append is the source itself
+                to_append = source
+            else:
+                # the matched keys as a local frame: a semi-join keeps
+                # the update images, an anti-join the inserts.  A naive
+                # collected timestamp is local wall time; pinning it to
+                # UTC keeps the instant across a DST fold
+                key_field = source.schema[on]
+                keys = [r["__k"] for r in hits]
+                if isinstance(key_field.dataType, TimestampType):
+                    keys = [k.astimezone(datetime.timezone.utc)
+                            for k in keys]
+                key_df = spark.createDataFrame(
+                    [(k,) for k in keys], StructType([key_field]))
+                to_append = source.join(
+                    key_df, on, "left_semi" if when_not_matched == "ignore"
+                    else "left_anti")
+            append_snap = self.write(
+                to_append, mode="append",
+                now_ms=None if now_ms is None else now_ms + 1)
         return {
             "delete_snapshot": delete_snap,
             "append_snapshot": append_snap,

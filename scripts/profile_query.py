@@ -1,5 +1,7 @@
-"""Profile one declared query: wall time (noop sink), optional cProfile of
-the driver-side python, optional .explain("formatted") capture.
+"""Profile one declared query: wall time (noop sink), the generated
+classes Janino compiled and its compile ms per rep (a warm rep compiles
+none unless the codegen cache evicts), optional cProfile of the
+driver-side python, optional .explain("formatted") capture.
 
 Usage:
     python scripts/profile_query.py q422_parquet_decimal [--profile] \
@@ -21,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from pr2_transformation_spark.session import build_session
+from pr2_transformation_spark.session import build_session, codegen_counters
 
 
 def main() -> None:
@@ -47,6 +49,7 @@ def main() -> None:
     spark.sparkContext.setJobDescription(args.query)
 
     for rep in range(args.reps):
+        n0, ms0 = codegen_counters(spark)
         if args.profile and rep == args.reps - 1:
             pr = cProfile.Profile()
             pr.enable()
@@ -61,7 +64,9 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.perf_counter() - t0
-        print(f"{args.query} rep{rep}: {dt:.3f}s", flush=True)
+        n1, ms1 = codegen_counters(spark)
+        print(f"{args.query} rep{rep}: {dt:.3f}s compiled {n1 - n0} classes "
+              f"in {ms1 - ms0:.0f} ms", flush=True)
 
     if args.explain:
         os.makedirs(os.path.dirname(args.explain), exist_ok=True)

@@ -5,8 +5,8 @@ row count.
 
 A. Iceberg MERGE matched-key STATS scan (r11): candidate files actually
    listed by the bounds-pruned keys projection vs total live files, and
-   merge wall.  (The r10 probe covered the delete scan; this round made
-   the stats/insert joins O(touched files) too.)
+   merge wall.  The discovery scan also yields the tombstones, so it is
+   the merge's only target scan.
 B. Iceberg hash-clustered partitioned write (r10 claim): wall, total
    data files, and max files per partition dir — hash distribution must
    keep files == O(distinct partitions), never O(tasks x partitions).
@@ -58,16 +58,16 @@ def probe_merge_stats(spark, sf_dir: str, mult: int) -> None:
     n_files = 16 * mult
     scratch = tempfile.mkdtemp(prefix="sg_r11_mergestats_")
     seen = {"subset": None, "total": None}
-    orig_read = IcebergTable.read
+    orig_scan = IcebergTable._scan
     orig_parquet = None
 
     def spy(self, spark_, snapshot_id=None, skipping=None,
-            paths_subset=None):
+            paths_subset=None, **kw):
         if paths_subset is not None:
             seen["subset"] = len(paths_subset)
             seen["total"] = len(self._data_file_entries())
-        return orig_read(self, spark_, snapshot_id=snapshot_id,
-                         skipping=skipping, paths_subset=paths_subset)
+        return orig_scan(self, spark_, snapshot_id=snapshot_id,
+                         skipping=skipping, paths_subset=paths_subset, **kw)
 
     try:
         t = IcebergTable(os.path.join(scratch, "t"))
@@ -80,9 +80,8 @@ def probe_merge_stats(spark, sf_dir: str, mult: int) -> None:
             .select("okey", (F.col("cents") + 7).alias("cents"),
                     "o_orderstatus")
         # additionally count the file-path fan-in of every parquet scan
-        # the merge plans (the delete pass's prune_keys observable —
-        # r10's probe recomputed the prune math; this measures the
-        # SHIPPED path after the r11 guard fix)
+        # the merge plans: the one discovery scan lists only the
+        # candidate files
         from pyspark.sql.readwriter import DataFrameReader
 
         orig_parquet = DataFrameReader.parquet
@@ -92,7 +91,7 @@ def probe_merge_stats(spark, sf_dir: str, mult: int) -> None:
             scan_sizes.append(len(paths))
             return orig_parquet(self_, *paths, **kw)
 
-        IcebergTable.read = spy
+        IcebergTable._scan = spy
         DataFrameReader.parquet = pspy
         t0 = time.perf_counter()
         t.merge(spark, src, on="okey", now_ms=2_000)
@@ -102,7 +101,7 @@ def probe_merge_stats(spark, sf_dir: str, mult: int) -> None:
               f"scan fan-ins={sorted(scan_sizes, reverse=True)[:4]} "
               f"merge wall={wall:.2f}s")
     finally:
-        IcebergTable.read = orig_read
+        IcebergTable._scan = orig_scan
         if orig_parquet is not None:
             from pyspark.sql.readwriter import DataFrameReader as _DFR
             _DFR.parquet = orig_parquet

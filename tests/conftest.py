@@ -1,4 +1,5 @@
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -48,5 +49,26 @@ def py4j_calls(spark, monkeypatch):
         before = sent.get(thread, 0)
         fn(*args, **kwargs)
         return sent.get(thread, 0) - before
+
+    return measure
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn, *args, **kwargs)`` runs ``fn`` under a job group
+    of its own and returns how many Spark jobs it submitted."""
+    sc = spark.sparkContext
+
+    def measure(fn, *args, **kwargs):
+        # the tracker keeps a group's jobs for the whole session: a
+        # fresh name per call counts only this call's
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return measure

@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 from pr2_transformation_spark.sources import delta as delta_mod
 from pr2_transformation_spark.sources import iceberg as iceberg_mod
 from pr2_transformation_spark.sources.delta import DeltaTable
-from pr2_transformation_spark.sources.file_stats import (any_key_within,
-                                                         may_contain)
+from pr2_transformation_spark.sources.file_stats import may_contain
 from pr2_transformation_spark.sources.iceberg import IcebergTable
 
 
@@ -34,16 +33,6 @@ def test_may_contain_prunes_only_on_proof():
     assert may_contain(10, 20, "!=", 15)
     # an all-NULL column without bounds matches no comparison
     assert not may_contain(None, None, "=", 1, all_null=True)
-
-
-def test_any_key_within_bisects_sorted_keys():
-    keys = [3, 8, 15]
-    assert any_key_within(keys, 4, 8)
-    assert not any_key_within(keys, 9, 14)
-    assert not any_key_within(keys, 16, 99)
-    assert any_key_within(keys, None, 5)
-    assert any_key_within(keys, "a", "z")   # incomparable: keep
-    assert not any_key_within([], 0, 1)
 
 
 def test_nan_bounds_keep_the_orc_stripe():

@@ -711,35 +711,127 @@ def test_refs_pin_snapshots(spark, tmp_path):
         t.create_ref("x", snapshot_id=99)
 
 
-def test_delete_where_prune_keys_equivalent(spark, tmp_path):
-    """MERGE's prune_keys hint: delete_where skips data files whose
-    manifest bounds exclude every key, and the tombstone set (and so
-    the surviving rows) is IDENTICAL to the unhinted run (r10)."""
-    ta = IcebergTable(str(tmp_path / "a"))
-    tb = IcebergTable(str(tmp_path / "b"))
-    df = spark.range(1000).selectExpr("id as k", "id * 10 as v") \
-        .repartitionByRange(8, "k").sortWithinPartitions("k")
-    ta.write(df, mode="overwrite", now_ms=1000)
-    tb.write(df, mode="overwrite", now_ms=1000)
-    keys = [100, 101, 102, 903]
-    pred = "k IN (100, 101, 102, 903)"
-    sa = ta.delete_where(spark, pred, now_ms=2000)
-    sb = tb.delete_where(spark, pred, now_ms=2000,
-                         prune_keys=("k", keys))
-    assert sa == sb
-    rows_a = sorted(r["k"] for r in ta.read(spark).collect())
-    rows_b = sorted(r["k"] for r in tb.read(spark).collect())
-    assert rows_a == rows_b and len(rows_b) == 996
-    # the hint really prunes: only the two files whose bounds cover
-    # {100..102} and {903} may hold keys (bounds are tight: range
-    # partitions), and the entries carry bounds for k
-    ents = tb._data_file_entries(snapshot_id=1)
-    lo_hi = [(json.loads(e["lower_bounds_json"])["k"],
-              json.loads(e["upper_bounds_json"])["k"]) for e in ents]
-    may = [1 for lo, hi in lo_hi
-           if any(lo <= k <= hi for k in keys)]
-    assert 1 <= len(may) <= 3 < len(ents)
-    # all-pruned key set still commits (falls back to the full scan)
-    sc = tb.delete_where(spark, "k IN (999999)", now_ms=3000,
-                         prune_keys=("k", [999999]))
-    assert sc == sb + 1 and tb.read(spark).count() == 996
+#: jobs an upsert plus a delete-mode merge submit on an 8-file table at
+#: local[4] with AQE on: each merge is one discovery collect and, for the
+#: upsert, one append (20 when the delete pass scanned the target again)
+MERGE_JOB_BUDGET = 12
+
+
+def _range_table(spark, path):
+    t = IcebergTable(path)
+    t.write(spark.range(1000).selectExpr("id as k", "id * 10 as v")
+            .repartitionByRange(8, "k").sortWithinPartitions("k"),
+            mode="overwrite", now_ms=1000)
+    return t
+
+
+def _delete_file_entries(t):
+    """The current snapshot's delete-file manifest entries."""
+    meta = t._load_metadata()
+    snap = next(s for s in meta["snapshots"]
+                if s["snapshot-id"] == meta["current-snapshot-id"])
+    _, manifests = avro_read(open(os.path.join(
+        t.path, snap["manifest-list"]), "rb").read())
+    out = []
+    for m in manifests:
+        if m["content"] == 1:
+            _, rows = avro_read(open(os.path.join(
+                t.path, m["manifest_path"]), "rb").read())
+            out += [r["data_file"] for r in rows]
+    return out
+
+
+def test_merge_job_budget(spark, tmp_path, spark_jobs):
+    """An upsert then a delete-mode merge submit a fixed number of jobs,
+    at most MERGE_JOB_BUDGET: the delete pass reuses the discovery
+    scan's tombstones instead of scanning the target again."""
+    def merges(rep):
+        t = _range_table(spark, str(tmp_path / f"t{rep}"))
+        t.merge(spark, spark.range(100, 110).selectExpr(
+            "id as k", "id as v").union(spark.range(5000, 5003).selectExpr(
+                "id as k", "id as v")), on="k", now_ms=2000)
+        t.merge(spark, spark.range(500, 520).selectExpr(
+            "id as k", "id as v"), on="k", when_matched="delete",
+            when_not_matched="ignore", now_ms=4000)
+
+    counts = [spark_jobs(merges, rep) for rep in range(2)]
+    assert counts[0] == counts[1] and counts[0] <= MERGE_JOB_BUDGET, counts
+
+
+def test_merge_tombstones_every_row_of_a_duplicate_target_key(spark,
+                                                              tmp_path):
+    """A target key held by two rows in two files: both rows are
+    tombstoned and the one source row is appended as the update image."""
+    t = IcebergTable(str(tmp_path / "dup"))
+    t.write(spark.range(5).selectExpr("id as k", "id * 10 as v"),
+            mode="overwrite", now_ms=1000)
+    t.write(spark.createDataFrame([(2, 21)], "k long, v long"),
+            mode="append", now_ms=2000)
+    res = t.merge(spark, spark.createDataFrame([(2, 99)], "k long, v long"),
+                  on="k", now_ms=3000)
+    assert res["rows_updated"] == 1 and res["rows_inserted"] == 0
+    [entry] = _delete_file_entries(t)
+    assert entry["record_count"] == 2
+    got = sorted((r["k"], r["v"]) for r in t.read(spark).collect())
+    assert got == [(0, 0), (1, 10), (2, 99), (3, 30), (4, 40)]
+
+
+def test_merge_delete_file_is_sorted_and_pinned(spark, tmp_path):
+    """The merge's delete file is sorted by (file_path, pos), reads with
+    the pinned schema ``file_path string, pos long``, and its manifest
+    record_count is its row count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = _range_table(spark, str(tmp_path / "t"))
+    keys = [3, 130, 131, 520, 521, 522, 990]
+    src = spark.createDataFrame([(k, -k) for k in reversed(keys)],
+                                "k long, v long")
+    t.merge(spark, src, on="k", now_ms=2000)
+    [entry] = _delete_file_entries(t)
+    path = os.path.join(t.path, entry["file_path"])
+    table = pq.read_table(path)
+    assert table.schema.names == ["file_path", "pos"]
+    assert [f.type for f in table.schema] == [pa.string(), pa.int64()]
+    rows = list(zip(table["file_path"].to_pylist(),
+                    table["pos"].to_pylist()))
+    assert rows == sorted(rows) and len(set(rows)) == len(keys)
+    assert entry["record_count"] == table.num_rows == len(keys)
+    pinned = spark.read.schema("file_path string, pos long").parquet(path)
+    assert sorted(tuple(r) for r in pinned.collect()) == rows
+    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert len(got) == 1000 and all(got[k] == -k for k in keys)
+
+
+def test_merge_insert_only_keeps_timestamp_keys_across_a_dst_fold(
+        spark, tmp_path):
+    """An insert-only merge sends the matched keys back to Spark as a
+    local frame.  Two timestamp keys in the repeated hour of a DST
+    fall-back read back as the same local wall time; each must still
+    match its own target row, or its source row is appended again."""
+    import time
+
+    fold = 1636273800  # 2021-11-07 01:30 PDT; +3600 s is 01:30 PST
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        t = IcebergTable(str(tmp_path / "tz"))
+        t.write(spark.createDataFrame(
+            [(fold, 1), (fold + 3600, 2)], "s long, v long").selectExpr(
+            "timestamp_seconds(s) AS k", "v"), now_ms=1000)
+        src = spark.createDataFrame(
+            [(fold, -1), (fold + 3600, -2), (fold + 7200, 3)],
+            "s long, v long").selectExpr("timestamp_seconds(s) AS k", "v")
+        res = t.merge(spark, src, on="k", when_matched="ignore",
+                      now_ms=2000)
+        got = sorted((r["s"], r["v"]) for r in t.read(spark).selectExpr(
+            "unix_seconds(k) AS s", "v").collect())
+    finally:
+        if prev is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+    assert res["rows_inserted"] == 1
+    assert got == [(fold, 1), (fold + 3600, 2), (fold + 7200, 3)]

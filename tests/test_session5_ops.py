@@ -109,22 +109,11 @@ def test_kcore_matches_duckdb_oracle(spark):
 KCORE_JOB_BUDGET = 34
 
 
-def test_kcore_job_budget(spark):
+def test_kcore_job_budget(spark, spark_jobs):
     """One q304 execution submits at most KCORE_JOB_BUDGET jobs, and the
     same number on a second run."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    counts = []
-    try:
-        for rep in range(2):
-            group = f"kcore-job-budget-{rep}"
-            sc.setJobGroup(group, group)
-            e.q304_kcore_peeling(spark, SF).collect()
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            bus.waitUntilEmpty(30_000)
-            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    counts = [spark_jobs(lambda: e.q304_kcore_peeling(spark, SF).collect())
+              for _ in range(2)]
     assert counts[0] == counts[1] and counts[0] <= KCORE_JOB_BUDGET, counts
 
 
