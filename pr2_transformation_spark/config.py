@@ -230,8 +230,3 @@ SENSITIVE_TIER_COLUMNS = [
     "d_878865966", "d_684635302", "d_167958071", "d_949302066", "d_536735468",
     "d_663265240", "d_976570371",
 ]
-
-#: Detection batch sizes — mirror the reference's query-size bounds; in Spark
-#: they bound per-aggregation expression counts (codegen stays happy).
-BINARY_DETECTION_BATCH = 500
-FALSE_ARRAY_DETECTION_BATCH = 100

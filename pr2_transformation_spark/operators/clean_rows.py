@@ -1,21 +1,22 @@
 """`clean_rows` — value recoding driven by data profiling.
 
 Pipeline (parity: /root/reference/core/transformations.py:654-773):
-  1. profile the table: binary columns (one aggregation job per
-     ``config.BINARY_DETECTION_BATCH`` columns — ceil(N/500) scans, the same
-     count as the reference's BigQuery batches) and false-array columns
-     (name-match fast path by default — zero scans; computational mode
-     shares each batch's job with the binary flags);
+  1. profile the table: binary columns (one unpivoted aggregation scan at
+     any width, where the reference runs ceil(N/500) BigQuery batches) and
+     false-array columns (name-match fast path by default — zero scans;
+     computational mode shares the binary detector's scan);
   2. partition columns into binary / false-array / pass-through;
   3. compose one projection: binary CASE recode (sorted), false-array unwrap
      CASE (sorted), pass-through (sorted);
   4. duplicate-name guard, SQL audit, overwrite write.
 
-Scale: ceil(N/500) profiling scans plus one rewrite scan of the table; all
-are full-width sequential parquet reads with whole-stage-codegen'd
-expressions — no shuffle anywhere.  Driver side, each profiling batch is
-one ``selectExpr`` call of SQL text whose Py4J round trips do not grow
-with the batch's width (see :mod:`..profiling`).
+Scale: one profiling scan plus one rewrite scan of the table.  The
+profiling scan unpivots each row into (column position, cell) pairs and
+aggregates them by position, so its aggregates stay whole-stage-codegen'd
+and its shuffle is one partial row per column per task; the rewrite is a
+full-width sequential parquet read with no shuffle.  Driver side, the
+profiling plan is SQL text whose Py4J round trips do not grow with the
+table's width (see :mod:`..profiling`).
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ def compose_clean_rows(
             )
         )
     else:
-        # computational mode: both detectors share each batch's aggregation scan
+        # computational mode: both detectors share one aggregation scan
         b, fa = profiling.profile_columns(df)
         binary, false_arrays = set(b), set(fa)
     return compose_recoding(all_columns, binary, false_arrays)

@@ -3,25 +3,23 @@
 The reference runs these as batched BigQuery jobs — ceil(N/500) full scans
 for binary detection (/root/reference/core/utils.py:375-435) and *three
 scalar subqueries per column* (≈3N table scans) for strict false-array
-detection (reference core/utils.py:582-698).  Here every per-column
-check is one aggregate written as Spark-SQL text, and one aggregation pass
-classifies a whole batch of columns at once — strict false-array detection
-drops from ≈3N scans to ceil(N/100).
+detection (reference core/utils.py:582-698).  Here every string-column
+detector is one unpivoted scan at any width: each row's cells, cast to
+STRING, become ``posexplode(array(<cells>)) AS (i, v)`` rows, and one
+``groupBy(i)`` evaluates the detector's conditional counts over ``v``.
 
-Cost model, per batch: the batch's fragments are joined into one
-``array(...)`` expression and run as one ``df.selectExpr(...).first()`` —
-one ``selectExpr`` call to plan it, one job and one scan to evaluate it.
-The number of Py4J round trips (about a dozen per batch) does not depend
-on how many columns the batch holds:
-no pyspark ``Column`` is built per column (each ``F.col``, operator and
-``alias`` would be its own round trip, ~150 per column), and the single
-fragment also avoids pyspark's list conversion, which ships a list of N
-strings as N ``ArrayList.add`` calls.  Every identifier goes through
-:func:`expressions.q`, so dotted and backtick-bearing names are safe.
-
-Batches (config.*_BATCH) keep ultra-wide tables (~4k survey columns -> ~12k
-aggregates) from pushing whole-stage codegen into fallback.  Each batch is
-its own job and scan; nothing is cached between batches.
+Cost model: one scan and two jobs (the partial aggregate and its
+N-key result) whatever the width.  Only the scan is as wide as the
+table; the ``Generate`` and both ``HashAggregate``s carry 2–5 fields, so
+they stay inside whole-stage codegen, where one aggregate per column
+would pass ``spark.sql.codegen.maxFields`` and run interpreted.  The
+shuffle is N keys per task, not N × rows: the partial aggregate runs
+before it.  Driver side, the cells and the counts are each one SQL
+``array(...)``, so the Py4J round trips (about a dozen) do not depend on
+the width: no pyspark ``Column`` is built per column, and no Python list
+of N strings is shipped as N ``ArrayList.add`` calls.  Every identifier
+goes through :func:`expressions.q`, so dotted and backtick-bearing names
+are safe.
 """
 
 from __future__ import annotations
@@ -43,37 +41,44 @@ def string_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
 
 
-def _chunks(xs: list, size: int):
-    for i in range(0, len(xs), size):
-        yield xs[i : i + size]
-
-
 def _aggregate(df: DataFrame, fragments: list[str]) -> list:
     """Values of the aggregate SQL ``fragments`` over ``df``, in order: one
     ``selectExpr`` call of one ``array(...)`` fragment, one job."""
     return df.selectExpr(f"array({', '.join(fragments)})").first()[0]
 
 
-def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATCH) -> list[str]:
+def _cell_counts(df: DataFrame, names: list[str], counts: list[str]) -> list[list[int]]:
+    """Per column of ``names``, in order, the conditional counts ``counts``
+    (SQL over the cell ``v``), from one unpivoted scan.  A column with no
+    cells — a zero-row table — reads all-zero."""
+    if not names:
+        return []
+    cells = ", ".join(f"CAST({q(name)} AS STRING)" for name in names)
+    found = dict(
+        df.selectExpr(f"array({cells}) AS cells")
+        .selectExpr("posexplode(cells) AS (i, v)")
+        .groupBy("i")
+        .agg(F.expr(f"array({', '.join(counts)})"))
+        .collect()
+    )
+    zeros = [0] * len(counts)
+    return [found.get(i, zeros) for i in range(len(names))]
+
+
+#: Cells that rule a column out of "binary": the column is binary iff 0.
+_NON_BINARY_COUNT = "count_if(NOT (v = '0' OR v = '1' OR v IS NULL OR v = ''))"
+
+
+def binary_columns(df: DataFrame) -> list[str]:
     """STRING columns whose every value is "0", "1", "" or NULL.
 
     Reference semantics (/root/reference/core/utils.py:406-408):
     ``COUNTIF(NOT (c="0" OR c="1" OR c IS NULL OR c="")) = 0`` — note an
-    all-NULL column therefore *is* binary.  One aggregation scan per
-    ``batch_size`` columns, like the reference's batches; returns names in
-    input-schema order.
+    all-NULL column, and every column of a zero-row table, therefore *is*
+    binary.  Returns names in input-schema order.
     """
-    found: list[str] = []
-    for batch in _chunks(string_columns(df), batch_size):
-        flags = _aggregate(df, [_binary_flag(name) for name in batch])
-        found.extend(name for name, flag in zip(batch, flags) if flag)
-    return found
-
-
-def _binary_flag(name: str) -> str:
-    """Aggregate SQL deciding the binary check for ``name``."""
-    c = q(name)
-    return f"count_if(NOT ({c} = '0' OR {c} = '1' OR {c} IS NULL OR {c} = '')) = 0"
+    names = string_columns(df)
+    return [n for n, c in zip(names, _cell_counts(df, names, [_NON_BINARY_COUNT])) if c[0] == 0]
 
 
 def false_array_columns_from_reference(
@@ -106,7 +111,6 @@ def false_array_columns_from_reference(
 
 def strict_false_array_columns(
     df: DataFrame,
-    batch_size: int = config.FALSE_ARRAY_DETECTION_BATCH,
     use_reference: bool = False,
     reference_file_path: Optional[str] = None,
 ) -> list[str]:
@@ -115,82 +119,64 @@ def strict_false_array_columns(
 
     Computational mode checks, per column (parity with
     /root/reference/core/utils.py:644-678, collapsed from 3 scalar
-    subqueries/column into aggregates on one scan):
+    subqueries/column into conditional counts on one scan):
 
       1. 1 <= COUNT(DISTINCT c) <= 3  (some non-null value, few distincts);
       2. no non-null value outside ``config.FALSE_ARRAY_VALUES``;
       3. at most one distinct value matching ``[<9 digits>]``.
+
+    Columns of any type are checked on their STRING cast.
     """
     cols = [c for c in df.columns if c != "Connect_ID"]
     if use_reference:
         return false_array_columns_from_reference(cols, reference_file_path)
-
-    found: list[str] = []
-    for batch in _chunks(cols, batch_size):
-        flags = _aggregate(df, [_false_array_flag(name) for name in batch])
-        found.extend(name for name, flag in zip(batch, flags) if flag)
-    return found
+    counts = _cell_counts(df, cols, _false_array_counts())
+    return [n for n, c in zip(cols, counts) if _is_false_array(c)]
 
 
-def _false_array_flag(name: str) -> str:
-    """Aggregate SQL deciding the strict false-array checks for ``name``.
+def _false_array_counts() -> list[str]:
+    """Counts deciding the strict false-array checks: cells outside
+    ``config.FALSE_ARRAY_VALUES``, non-null cells, then one count per
+    bracketed domain value.
 
     Equivalent to the reference's three checks but **distinct-free**: under
     check 2 every non-null value lies in ``config.FALSE_ARRAY_VALUES`` (3
     values), so COUNT(DISTINCT c) BETWEEN 1 AND 3 collapses to "some
     non-null exists", and "<=1 distinct bracketed CID" collapses to "at
-    most one of the bracketed domain values is present".  This matters at
-    scale: Spark rewrites multi-column COUNT(DISTINCT) aggregates with an
-    Expand operator that replicates every input row once per distinct
-    aggregate — 2 distincts x 100-column batches meant ~200x shuffle
-    amplification; presence flags keep the pass a plain one-shuffle-free
-    partial aggregation.
+    most one of the bracketed domain values is present".  So the pass is
+    a plain partial aggregation, with no Expand replicating rows per
+    distinct aggregate.
     """
-    c = q(name)
     allowed = ", ".join(f"'{v}'" for v in config.FALSE_ARRAY_VALUES)
-    n_bracketed_present = " + ".join(
-        f"CAST(count_if({c} = '{v}') > 0 AS INT)"
-        for v in config.FALSE_ARRAY_VALUES
-        if re.fullmatch(r"\[\d{9}\]", v)
-    ) or "0"
-    return (
-        f"count_if({c} IS NOT NULL AND NOT {c} IN ({allowed})) = 0"
-        f" AND count_if({c} IS NOT NULL) > 0"
-        f" AND ({n_bracketed_present}) <= 1"
-    )
+    return [
+        f"count_if(v IS NOT NULL AND NOT v IN ({allowed}))",
+        "count_if(v IS NOT NULL)",
+        *(f"count_if(v = '{v}')" for v in config.FALSE_ARRAY_VALUES
+          if re.fullmatch(r"\[\d{9}\]", v)),
+    ]
 
 
-def profile_columns(
-    df: DataFrame,
-    batch_size: int = config.BINARY_DETECTION_BATCH,
-) -> tuple[list[str], list[str]]:
-    """Binary AND strict-false-array classification in one scan per batch.
+def _is_false_array(counts: list[int]) -> bool:
+    outside, non_null, *bracketed = counts
+    return outside == 0 and non_null > 0 and sum(n > 0 for n in bracketed) <= 1
+
+
+def profile_columns(df: DataFrame) -> tuple[list[str], list[str]]:
+    """Binary AND strict-false-array classification in one scan.
 
     ``clean_rows`` needs both; running the detectors separately costs two
-    scans per batch.  Both flag families are plain conditional counts, so
-    each batch of columns shares one aggregation scan: at 100 TB this halves
-    the passes over the table.
+    scans, so both families of counts share one unpivoted scan.
 
     Returns ``(binary_cols, false_array_cols)`` in input-schema order.
     """
     str_cols = set(string_columns(df))
-    bin_found: list[str] = []
-    fa_found: list[str] = []
-    for batch in _chunks(list(df.columns), batch_size):
-        fragments, targets = [], []
-        for name in batch:
-            if name in str_cols:
-                fragments.append(_binary_flag(name))
-                targets.append((bin_found, name))
-            if name != "Connect_ID":
-                fragments.append(_false_array_flag(name))
-                targets.append((fa_found, name))
-        if not fragments:
-            continue
-        for (found, name), flag in zip(targets, _aggregate(df, fragments)):
-            if flag:
-                found.append(name)
-    return bin_found, fa_found
+    names = [n for n in df.columns if n in str_cols or n != "Connect_ID"]
+    counts = _cell_counts(df, names, [_NON_BINARY_COUNT, *_false_array_counts()])
+    binary = [n for n, c in zip(names, counts) if n in str_cols and c[0] == 0]
+    false_arrays = [
+        n for n, c in zip(names, counts) if n != "Connect_ID" and _is_false_array(c[1:])
+    ]
+    return binary, false_arrays
 
 
 def table_profile(df: DataFrame, columns: Optional[list[str]] = None) -> DataFrame:

@@ -1118,16 +1118,13 @@ class IcebergTable:
               snapshot_id: "int | None" = None,
               skipping: "list[tuple] | None" = None,
               paths_subset: "set[str] | None" = None,
-              positions: bool = False,
-              deletes: bool = True) -> "tuple[DataFrame, str, str]":
+              positions: bool = False) -> "tuple[DataFrame, str, str]":
         """:meth:`read`'s scan, returned as ``(frame, rel, pos)``.  With
         ``positions`` the frame also carries each row's data file
         relative to the table (``data/<name>``) as column ``rel`` and
         its ordinal within that file as column ``pos`` — the
         coordinates a positional-delete file records; both names are
-        uniquified against the table's columns.  ``deletes=False``
-        skips merge-on-read: every row of the chosen files, tombstoned
-        or not."""
+        uniquified against the table's columns."""
         from pyspark.sql import functions as F
 
         meta = self._load_metadata()
@@ -1169,7 +1166,7 @@ class IcebergTable:
                 return empty, c_rel, c_pos
             raise ValueError("empty snapshot")
         spark.catalog.refreshByPath(self.path)
-        dels = self._delete_entries(snapshot_id) if deletes else []
+        dels = self._delete_entries(snapshot_id)
 
         def scan_files(paths: "list[str]", ddl: str,
                        aliases: list) -> DataFrame:
@@ -1308,8 +1305,10 @@ class IcebergTable:
         read_version = self._current_version()
         meta = self._load_metadata()
         # the predicate references CURRENT names: _scan resolves evolved
-        # generations by field id and binds the positions at the scan
-        base, rel, pos = self._scan(spark, positions=True, deletes=False)
+        # generations by field id and binds the positions at the scan;
+        # it applies earlier deletes, so a row already tombstoned is not
+        # tombstoned again
+        base, rel, pos = self._scan(spark, positions=True)
         hits = base.filter(predicate).select(
             F.col(rel).alias("file_path"), F.col(pos).alias("pos"))
         # spec: delete files sorted by (file_path, pos).  The single

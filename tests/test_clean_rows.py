@@ -191,9 +191,9 @@ def test_detectors_on_dotted_and_backticked_names(spark):
 
 
 def test_profiling_py4j_calls_do_not_grow_with_width(spark, py4j_calls):
-    """Within one batch, ten times the columns costs (almost) no extra
-    driver-to-JVM round trips: the per-column aggregates are SQL text,
-    not pyspark Columns."""
+    """Ten times the columns costs (almost) no extra driver-to-JVM round
+    trips: the per-column cells and aggregates are SQL text, not pyspark
+    Columns."""
 
     def frame(width):
         return spark.range(8).selectExpr(
@@ -201,15 +201,91 @@ def test_profiling_py4j_calls_do_not_grow_with_width(spark, py4j_calls):
         )
 
     narrow, wide = frame(30), frame(300)
-    for fn, kwargs in [
-        (profiling.binary_columns, {"batch_size": 1000}),
-        (profiling.profile_columns, {"batch_size": 1000}),
-        (profiling.strict_false_array_columns, {"batch_size": 1000}),
-        (profiling.table_profile, {}),
+    for fn in [
+        profiling.binary_columns,
+        profiling.profile_columns,
+        profiling.strict_false_array_columns,
+        profiling.table_profile,
     ]:
-        fn(narrow, **kwargs)  # warm
-        extra = py4j_calls(fn, wide, **kwargs) - py4j_calls(fn, narrow, **kwargs)
+        fn(narrow)  # warm
+        extra = py4j_calls(fn, wide) - py4j_calls(fn, narrow)
         assert extra < 50, f"{fn.__name__}: {extra} more Py4J calls at 300 columns than at 30"
+
+
+def _wide_parquet(spark, tmp_path, width):
+    """An 8-row table of ``width`` STRING columns, read back from parquet
+    so the scan is as wide as a real survey table's."""
+    path = str(tmp_path / f"wide{width}")
+    spark.range(8).selectExpr(
+        "CAST(id AS STRING) AS Connect_ID",
+        *[f"CAST(id % {2 + i % 3} AS STRING) AS `d_{i}`" for i in range(width)],
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+_DETECTORS = [
+    profiling.binary_columns,
+    profiling.profile_columns,
+    profiling.strict_false_array_columns,
+]
+
+
+def test_profiling_jobs_do_not_grow_with_width(spark, spark_jobs, tmp_path):
+    """One unpivoted scan classifies every column: 600 columns submit as
+    many Spark jobs as 30."""
+    narrow, wide = _wide_parquet(spark, tmp_path, 30), _wide_parquet(spark, tmp_path, 600)
+    for fn in _DETECTORS:
+        fn(narrow)  # warm
+        assert spark_jobs(fn, wide) == spark_jobs(fn, narrow), fn.__name__
+
+
+def test_profiling_stays_whole_stage_codegen_when_wide(spark, tmp_path, monkeypatch):
+    """At 300 columns, past ``spark.sql.codegen.maxFields``, the final
+    plan still runs the unpivot and both aggregates inside whole-stage
+    codegen: only the scan is as wide as the table."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    df = _wide_parquet(spark, tmp_path, 300)
+    collected = []
+    collect = DataFrame.collect
+
+    def recording(self):
+        rows = collect(self)
+        collected.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    for fn in _DETECTORS:
+        collected.clear()
+        fn(df)
+        (plan,) = collected
+        final = plan.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, fn.__name__
+        assert re.search(r"\*\(\d+\) Generate posexplode", final), final
+        aggregates = [ln for ln in final.splitlines() if "HashAggregate" in ln]
+        assert len(aggregates) == 2 and all("*(" in ln for ln in aggregates), final
+
+
+def test_detectors_cast_non_string_cells(spark):
+    """Computational false-array detection checks a non-STRING column on
+    its STRING cast instead of failing on an ANSI cast of '[]'."""
+    df = spark.createDataFrame(
+        [("900000001", 1, "[]"), ("900000002", 2, "[178420302]"), ("900000003", None, None)],
+        "Connect_ID string, n int, s string",
+    )
+    assert profiling.strict_false_array_columns(df, use_reference=False) == ["s"]
+    assert profiling.profile_columns(df) == ([], ["s"])
+    assert profiling.binary_columns(df) == []
+
+
+def test_detectors_on_zero_rows(survey_values):
+    """A zero-row table has all-zero counts: every STRING column is
+    binary and no column is a false array."""
+    empty = survey_values.limit(0)
+    names = survey_values.columns
+    assert profiling.binary_columns(empty) == names
+    assert profiling.strict_false_array_columns(empty, use_reference=False) == []
+    assert profiling.profile_columns(empty) == (names, [])
 
 
 _DOMAIN = [None, "", "0", "1", " 1", "01", "x", "[]",

@@ -101,6 +101,33 @@ def test_positional_deletes_merge_on_read(spark, tmp_path):
     assert t._delete_files()  # content=1 manifests present
 
 
+def test_positional_delete_skips_rows_already_deleted(spark, tmp_path):
+    """A second delete_where tombstones only rows still live: its delete
+    file and its manifest counts hold the 2 new positions, not the 5
+    rows the first delete already removed."""
+    import pyarrow.parquet as pq
+
+    t = IcebergTable(str(tmp_path / "tbl"))
+    t.write(spark.range(0, 10).select(F.col("id").alias("k")).coalesce(1),
+            mode="overwrite", now_ms=1000)
+    t.delete_where(spark, "k < 5", now_ms=2000)
+    first = set(t._delete_files())
+    t.delete_where(spark, "k < 7", now_ms=3000)
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [7, 8, 9]
+
+    (second,) = set(t._delete_files()) - first
+    rows = pq.read_table(os.path.join(t.path, second)).to_pylist()
+    assert [r["pos"] for r in rows] == [5, 6]
+    meta = t._load_metadata()
+    snap = next(s for s in meta["snapshots"]
+                if s["snapshot-id"] == meta["current-snapshot-id"])
+    _, manifests = avro_read(open(os.path.join(t.path, snap["manifest-list"]), "rb").read())
+    (newest,) = [m for m in manifests if m["added_snapshot_id"] == snap["snapshot-id"]]
+    assert newest["added_rows_count"] == 2
+    _, entries = avro_read(open(os.path.join(t.path, newest["manifest_path"]), "rb").read())
+    assert [e["data_file"]["record_count"] for e in entries] == [2]
+
+
 def test_equality_deletes_sequence_scoped(spark, tmp_path):
     """Equality deletes tombstone by column value but ONLY against data
     files older than the delete: later appends matching the values

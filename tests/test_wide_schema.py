@@ -1,6 +1,6 @@
 """Ultra-wide schema posture (SURVEY.md §7.3 risk #5): survey tables run to
 ~4k columns; planning must stay driver-cheap and profiling must stay
-single-scan-per-chunk without codegen blowups."""
+one scan without codegen blowups."""
 
 from __future__ import annotations
 
@@ -46,10 +46,10 @@ def test_wide_clean_columns_planning_is_fast(spark):
     assert elapsed < 5.0, f"driver planning took {elapsed:.1f}s for 4k columns"
 
 
-def test_wide_profiling_single_pass_chunked(spark):
+def test_wide_profiling_single_pass(spark):
     df = _wide_frame(spark)
     t0 = time.perf_counter()
-    binary = profiling.binary_columns(df, batch_size=500)
+    binary = profiling.binary_columns(df)
     elapsed = time.perf_counter() - t0
     # every i%3==0 column is binary, nothing else
     assert len(binary) == sum(1 for i in range(N_COLS) if i % 3 == 0)
