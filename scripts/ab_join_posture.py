@@ -11,7 +11,8 @@ strictly interleaved (A,B,A,B,...) so slow environment drift cancels, with
 confs, so flipping them between executions changes the next plan only.
 
 Usage: python scripts/ab_join_posture.py [--reps 5] [queries...]
-Reads $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
+Reads $SPARK_GRAFT_SF_DIR; ``build_session`` reads $SPARK_GRAFT_CPUS
+(default: all cores).
 """
 from __future__ import annotations
 
@@ -54,10 +55,7 @@ def main() -> None:
     names = args.queries or DEFAULT_QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        "ab-join-posture", master=f"local[{cpus}]",
-        shuffle_partitions=max(int(cpus), 8))
+    spark = build_session("ab-join-posture")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 

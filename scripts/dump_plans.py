@@ -24,10 +24,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        "dump-plans", master=f"local[{cpus}]",
-        shuffle_partitions=max(int(cpus), 8))
+    spark = build_session("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

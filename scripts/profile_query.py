@@ -7,8 +7,8 @@ Usage:
     python scripts/profile_query.py q422_parquet_decimal [--profile] \
         [--explain plans/r10/q422_before.txt] [--reps 2]
 
-Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and
-$SPARK_GRAFT_CPUS (default 32) like bench.py.
+Reads $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data); ``build_session``
+reads $SPARK_GRAFT_CPUS (default: all cores).
 """
 from __future__ import annotations
 
@@ -35,12 +35,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        "profile-" + args.query,
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(int(cpus), 8),
-    )
+    spark = build_session("profile-" + args.query)
     spark.sparkContext.setLogLevel("ERROR")
     # JVM warmup, mirrors bench.py
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()

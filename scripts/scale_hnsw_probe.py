@@ -26,9 +26,7 @@ from pr2_transformation_spark.session import build_session
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     shards = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session("hnsw-decade", master=f"local[{cpus}]",
-                          shuffle_partitions=max(int(cpus), 8))
+    spark = build_session("hnsw-decade")
     spark.sparkContext.setLogLevel("ERROR")
 
     rng = np.random.default_rng(3)

@@ -156,9 +156,7 @@ def probe_dv_read(spark, sf_dir: str, mult: int) -> None:
 def main() -> None:
     mults = [int(a) for a in sys.argv[1:]] or [1, 10]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session("scale-r11-probe", master=f"local[{cpus}]",
-                          shuffle_partitions=max(int(cpus), 8))
+    spark = build_session("scale-r11-probe")
     spark.sparkContext.setLogLevel("ERROR")
     for m in mults:
         probe_merge_stats(spark, sf_dir, m)

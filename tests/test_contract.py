@@ -1,12 +1,15 @@
 """Driver-contract consistency: every oracle key names a real query, every
 query callable has the (spark, sf_dir) signature, every ``qNNN_`` function
-is registered, and the bench list only references declared queries.  Guards
-against silent-skip typos — unknown names are ignored by comparison
-harnesses, so a typo looks like a pass."""
+is registered, the bench list and the scale-probe presets only reference
+declared queries, and every script compiles.  Guards against silent-skip
+typos — unknown names are ignored by comparison harnesses, so a typo looks
+like a pass."""
 
 from __future__ import annotations
 
+import glob
 import inspect
+import os
 import re
 
 import pytest
@@ -14,6 +17,7 @@ import pytest
 import __spark_entry__ as entrymod
 import bench
 from scripts.check_oracle import check_coverage_crosswalk
+from scripts.scale_probe import FORMAT_SCANS, PRESETS
 
 
 def test_oracles_subset_of_queries():
@@ -32,6 +36,25 @@ def test_bench_queries_exist():
     qs = entrymod.queries()
     missing = [n for n in bench.BENCH_QUERIES if n not in qs]
     assert not missing, f"bench names not in queries(): {missing}"
+
+
+def test_scale_probe_presets_name_declared_queries():
+    # a renamed or deleted query would otherwise fail a decade probe only
+    # when someone next runs it
+    qs = entrymod.queries()
+    for preset, (_, names, tables) in PRESETS.items():
+        known = FORMAT_SCANS if tables is None else qs
+        missing = [n for n in names if n not in known]
+        assert not missing, f"{preset} preset names unknown queries: {missing}"
+
+
+def test_scripts_compile():
+    scripts = glob.glob(os.path.join(
+        os.path.dirname(os.path.abspath(entrymod.__file__)), "scripts", "*.py"))
+    assert scripts
+    for path in sorted(scripts):
+        with open(path) as f:
+            compile(f.read(), path, "exec")
 
 
 def test_rows_only_queries_are_the_documented_ones():
