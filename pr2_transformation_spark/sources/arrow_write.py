@@ -7,9 +7,9 @@ field-id slots patched over a placeholder soffset, nul-terminated
 strings, element vectors, inline struct vectors) plus the Arrow file
 layer: Schema / RecordBatch messages in encapsulated framing, 8-byte
 aligned body buffers, validity bitmaps, 32-bit offset strings, the
-footer Block index, and optional ZSTD body compression through the
-IN-REPO `zstd.zstd_compress` encoder (each buffer carrying the spec's
-8-byte uncompressed-length prefix).
+footer Block index, and optional ZSTD or LZ4 body compression through
+`zstd.zstd_compress` and `parquet_data.lz4_frame_compress` (each buffer
+carrying the spec's 8-byte uncompressed-length prefix).
 
 Scope (honest seam): schemas of bool / int32 / int64 / float32 /
 float64 / utf8 / binary / date32 plus arbitrarily nested
@@ -362,7 +362,7 @@ def write_arrow_bytes(columns: "list[tuple[str, str, list]]",
                       compression: "str | None" = None) -> bytes:
     """Serialize ``[(name, kind, values)...]`` into a complete Arrow
     IPC file image (``compression``: None, 'zstd' or 'lz4' — both body
-    codecs the Arrow spec defines, each through its in-repo encoder)."""
+    codecs the Arrow spec defines, through libzstd and liblz4)."""
     if not columns:
         raise ValueError("arrow_write: need at least one column")
     if compression not in (None, "zstd", "lz4"):

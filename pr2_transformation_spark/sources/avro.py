@@ -360,7 +360,8 @@ def _codec_encode(payload: bytes, codec: str) -> bytes:
     if codec == "null":
         return payload
     if codec == "deflate":
-        return zlib.compress(payload)[2:-4]  # raw deflate, no zlib wrap
+        from .inflate import deflate_encode
+        return deflate_encode(payload)
     if codec == "snappy":
         from .parquet_data import snappy_compress
         crc = zlib.crc32(payload) & 0xFFFFFFFF
@@ -406,13 +407,12 @@ def _codec_decode(body: bytes, codec: str) -> bytes:
 def avro_write(rows: list, schema: dict, codec: str = "null",
                block_rows: int = 1000) -> bytes:
     """Serialize dict rows to a complete Avro Object Container File.
-    ``codec``: the spec's full set — ``null``, ``deflate`` (raw zlib),
-    ``snappy`` (from-scratch block encoder + big-endian CRC32, read
-    through libsnappy), ``bzip2`` / ``xz`` (stdlib), and ``zstandard``
-    (written by the from-scratch predefined-FSE LZ encoder
-    `zstd.zstd_compress`, read through libzstd — so libzstd-written
-    files ingest too).  The sync marker derives deterministically from the
-    schema so identical inputs produce identical bytes."""
+    ``codec``: the spec's full set — ``null``, ``deflate`` (raw
+    DEFLATE, `inflate.deflate_encode`), ``snappy`` (libsnappy block +
+    big-endian CRC32), ``bzip2`` / ``xz`` (stdlib), and ``zstandard``
+    (one libzstd frame, `zstd.zstd_compress`).  The sync marker
+    derives deterministically from the schema so identical inputs
+    produce identical bytes."""
     if codec not in AVRO_CODECS:
         raise ValueError(f"codec must be one of {sorted(AVRO_CODECS)}")
     schema_json = json.dumps(schema, sort_keys=True, separators=(",", ":"))

@@ -13,10 +13,12 @@ from the public ORCv1 spec (https://orc.apache.org/specification/ORCv1/):
   pyarrow's C++ libORC, and this repo's own reader),
 * DIRECT_V2 string/binary columns (LENGTH + concatenated DATA),
 * stream compression framing (3-byte chunk headers with the
-  isOriginal escape) over the IN-REPO encoders: raw deflate
-  (`inflate.deflate_fixed`), Snappy (`parquet_data.snappy_compress`),
-  LZ4 (`parquet_data.lz4_block_compress`) and Zstandard
-  (`zstd.zstd_compress` — the round-7 predefined-FSE encoder).
+  isOriginal escape) over the engine's one encoder per codec: raw
+  deflate (`inflate.deflate_encode`, stdlib zlib), Snappy
+  (`parquet_data.snappy_compress`), LZ4
+  (`parquet_data.lz4_block_compress`) and Zstandard
+  (`zstd.zstd_compress`), the last three through the C libraries
+  pyarrow bundles.
 
 Scope (honest seam): root-STRUCT schemas of boolean / int / long /
 float / double / string / binary / date, plus ONE nesting level —

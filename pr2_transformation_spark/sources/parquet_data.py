@@ -14,9 +14,8 @@ and LZ4 (raw blocks and frames) here, ZSTD in `zstd.py`, GZIP via
 stdlib zlib — behind `_native_decompress`, which turns the library's
 errors into ``ValueError``.  Raw blocks need their decoded length up
 front: Snappy reads it from its varint preamble, raw LZ4 sums it from
-the sequence tokens.  The encoders (`snappy_compress`,
-`lz4_block_compress`, `lz4_frame_compress`) are written here from the
-public specs and pinned against those libraries in tests.
+the sequence tokens.  The encoders call the same libraries;
+`lz4_frame_compress` frames liblz4's raw blocks.
 
 Graded q359 writes a snappy-compressed dictionary-encoded multi-row-
 group file and reads it back DISTRIBUTED (binaryFile scan -> Arrow
@@ -85,74 +84,11 @@ def snappy_decompress(buf: bytes) -> bytes:
 
 
 def snappy_compress(raw: bytes) -> bytes:
-    """Raw Snappy block ENCODE — greedy hash-chain LZ with the standard
-    tag grammar (the write-side twin of :func:`snappy_decompress`).
-    Emits literals plus 2-byte-offset copies (tag 10); matches are
-    found via a 4-byte rolling hash table and capped at 64 bytes per
-    copy element as the format requires.  Any conformant decoder
-    (including pyarrow's C++ snappy) accepts the output — pinned in
-    tests both directions."""
-    out = bytearray()
-    n = len(raw)
-    # preamble: uncompressed length varint
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            break
+    """Raw Snappy block encode with libsnappy (the write-side twin of
+    :func:`snappy_decompress`)."""
+    import pyarrow as pa
 
-    def emit_literal(start: int, end: int) -> None:
-        nonlocal out
-        while start < end:
-            ln = min(end - start, 1 << 16)
-            l1 = ln - 1
-            if l1 < 60:
-                out.append(l1 << 2)
-            elif l1 < 256:
-                out.append(60 << 2)
-                out.append(l1)
-            else:
-                out.append(61 << 2)
-                out += l1.to_bytes(2, "little")
-            out += raw[start:start + ln]
-            start += ln
-
-    # key the match table by the raw 4-byte window itself (NOT Python
-    # hash(), which is SipHash-salted per process — salted collisions
-    # would make the emitted bytes differ across runs, breaking the
-    # deterministic-output contract the writers advertise)
-    table: dict[int, int] = {}
-    i = 0
-    lit_start = 0
-    while i + 4 <= n:
-        key = raw[i:i + 4]
-        h = int.from_bytes(key, "little")
-        cand = table.get(h)
-        table[h] = i
-        if (cand is not None and i - cand <= 0xFFFF
-                and raw[cand:cand + 4] == key):
-            # extend the match
-            m = 4
-            while i + m < n and m < 1 << 16 and raw[cand + m] == raw[i + m]:
-                m += 1
-            emit_literal(lit_start, i)
-            off = i - cand
-            rem = m
-            while rem > 0:
-                ln = min(rem, 64)
-                if ln < 4:  # tail shorter than a legal copy: literal it
-                    break
-                out.append(((ln - 1) << 2) | 2)
-                out += off.to_bytes(2, "little")
-                rem -= ln
-            i += m - rem
-            lit_start = i
-        else:
-            i += 1
-    emit_literal(lit_start, n)
-    return bytes(out)
+    return pa.Codec("snappy").compress(raw, asbytes=True)
 
 
 def lz4_block_decompress(buf: bytes, expected: int | None = None) -> bytes:
@@ -171,69 +107,12 @@ def lz4_block_decompress(buf: bytes, expected: int | None = None) -> bytes:
 
 
 def lz4_block_compress(raw: bytes) -> bytes:
-    """Raw LZ4 block ENCODE (lz4 block-format spec) — the write-side
-    twin of :func:`lz4_block_decompress` and the parquet LZ4_RAW codec's
-    compressor: greedy hash-table LZ77 emitting [token | literal-length
-    extensions | literals | 2-byte LE offset | match-length extensions]
-    sequences.  Spec end-of-block rules honored: the final sequence is
-    literals-only, the last 5 bytes are always literals, and no match
-    starts within the last 12 bytes.  Deterministic (match table keyed
-    by raw window bytes, not salted hash()); conformance-pinned against
-    liblz4 in tests."""
-    n = len(raw)
-    out = bytearray()
+    """Raw LZ4 block encode with liblz4 (the write-side twin of
+    :func:`lz4_block_decompress` and the parquet LZ4_RAW and ORC LZ4
+    compressor)."""
+    import pyarrow as pa
 
-    def emit(lit_start: int, lit_end: int, off: int, mlen: int) -> None:
-        lit = lit_end - lit_start
-        tok_lit = 15 if lit >= 15 else lit
-        if mlen:
-            m = mlen - 4
-            tok_m = 15 if m >= 15 else m
-        else:
-            tok_m = 0
-        out.append((tok_lit << 4) | tok_m)
-        if lit >= 15:
-            rem = lit - 15
-            while rem >= 255:
-                out.append(255)
-                rem -= 255
-            out.append(rem)
-        out.extend(raw[lit_start:lit_end])
-        if mlen:
-            out.extend(off.to_bytes(2, "little"))
-            if mlen - 4 >= 15:
-                rem = mlen - 4 - 15
-                while rem >= 255:
-                    out.append(255)
-                    rem -= 255
-                out.append(rem)
-
-    if n < 13:  # too short for any legal match
-        emit(0, n, 0, 0)
-        return bytes(out)
-
-    table: dict[int, int] = {}
-    lit_start = 0
-    i = 0
-    match_limit = n - 12  # no match may start in the last 12 bytes
-    while i < match_limit:
-        key = int.from_bytes(raw[i:i + 4], "little")
-        cand = table.get(key)
-        table[key] = i
-        if (cand is not None and i - cand <= 0xFFFF
-                and raw[cand:cand + 4] == raw[i:i + 4]):
-            mlen = 4
-            # matches must end >= 5 literals before the block end
-            mmax = n - 5 - i
-            while mlen < mmax and raw[cand + mlen] == raw[i + mlen]:
-                mlen += 1
-            emit(lit_start, i, i - cand, mlen)
-            i += mlen
-            lit_start = i
-        else:
-            i += 1
-    emit(lit_start, n, 0, 0)
-    return bytes(out)
+    return pa.Codec("lz4_raw").compress(raw, asbytes=True)
 
 
 def _lz4_block_size(buf: bytes) -> int:
@@ -965,11 +844,10 @@ def read_parquet_distributed(spark, path_glob: str, spark_schema: str,
 
 def lz4_frame_compress(raw: bytes, block_max: int = 4 << 20) -> bytes:
     """LZ4 FRAME encode — the write-side twin of
-    :func:`lz4_frame_decompress` (round-8 encoder symmetry: LZ4 joins
-    deflate/snappy/zstd as bidirectional).  Independent blocks, content
+    :func:`lz4_frame_decompress`.  Independent liblz4 blocks, content
     size + content checksum flags set, per-block stored fallback when
-    compression doesn't pay, xxh32 header/content checksums via the
-    from-scratch `functions/xxhash.py`."""
+    compression doesn't pay, xxh32 header/content checksums via
+    `functions/xxhash.py`."""
     from ..functions.xxhash import xxh32
 
     if block_max not in (1 << 16, 1 << 18, 1 << 20, 4 << 20):

@@ -2,14 +2,15 @@
 ``parquet_meta`` (footer) and ``parquet_data`` (pages), round-6 VERDICT
 item 3: Thrift Compact Protocol serialization, v1 data pages, PLAIN +
 dictionary encodings, RLE/bit-packed definition levels, per-chunk
-statistics, and compression through the IN-REPO codecs
-(``parquet_data.snappy_compress``, ``inflate.gzip_compress``,
-``zstd.zstd_compress``) — the format layer now runs BOTH directions
-library-free, the way the compression suite already does.
+statistics, and page compression through the engine's one encoder per
+codec (``parquet_data.snappy_compress``, ``inflate.gzip_compress``,
+``zstd.zstd_compress``, ``parquet_data.lz4_block_compress``: stdlib
+zlib and the C libraries pyarrow bundles).  The page, level and footer
+layers need no parquet library.
 
 Output is validated against INDEPENDENT readers (pyarrow, DuckDB,
 Spark) as well as this repo's own reader; bytes are deterministic for a
-given input (no timestamps, fixed created_by, salted-hash-free codecs).
+given input (no timestamps, fixed created_by, no salted hashes).
 
 Scale shape: this is the per-task serializer a distributed sink runs
 inside ``mapInPandas`` — each task turns its partition's rows into one

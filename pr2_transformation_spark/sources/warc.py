@@ -64,16 +64,9 @@ def build_warc_gz(records: Iterable[tuple[str, str, str, bytes]]) -> bytes:
     index maps records to byte offsets; a reader seeks and inflates one
     member without touching the rest).  Deterministic members (mtime 0,
     no filename)."""
-    import gzip
-    import io
+    from .inflate import gzip_compress
 
-    out = bytearray()
-    for rec in records:
-        buf = io.BytesIO()
-        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-            gz.write(build_warc([rec]))
-        out += buf.getvalue()
-    return bytes(out)
+    return b"".join(gzip_compress(build_warc([rec])) for rec in records)
 
 
 def scan_warc_gz_members(blob: bytes) -> list[tuple[int, int]]:

@@ -150,9 +150,9 @@ def zip_write_bytes(members: "list[tuple[str, bytes]]",
     """From-scratch ZIP WRITER — the write-side twin of
     :func:`zip_entries` (round-8 plane symmetry: every other format
     pillar is bidirectional).  STORED or DEFLATE members, the latter
-    compressed by the IN-REPO encoder (`inflate.deflate_encode` — so a
-    stdlib ``zipfile`` reading the archive independently validates both
-    the container layout AND the repo's DEFLATE bitstream).  Output is
+    compressed by `inflate.deflate_encode` (stdlib zlib), so a stdlib
+    ``zipfile`` reading the archive independently validates the
+    container layout: headers, sizes and CRCs.  Output is
     deterministic: fixed DOS timestamp (1980-01-01), no extra fields,
     members in the given order.
 

@@ -1,20 +1,14 @@
-"""Zstandard for the format layer: libzstd decode, in-repo encoders.
+"""Zstandard for the format layer, both directions through the libzstd
+pyarrow bundles.
 
-`zstd_decompress` decodes with the libzstd pyarrow bundles, the one
-decoder the parquet, ORC, Avro and Arrow IPC readers share.  libzstd
-skips skippable frames and verifies frame content sizes and XXH64
-content checksums; this module keeps the 4-byte magic check and the
-caller's ``expected`` size, and any corrupt or cut frame raises
-``ValueError``.
+`zstd_decompress` is the one decoder the parquet, ORC, Avro and Arrow
+IPC readers share.  libzstd skips skippable frames and verifies frame
+content sizes and XXH64 content checksums; this module keeps the 4-byte
+magic check and the caller's ``expected`` size, and any corrupt or cut
+frame raises ``ValueError``.
 
-The write side is written from the public spec (RFC 8878 / zstd format
-documentation): `zstd_compress_raw` emits stored blocks and
-`zstd_compress` is a real LZ encoder — sequences entropy-coded with the
-predefined FSE (tANS) tables over the spec's backward bitstream,
-literals as RLE, raw or canonical Huffman (direct or FSE-compressed
-weights), and an XXH64 content checksum via the from-scratch
-`functions/xxhash.py`.  Both emit frames any decoder accepts; tests
-decode every frame with pyarrow's libzstd.
+`zstd_compress` is the one encoder their writers share: one libzstd
+frame, with an optional content checksum.
 """
 
 from __future__ import annotations
@@ -23,77 +17,6 @@ from .parquet_data import _native_decompress
 
 ZSTD_MAGIC = 0xFD2FB528
 SKIPPABLE_LO = 0x184D2A50
-
-# ------------------------------------------------------------ FSE tables
-
-
-def fse_build_table(norm: list[int], accuracy_log: int):
-    """Build the FSE decode table: per state (symbol, nb_bits, baseline);
-    the encoders derive their state transitions from it.
-    Spread per the spec: -1 symbols take one cell each at the high end;
-    the rest scatter with step (ts>>1)+(ts>>3)+3 skipping the high cells."""
-    table_size = 1 << accuracy_log
-    symbols = [0] * table_size
-    high = table_size - 1
-    for s, c in enumerate(norm):
-        if c == -1:
-            symbols[high] = s
-            high -= 1
-    step = (table_size >> 1) + (table_size >> 3) + 3
-    mask = table_size - 1
-    pos = 0
-    for s, c in enumerate(norm):
-        if c <= 0:
-            continue
-        for _ in range(c):
-            symbols[pos] = s
-            pos = (pos + step) & mask
-            while pos > high:
-                pos = (pos + step) & mask
-    if pos != 0:
-        raise ValueError("zstd: FSE spread did not return to zero")
-    # per-cell transition: x counts occurrences per symbol from its norm
-    nxt = [1 if c == -1 else c for c in norm]
-    table = []
-    for state in range(table_size):
-        s = symbols[state]
-        x = nxt[s]
-        nxt[s] += 1
-        nb = accuracy_log - (x.bit_length() - 1)
-        baseline = (x << nb) - table_size
-        table.append((s, nb, baseline))
-    return table
-
-
-# ------------------------------------------------------------ sequences
-
-# literal-length codes: (baseline, extra bits)
-_LL_TABLE = [(i, 0) for i in range(16)] + [
-    (16, 1), (18, 1), (20, 1), (22, 1), (24, 2), (28, 2), (32, 3), (40, 3),
-    (48, 4), (64, 6), (128, 7), (256, 8), (512, 9), (1024, 10), (2048, 11),
-    (4096, 12), (8192, 13), (16384, 14), (32768, 15), (65536, 16),
-]
-# match-length codes
-_ML_TABLE = [(i + 3, 0) for i in range(32)] + [
-    (35, 1), (37, 1), (39, 1), (41, 1), (43, 2), (47, 2), (51, 3), (59, 3),
-    (67, 4), (83, 4), (99, 5), (131, 7), (259, 8), (515, 9), (1027, 10),
-    (2051, 11), (4099, 12), (8195, 13), (16387, 14), (32771, 15),
-    (65539, 16),
-]
-
-# predefined FSE distributions (RFC 8878 3.1.1.3.2.2)
-_LL_DEFAULT = (6, [4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2,
-                   2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1])
-_ML_DEFAULT = (6, [1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                   1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                   1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1, -1, -1])
-_OF_DEFAULT = (5, [1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                   1, 1, 1, 1, 1, -1, -1, -1, -1, -1])
-
-_PREDEF_LOG = {"ll": 6, "ml": 6, "of": 5}
-
-
-# --------------------------------------------------------------- decoder
 
 
 def zstd_decompress(buf: bytes, expected: int | None = None) -> bytes:
@@ -112,603 +35,19 @@ def zstd_decompress(buf: bytes, expected: int | None = None) -> bytes:
     return out
 
 
-def zstd_compress_raw(raw: bytes) -> bytes:
-    """Minimal VALID zstd ENCODER: one frame of RAW (stored) blocks —
-    spec-legal output every conformant decoder (libzstd included)
-    accepts, the write-side counterpart that lets sinks emit
-    ``zstandard`` containers without a compression engine (same move
-    as a stored-block gzip).  Single-segment frame with explicit
-    content size; blocks capped at the 2^21-1 block-size limit."""
-    out = bytearray(ZSTD_MAGIC.to_bytes(4, "little"))
-    n = len(raw)
-    # frame header: single_segment=1, fcs_flag by size
-    if n <= 255:
-        out.append((0 << 6) | (1 << 5))
-        out.append(n)
-    elif n <= 65535 + 256:
-        out.append((1 << 6) | (1 << 5))
-        out += (n - 256).to_bytes(2, "little")
-    else:
-        out.append((2 << 6) | (1 << 5))
-        out += n.to_bytes(4, "little")
-    max_block = (1 << 21) - 1
-    if n == 0:
-        out += (1).to_bytes(3, "little")  # last=1, type=raw, size=0
-        return bytes(out)
-    pos = 0
-    while pos < n:
-        chunk = raw[pos:pos + max_block]
-        pos += len(chunk)
-        last = 1 if pos >= n else 0
-        out += (last | (0 << 1) | (len(chunk) << 3)).to_bytes(3, "little")
-        out += chunk
-    return bytes(out)
-
-
-# ----------------------------------------------------------- compressor
-#
-# Real COMPRESSING encoder (round 7): LZ77 sequences entropy-coded with
-# the PREDEFINED FSE distributions (RFC 8878 3.1.1.3.2.2) over the
-# spec's backward bitstream, raw-literals section.  The conformance pin
-# is INDEPENDENT: tests decode every emitted frame with pyarrow's bundled
-# libzstd, the same library `zstd_decompress` calls.  Emits single-segment
-# frames with explicit content size and a verified XXH64 content
-# checksum; falls back per 128 KB block to RAW when sequences don't pay.
-
-
-class _BackWriter:
-    """Backward-bitstream writer: a decoder reads the first-written
-    field FIRST (it sits highest below the 1-bit end marker)."""
-
-    __slots__ = ("acc", "n")
-
-    def __init__(self):
-        self.acc = 0
-        self.n = 0
-
-    def write(self, val: int, nbits: int) -> None:
-        if nbits:
-            self.acc = (self.acc << nbits) | (val & ((1 << nbits) - 1))
-            self.n += nbits
-
-    def getvalue(self) -> bytes:
-        acc = (1 << self.n) | self.acc  # end marker above the payload
-        return acc.to_bytes((self.n + 8) // 8, "little")
-
-
-def _build_encode_side(norm: list[int], accuracy_log: int):
-    """From a normalized distribution, build the ENCODER view of the
-    decode table: per symbol, (a) its ordered cell list and (b) a map
-    next_decoder_state -> (cell, nb, baseline).  Encoding walks the
-    sequence backward choosing, for each symbol, the cell whose
-    transition range covers the already-fixed next state."""
-    table = fse_build_table(norm, accuracy_log)
-    size = 1 << accuracy_log
-    cells: dict[int, list[int]] = {}
-    maps: dict[int, list] = {}
-    for state, (sym, nb, base) in enumerate(table):
-        cells.setdefault(sym, []).append(state)
-        m = maps.setdefault(sym, [None] * size)
-        for nxt in range(base, base + (1 << nb)):
-            m[nxt] = (state, nb, base)
-    return cells, maps
-
-
-_ENC = {
-    "ll": _build_encode_side(_LL_DEFAULT[1], _LL_DEFAULT[0]),
-    "ml": _build_encode_side(_ML_DEFAULT[1], _ML_DEFAULT[0]),
-    "of": _build_encode_side(_OF_DEFAULT[1], _OF_DEFAULT[0]),
-}
-
-_LL_BASES = [b for b, _ in _LL_TABLE]
-_ML_BASES = [b for b, _ in _ML_TABLE]
-
-
-def _value_code(v: int, bases: list, table: list) -> tuple:
-    import bisect
-    c = bisect.bisect_right(bases, v) - 1
-    base, nbits = table[c]
-    return c, nbits, v - base
-
-
-def _encode_sequences(seqs: list) -> bytes:
-    """FSE-encode sequences [(ll, offset_value, ml), ...] in predefined
-    mode for all three machines.  States are chosen on a BACKWARD pass
-    (each cell must transition into the already-fixed next state); the
-    fields are then emitted in the decoder's READ order — `_BackWriter`
-    places first-written bits where a decoder reads first, the
-    byte-level reversal being the backward stream's job."""
-    n = len(seqs)
-    codes = []
-    for ll, ofv, ml in seqs:
-        llc, llb, llx = _value_code(ll, _LL_BASES, _LL_TABLE)
-        ofc = ofv.bit_length() - 1
-        mlc, mlb, mlx = _value_code(ml, _ML_BASES, _ML_TABLE)
-        codes.append((llc, llb, llx, ofc, ofv - (1 << ofc), mlc, mlb, mlx))
-    upd: list = [None] * n  # update fields written after seq i
-    st: dict = {}
-    for i in range(n - 1, -1, -1):
-        llc, llb, llx, ofc, ofx, mlc, mlb, mlx = codes[i]
-        if i == n - 1:
-            # the last-decoded symbols never update: any cell works
-            st["ll"] = _ENC["ll"][0][llc][0]
-            st["of"] = _ENC["of"][0][ofc][0]
-            st["ml"] = _ENC["ml"][0][mlc][0]
-        else:
-            rec = {}
-            for kind, code in (("ll", llc), ("ml", mlc), ("of", ofc)):
-                cell, nb, base = _ENC[kind][1][code][st[kind]]
-                rec[kind] = (st[kind] - base, nb)
-                st[kind] = cell
-            upd[i] = rec
-    w = _BackWriter()
-    # decoder reads init states ll, of, ml
-    w.write(st["ll"], _PREDEF_LOG["ll"])
-    w.write(st["of"], _PREDEF_LOG["of"])
-    w.write(st["ml"], _PREDEF_LOG["ml"])
-    for i in range(n):
-        llc, llb, llx, ofc, ofx, mlc, mlb, mlx = codes[i]
-        # decoder reads extras of, ml, ll ...
-        w.write(ofx, ofc)
-        w.write(mlx, mlb)
-        w.write(llx, llb)
-        # ... then updates ll, ml, of (except after the last sequence)
-        if i < n - 1:
-            rec = upd[i]
-            w.write(*rec["ll"])
-            w.write(*rec["ml"])
-            w.write(*rec["of"])
-    return w.getvalue()
-
-
-def _raw_literals_section(lits: bytes) -> bytes:
-    size = len(lits)
-    if size < 32:  # size_format 00: 5-bit
-        return bytes([size << 3]) + lits
-    if size < 4096:  # size_format 01: 12-bit
-        return bytes([((size & 0xF) << 4) | (1 << 2),
-                      size >> 4]) + lits
-    # size_format 11: 20-bit
-    return bytes([((size & 0xF) << 4) | (3 << 2),
-                  (size >> 4) & 0xFF, size >> 12]) + lits
-
-
-_MAX_LL = _LL_TABLE[-1][0] + (1 << _LL_TABLE[-1][1]) - 1   # 131071
-_MAX_ML = _ML_TABLE[-1][0] + (1 << _ML_TABLE[-1][1]) - 1   # 131074
-_MAX_OFFSET = (1 << 29) - 4  # of_code must stay <= 28 (predefined table)
-
-
-def _compress_block(raw: bytes, start: int, end: int,
-                    table: dict) -> bytes | None:
-    """Greedy hash-4 LZ parse of raw[start:end] (candidates may reach
-    back across earlier blocks — the decoder window is the whole
-    frame), predefined-FSE sequence coding, raw literals.  Returns the
-    compressed block body, or None when it doesn't beat a RAW block."""
-    seqs = []       # (ll, offset_value, ml)
-    lit_parts = []
-    lit_start = start
-    i = start
-    limit = end - 4
-
-    def find(pos):
-        key = raw[pos:pos + 4]
-        h = int.from_bytes(key, "little")
-        cand = table.get(h)
-        table[h] = pos
-        if (cand is None or pos - cand > _MAX_OFFSET
-                or raw[cand:cand + 4] != key):
-            return 0, 0
-        m = 4
-        mmax = min(end - pos, _MAX_ML)
-        while m < mmax and raw[cand + m] == raw[pos + m]:
-            m += 1
-        return m, cand
-
-    while i <= limit:
-        m, cand = find(i)
-        if m >= 4 and i - lit_start <= _MAX_LL:
-            # one-step lazy: a strictly better match one byte later is
-            # worth the extra literal (the standard greedy refinement)
-            if i + 1 <= limit:
-                m2, cand2 = find(i + 1)
-                if m2 > m + 1:
-                    i += 1
-                    m, cand = m2, cand2
-            lit_parts.append(raw[lit_start:i])
-            seqs.append((i - lit_start, (i - cand) + 3, m))
-            # index a couple of positions inside the match so runs
-            # self-reference (cheap stand-in for a full chain)
-            if m > 2:
-                mid = i + (m >> 1)
-                if mid + 4 <= end:
-                    table[int.from_bytes(raw[mid:mid + 4], "little")] = mid
-            i += m
-            lit_start = i
-        else:
-            i += 1
-    if not seqs:
-        return None
-    lit_parts.append(raw[lit_start:end])
-    lits = b"".join(lit_parts)
-    body = bytearray(_literals_section(lits))
-    n = len(seqs)
-    if n < 128:
-        body.append(n)
-    elif n < 0x7F00:
-        body.append((n >> 8) + 128)
-        body.append(n & 0xFF)
-    else:
-        body.append(0xFF)
-        body += (n - 0x7F00).to_bytes(2, "little")
-    body.append(0)  # modes byte: predefined for ll/of/ml
-    body += _encode_sequences(seqs)
-    if len(body) >= (end - start):
-        return None
-    return bytes(body)
-
-
 def zstd_compress(raw: bytes, checksum: bool = True) -> bytes:
-    """Compressing zstd ENCODER (RFC 8878): single-segment frame,
-    explicit content size, XXH64 content checksum, 128 KB blocks each
-    either predefined-FSE compressed or RAW (whichever is smaller).
-    Deterministic bytes for a given input (match table keyed by window
-    bytes, not salted hash()).  Conformance-pinned against libzstd via
-    pyarrow in tests/test_zstd.py; the parquet, ORC, Avro and Arrow IPC
-    writers emit it."""
-    out = bytearray(ZSTD_MAGIC.to_bytes(4, "little"))
-    n = len(raw)
-    cs_bit = (1 << 2) if checksum else 0
-    if n <= 255:
-        out.append((0 << 6) | (1 << 5) | cs_bit)
-        out.append(n)
-    elif n <= 65535 + 256:
-        out.append((1 << 6) | (1 << 5) | cs_bit)
-        out += (n - 256).to_bytes(2, "little")
-    elif n <= 0xFFFFFFFF:
-        out.append((2 << 6) | (1 << 5) | cs_bit)
-        out += n.to_bytes(4, "little")
-    else:
-        # FCS code 3: 8-byte little-endian content size (inputs > 4 GiB)
-        out.append((3 << 6) | (1 << 5) | cs_bit)
-        out += n.to_bytes(8, "little")
-    if n == 0:
-        out += (1).to_bytes(3, "little")  # last, raw, size 0
-    else:
-        table: dict[int, int] = {}
-        max_block = 128 * 1024
-        pos = 0
-        while pos < n:
-            chunk_end = min(pos + max_block, n)
-            last = 1 if chunk_end >= n else 0
-            body = _compress_block(raw, pos, chunk_end, table)
-            if body is None:
-                out += (last | (0 << 1)
-                        | ((chunk_end - pos) << 3)).to_bytes(3, "little")
-                out += raw[pos:chunk_end]
-            else:
-                out += (last | (2 << 1) | (len(body) << 3)).to_bytes(
-                    3, "little")
-                out += body
-            pos = chunk_end
-    if checksum:
-        from ..functions.xxhash import xxh64
-        out += (xxh64(raw) & 0xFFFFFFFF).to_bytes(4, "little")
+    """One libzstd frame (RFC 8878) holding ``raw``, with its content
+    size in the header.  With ``checksum`` the header's
+    Content_Checksum_flag is set and the low 32 bits of XXH64(raw) end
+    the frame, which every decoder, libzstd included, verifies."""
+    import pyarrow as pa
+
+    frame = pa.Codec("zstd").compress(raw, asbytes=True)
+    if not checksum:
+        return frame
+    from ..functions.xxhash import xxh64
+
+    out = bytearray(frame)
+    out[4] |= 1 << 2  # Frame_Header_Descriptor: Content_Checksum_flag
+    out += (xxh64(raw) & 0xFFFFFFFF).to_bytes(4, "little")
     return bytes(out)
-
-
-# ------------------------------------------- Huffman literals (encode)
-
-
-def _huffman_lengths(freqs: dict, max_len: int = 11) -> "dict | None":
-    """Canonical Huffman code lengths, length-limited to ``max_len``
-    with Kraft EQUALITY (the spec's weights must complete a power of
-    two).  Returns {symbol: nbits} or None when degenerate."""
-    import heapq
-    if len(freqs) < 2:
-        return None
-    heap = [(f, i, (s,)) for i, (s, f) in enumerate(sorted(freqs.items()))]
-    heapq.heapify(heap)
-    uid = len(heap)
-    lengths = {s: 0 for s in freqs}
-    while len(heap) > 1:
-        f1, _, g1 = heapq.heappop(heap)
-        f2, _, g2 = heapq.heappop(heap)
-        for s in g1 + g2:
-            lengths[s] += 1
-        heapq.heappush(heap, (f1 + f2, uid, g1 + g2))
-        uid += 1
-    # clamp to max_len, then repair the Kraft sum to exact equality
-    scale = 1 << max_len
-    for s in lengths:
-        if lengths[s] > max_len:
-            lengths[s] = max_len
-    total = sum(scale >> lengths[s] for s in lengths)
-    # too heavy: push the least-frequent still-shortenable symbols down
-    by_freq = sorted(lengths, key=lambda s: (freqs[s], s))
-    while total > scale:
-        for s in by_freq:
-            if lengths[s] < max_len:
-                total -= scale >> (lengths[s] + 1)
-                lengths[s] += 1
-                break
-        else:
-            return None
-    # too light: pull the most frequent symbols up while it still fits
-    while total < scale:
-        for s in reversed(by_freq):
-            gain = scale >> lengths[s]
-            if lengths[s] > 1 and total + gain <= scale:
-                total += gain
-                lengths[s] -= 1
-                break
-        else:
-            # fill the gap with deepest symbols (gain 1 per step at
-            # max_len); guaranteed to terminate since gap < scale
-            for s in by_freq:
-                gain = scale >> lengths[s]
-                if total + gain <= scale and lengths[s] >= 1:
-                    total += gain
-                    lengths[s] -= 1
-                    break
-            else:
-                return None
-    return lengths
-
-
-def _huffman_encode_literals(lits: bytes) -> "tuple | None":
-    """Build a spec-canonical Huffman table over ``lits``.  Returns
-    (table_header_bytes, {sym: (code, nbits)}) or None when the direct
-    4-bit weight form can't express the table (> 129 present symbols)
-    or the alphabet is degenerate."""
-    freqs: dict = {}
-    for b in lits:
-        freqs[b] = freqs.get(b, 0) + 1
-    lengths = _huffman_lengths(freqs)
-    if not lengths:
-        return None
-    max_bits = max(lengths.values())
-    weights = {s: max_bits + 1 - n for s, n in lengths.items()}
-    # weights are emitted for symbols 0..last_present-1; the LAST
-    # present symbol's weight is implied.  Any hole (absent symbol
-    # below the last) costs a zero weight in the header.
-    last = max(weights)
-    listed = [weights.get(s, 0) for s in range(last)]
-    header = None
-    if len(listed) > 100:  # FSE form usually wins from here
-        header = _fse_weights_header(listed)
-    if header is None and len(listed) <= 128:
-        header = bytearray([127 + len(listed)])
-        for i in range(0, len(listed), 2):
-            hi = listed[i] << 4
-            lo = listed[i + 1] if i + 1 < len(listed) else 0
-            header.append(hi | lo)
-    if header is None:
-        header = _fse_weights_header(listed)
-    if header is None:
-        return None
-    # canonical code assignment must mirror the decoder: ascending
-    # (weight, symbol), codes from 0, span 2^(max_bits - nbits)
-    entries = sorted((w, s) for s, w in weights.items())
-    codes = {}
-    code = 0
-    for w, s in entries:
-        nb = max_bits + 1 - w
-        span = 1 << (max_bits - nb)
-        codes[s] = (code >> (max_bits - nb), nb)
-        code += span
-    return bytes(header), codes
-
-
-def _huff_stream(chunk: bytes, codes: dict) -> bytes:
-    w = _BackWriter()
-    for b in chunk:
-        c, nb = codes[b]
-        w.write(c, nb)
-    return w.getvalue()
-
-
-def _literals_section(lits: bytes) -> bytes:
-    """Choose the cheapest legal literals form: RLE, Huffman-compressed
-    (1- or 4-stream), or raw."""
-    size = len(lits)
-    if size >= 2 and lits.count(lits[0]) == size:  # RLE literals
-        if size < 32:
-            return bytes([(size << 3) | 1]) + lits[:1]
-        if size < 4096:
-            return bytes([((size & 0xF) << 4) | (1 << 2) | 1,
-                          size >> 4]) + lits[:1]
-        return bytes([((size & 0xF) << 4) | (3 << 2) | 1,
-                      (size >> 4) & 0xFF, size >> 12]) + lits[:1]
-    if size >= 64:
-        built = _huffman_encode_literals(lits)
-        if built is not None:
-            table, codes = built
-            if size <= 1023:
-                body = table + _huff_stream(lits, codes)
-                comp = len(body)
-                if comp < size and comp <= 1023:
-                    h = 2 | (0 << 2) | (size << 4) | (comp << 14)
-                    return h.to_bytes(3, "little") + body
-            else:
-                per = (size + 3) // 4
-                cuts = [0, per, 2 * per, 3 * per, size]
-                streams = [_huff_stream(lits[cuts[i]:cuts[i + 1]], codes)
-                           for i in range(4)]
-                jump = b"".join(len(s).to_bytes(2, "little")
-                                for s in streams[:3])
-                body = table + jump + b"".join(streams)
-                comp = len(body)
-                if (comp < size and comp <= 16383 and size <= 16383
-                        and all(len(s) <= 0xFFFF for s in streams[:3])):
-                    h = 2 | (2 << 2) | (size << 4) | (comp << 18)
-                    return h.to_bytes(4, "little") + body
-                if (comp < size and comp <= 262143
-                        and all(len(s) <= 0xFFFF for s in streams[:3])):
-                    h = 2 | (3 << 2) | (size << 4) | (comp << 22)
-                    return h.to_bytes(5, "little") + body
-    return _raw_literals_section(lits)
-
-
-# ------------------------------------- FSE-compressed Huffman weights
-
-
-def _fse_normalize(freqs: dict, max_sym: int, log: int) -> "list | None":
-    """Normalize counts to sum 2^log with the spec's -1 'less than one'
-    convention.  Returns norm list indexed 0..max_sym or None when
-    degenerate (single symbol)."""
-    total = sum(freqs.values())
-    if total == 0 or len(freqs) < 2:
-        return None
-    scale = 1 << log
-    norm = [0] * (max_sym + 1)
-    assigned = 0
-    for s in range(max_sym + 1):
-        c = freqs.get(s, 0)
-        if c == 0:
-            continue
-        n = (c * scale) // total
-        if n == 0:
-            norm[s] = -1
-            assigned += 1
-        else:
-            norm[s] = n
-            assigned += n
-    # drift repair on the most frequent symbol
-    big = max(freqs, key=lambda s: freqs[s])
-    norm[big] += scale - assigned
-    if norm[big] <= 0:
-        return None
-    return norm
-
-
-def _fse_write_ncount(norm: list, log: int) -> bytes:
-    """Serialize an FSE table description (RFC 8878 4.1.1): 4-bit
-    accuracy, variable-bit counts with the threshold trick, 2-bit
-    zero-run repeats."""
-    bits = []  # (value, nbits) forward little-endian
-
-    def put(v, n):
-        bits.append((v, n))
-
-    put(log - 5, 4)
-    table_size = 1 << log
-    remaining = table_size + 1
-    threshold = table_size
-    nb_bits = log + 1
-    i = 0
-    n_sym = len(norm)
-    while remaining > 1 and i < n_sym:
-        c = norm[i]
-        v = c + 1
-        maxv = (2 * threshold - 1) - remaining
-        if v >= threshold:
-            put(v + maxv, nb_bits)
-        elif v < maxv:
-            put(v, nb_bits - 1)
-        else:
-            put(v, nb_bits)
-        remaining -= -c if c < 0 else c
-        i += 1
-        if c == 0:
-            # zero-repeat codes for the following zeros
-            while True:
-                run = 0
-                while run < 3 and i < n_sym and norm[i] == 0 \
-                        and remaining > 1:
-                    run += 1
-                    i += 1
-                put(run, 2)
-                if run != 3:
-                    break
-        while remaining < threshold:
-            nb_bits -= 1
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd: ncount normalization drift")
-    out = bytearray()
-    acc = 0
-    nacc = 0
-    for v, n in bits:
-        acc |= (v & ((1 << n) - 1)) << nacc
-        nacc += n
-        while nacc >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-    if nacc:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _fse_two_state_encode(symbols: list, norm: list, log: int) -> bytes:
-    """Encode ``symbols`` for the decoder's two-state interleaved
-    weight loop: machine A carries even indices, machine B odd; the
-    update after symbols[-2] is deliberately unwritten so the decoder
-    overdraws there and emits symbols[-1] from the other machine.
-    Returns the backward bitstream, or raises when the overdraw cell
-    constraint can't be met."""
-    cells, maps = _build_encode_side(norm, log)
-    m = len(symbols)
-    if m < 2:
-        raise ValueError("zstd: two-state stream needs >= 2 symbols")
-    table = fse_build_table(norm, log)
-    even = symbols[0::2]   # machine A
-    odd = symbols[1::2]    # machine B
-    last_machine = maps  # silence lints
-
-    def choose_states(seq, final_nb_positive):
-        """Backward pass over one machine's symbols; returns (init
-        state, transition fields in forward order)."""
-        st = None
-        trans = []
-        for k in range(len(seq) - 1, -1, -1):
-            sym = seq[k]
-            if st is None:
-                options = cells[sym]
-                if final_nb_positive:
-                    options = [c for c in options if table[c][1] > 0]
-                    if not options:
-                        raise ValueError("zstd: no nb>0 final cell")
-                st = options[0]
-            else:
-                cell, nb, base = maps[sym][st]
-                trans.append((st - base, nb))
-                st = cell
-        trans.reverse()
-        return st, trans
-
-    # the machine of symbols[m-2] suffers the overdraw on its final
-    # cell's nb; that cell must demand > 0 bits
-    a_final_overdraws = (m - 2) % 2 == 0
-    init_a, trans_a = choose_states(even, a_final_overdraws)
-    init_b, trans_b = choose_states(odd, not a_final_overdraws)
-    w = _BackWriter()
-    w.write(init_a, log)
-    w.write(init_b, log)
-    # updates are read alternating A,B after symbols 0..m-3
-    for k in range(m - 2):
-        machine_trans = trans_a if k % 2 == 0 else trans_b
-        val, nb = machine_trans[k // 2]
-        w.write(val, nb)
-    return w.getvalue()
-
-
-def _fse_weights_header(listed: list) -> "bytes | None":
-    """FSE-compressed Huffman weight table: header byte (< 128 = byte
-    size of description + stream), ncount, two-state stream."""
-    freqs: dict = {}
-    for v in listed:
-        freqs[v] = freqs.get(v, 0) + 1
-    log = 6  # the spec cap for weight tables
-    norm = _fse_normalize(freqs, max(freqs), log)
-    if norm is None:
-        return None
-    try:
-        desc = _fse_write_ncount(norm, log)
-        stream = _fse_two_state_encode(listed, norm, log)
-    except ValueError:
-        return None
-    body = desc + stream
-    if len(body) >= 128 or len(body) >= len(listed) // 2 + 1:
-        return None
-    return bytes([len(body)]) + body

@@ -192,10 +192,12 @@ FORMAT_SCANS = {
 def probe(spark, fns: dict, dirs: list[tuple[int, str]]) -> dict:
     """``{(name, scale): (wall_s, jobs, shuffle_mb, rows)}`` of each query's
     ``fn(spark, root).count()``, printed as RESULT lines, then a CURVE line per
-    query from the first scale to the last."""
+    query from the first scale to the last.  Each query first runs once untimed
+    on the first scale, so no timed point pays its cold start."""
     tracker = SparkJobs(spark)
     results = {}
     for name, fn in fns.items():
+        fn(spark, dirs[0][1]).count()
         for scale, root in dirs:
             group = f"scale-probe-{uuid.uuid4().hex}"
             tracker.begin(group)

@@ -81,7 +81,15 @@ def test_document_replicas_share_no_shingle_with_their_original(spark, replicas)
 def test_probe_reads_jobs_and_shuffle_with_ui_off(spark, capsys):
     assert spark.conf.get("spark.ui.enabled") == "false"
     name = "q01_pricing_summary"
-    results = scale_probe.probe(spark, {name: entrymod.queries()[name]}, [(1, SF)])
+    calls = []
+
+    def fn(spark, root):
+        calls.append(root)
+        return entrymod.queries()[name](spark, root)
+
+    dirs = [(1, SF), (2, SF)]
+    results = scale_probe.probe(spark, {name: fn}, dirs)
+    assert len(calls) == len(dirs) + 1  # one untimed warm-up run
     wall, jobs, shuffle_mb, rows = results[name, 1]
     assert jobs >= 1 and shuffle_mb > 0 and rows > 0
     out = capsys.readouterr().out

@@ -112,13 +112,13 @@ def test_xxh64_spark_conformance(spark):
 def test_content_checksum_verified():
     """A checksummed frame decodes; a corrupted checksum trips."""
     from pr2_transformation_spark.functions.xxhash import xxh64
-    from pr2_transformation_spark.sources.zstd import zstd_compress_raw
+    from pr2_transformation_spark.sources.zstd import zstd_compress
 
     raw = b"checksummed payload " * 40
-    f = bytearray(zstd_compress_raw(raw))
-    f[4] |= 1 << 2  # content-checksum flag
-    f += (xxh64(raw) & 0xFFFFFFFF).to_bytes(4, "little")
-    # libzstd accepts the crafted frame too
+    f = bytearray(zstd_compress(raw, checksum=True))
+    assert f[4] & (1 << 2)  # content-checksum flag
+    assert f[-4:] == (xxh64(raw) & 0xFFFFFFFF).to_bytes(4, "little")
+    # libzstd accepts the frame too
     assert pa.decompress(bytes(f), decompressed_size=len(raw),
                          codec="zstd", asbytes=True) == raw
     assert zstd_decompress(bytes(f), len(raw)) == raw
