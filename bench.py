@@ -355,39 +355,43 @@ BENCH_QUERIES = [
 ]
 
 
-def _load_prior_record(repo_dir: str) -> dict[str, float]:
-    """Per-query comparison base for the solo re-time pass.
+def _load_prior_record(repo_dir: str, sf, cpus: int) -> tuple[dict[str, float], list[str]]:
+    """Per-query comparison base for the solo re-time pass, and the names
+    of the records it came from.
 
-    Round-7 VERDICT item 3: comparing only against the NEWEST
-    BENCH_full_r*.json lets a regression escape — a mid-round run
-    writes the current round's record, and later runs then compare
-    against that (already-regressed) number instead of the previous
-    round's published record (q369 escaped round 7 exactly this way).
-    The base is therefore the per-query MINIMUM across the newest TWO
-    full records, which always covers both the previous round's
-    published record and any mid-round re-run of the current round."""
-    recs = sorted(
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(repo_dir, "BENCH_full_r*.json"))
-        if (m := re.match(r"BENCH_full_r(\d+)\.json$", os.path.basename(p)))
-    )
-    base: dict[str, float] = {}
-    for _, path in recs[-2:]:
+    Only ``BENCH_full_r*.json`` records taken at this run's ``sf`` and
+    ``cpus`` count: a record from another scale factor or core count
+    times different work, and comparing against it re-times queries that
+    did not regress.  Of those, the base is the per-query MINIMUM across
+    the newest TWO (round-7 VERDICT item 3): comparing only against the
+    newest lets a regression escape, because a mid-round run writes the
+    current round's record and later runs then compare against that
+    already-regressed number (q369 escaped round 7 exactly this way)."""
+    recs = []
+    for path in glob.glob(os.path.join(repo_dir, "BENCH_full_r*.json")):
+        m = re.match(r"BENCH_full_r(\d+)", os.path.basename(path))
         try:
             with open(path) as f:
-                for k, v in json.load(f).get("queries", {}).items():
-                    v = float(v)
-                    if k not in base or v < base[k]:
-                        base[k] = v
+                rec = json.load(f)
         except (OSError, ValueError):
             continue
-    return base
+        if m and rec.get("sf") == sf and rec.get("cpus") == cpus:
+            recs.append((int(m.group(1)), os.path.basename(path), rec))
+    recs.sort(key=lambda r: r[:2])
+    base: dict[str, float] = {}
+    for _, _, rec in recs[-2:]:
+        for k, v in rec.get("queries", {}).items():
+            v = float(v)
+            if k not in base or v < base[k]:
+                base[k] = v
+    return base, [name for _, name, _ in recs[-2:]]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
 
     spark = build_session(
         "pr2-transformation-spark-bench",
@@ -447,7 +451,8 @@ def main() -> None:
     # contention vs. a real plan regression without a manual re-run.
     retimed: dict[str, dict[str, float]] = {}
     noise_floor: dict[str, dict[str, float]] = {}
-    prior = _load_prior_record(os.path.dirname(os.path.abspath(__file__)))
+    prior, prior_records = _load_prior_record(
+        os.path.dirname(os.path.abspath(__file__)), sf, int(cpus))
     for name, cur in list(timings.items()):
         ref = prior.get(name)
         if ref is None:
@@ -488,8 +493,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "errors": errors,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
         "retimed": retimed,
+        "prior_records": prior_records,
         "noise_floor": noise_floor,
     }
     print(json.dumps(payload))

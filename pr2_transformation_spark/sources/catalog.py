@@ -6,10 +6,13 @@ scheme but resolves names to a parquet lake (``<root>/<project>/<dataset>/
 <table>``), to explicitly registered paths, or to Spark catalog tables /
 temp views — so the operators stay storage-agnostic.
 
-Scale note: reads go through ``spark.read.parquet`` so Catalyst gets column
-pruning, predicate pushdown, and partition discovery for free; writes default
-to overwrite-mode parquet (the Spark analogue of the reference's
-``CREATE OR REPLACE TABLE`` CTAS, /root/reference/core/transformations.py:149).
+Scale note: parquet reads go through :func:`load_parquet`, a Spark parquet
+relation, so Catalyst gets column pruning, predicate pushdown, and partition
+discovery for free.  The schema comes from the table's footer, read on the
+driver: like the reference's metadata call, opening a table runs no job.
+Writes default to overwrite-mode parquet (the Spark analogue of the
+reference's ``CREATE OR REPLACE TABLE`` CTAS, its
+``core/transformations.py:149``).
 """
 
 from __future__ import annotations
@@ -19,8 +22,108 @@ import re
 import shutil
 from typing import Optional
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
+
+#: the Parquet summary files Spark's schema inference prefers, best first
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-index name filter (``shouldFilterOutPathName``): hide
+    ``_``/``.`` names and in-flight copies, keep ``k=v`` partition
+    directories and the summary files."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    return not (hidden or name.endswith("._COPYING_"))
+
+
+def _footer_file(paths: tuple[str, ...]) -> Optional[str]:
+    """The file whose footer Spark's own inference would read for
+    ``paths`` (``ParquetUtils.inferSchema`` with schema merging off), or
+    ``None`` where this module leaves inference to Spark: a path with a
+    URI scheme or a glob, a missing path, or no listed file.
+
+    Spark sorts the leaf files by path and takes ``_common_metadata``
+    first, else ``_metadata``, else the first data file.  A directory's
+    leaf files are its direct children unless it holds ``k=v``
+    partition directories; then they are every file below it."""
+    leaves = []
+    for path in paths:
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path) or any(c in path for c in "*?[{"):
+            return None
+        path = os.path.abspath(path)
+        if os.path.isfile(path):
+            leaves.append(path)
+            continue
+        if not os.path.isdir(path):
+            return None
+        found, partitioned = [], False
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames[:] = [d for d in dirnames if _listed(d)]
+            partitioned = partitioned or any("=" in d for d in dirnames)
+            found += [(dirpath, f) for f in filenames if _listed(f)]
+        leaves += [os.path.join(d, f) for d, f in found if partitioned or d == path]
+    leaves.sort()
+    for summary in _SUMMARY_FILES:
+        for leaf in leaves:
+            if os.path.basename(leaf) == summary:
+                return leaf
+    data = [leaf for leaf in leaves if os.path.basename(leaf) not in _SUMMARY_FILES]
+    return data[0] if data else None
+
+
+def load_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Spark infers a parquet table's schema by reading one footer in a
+    Spark job before any work.  The schema is in that footer, so this
+    reads it on the driver instead: the same file Spark would pick
+    (:func:`_footer_file`), read with Spark's own converter
+    (``ParquetFileFormat.readSchemaFromFooter`` under the session's
+    parquet settings), then handed to ``spark.read.schema(...)``.  The
+    result has the same schema and relation as ``spark.read.parquet``;
+    partition columns still come from Spark's directory discovery.
+
+    Spark still infers, one job as before, for remote URIs (``s3://``,
+    ``gs://``, ``hdfs://``: listing a prefix from Python would cost a
+    round trip per file), globs, and with
+    ``spark.sql.parquet.mergeSchema`` on.  A missing path, a directory
+    with no data file, or a footer Spark cannot convert also go to
+    ``spark.read.parquet``, so they raise Spark's own error."""
+    footer_file = None
+    if spark.conf.get("spark.sql.parquet.mergeSchema") != "true":
+        footer_file = _footer_file(paths)
+    if footer_file is None:
+        return spark.read.parquet(*paths)
+    client = spark.sparkContext._gateway._gateway_client
+
+    def jclass(name: str) -> JavaClass:
+        # named in full: one round trip per call, none per package segment
+        return JavaClass(name, client)
+
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    try:
+        jpath = jclass("org.apache.hadoop.fs.Path")(footer_file)
+        footer = jclass(parquet + "ParquetFooterReader").readFooter(
+            jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+                jpath, spark._jsc.hadoopConfiguration()),
+            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        )
+        jschema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(
+            jclass("org.apache.parquet.hadoop.Footer")(jpath, footer),
+            jclass(parquet + "ParquetToSparkSchemaConverter")(
+                spark._jsparkSession.sessionState().conf()),
+        )
+    except (Py4JJavaError, CapturedException):
+        return spark.read.parquet(*paths)
+    reader = spark.read
+    reader._jreader.schema(jschema)
+    return reader.parquet(*paths)
 
 
 def refresh_all_sessions(path: str) -> None:
@@ -106,7 +209,7 @@ class Catalog:
                 return self.spark.read.text(path).withColumn(
                     "source_file", F.input_file_name()
                 )
-            return self.spark.read.parquet(path)
+            return load_parquet(self.spark, path)
         # Fall back to the Spark catalog (saveAsTable / temp views).
         _, dataset, table = parse_fq_table(fq_table)
         for candidate in (f"{dataset}.{table}", table):
@@ -117,8 +220,10 @@ class Catalog:
         raise ValueError(f"table not found in catalog: {fq_table}")
 
     def column_names(self, fq_table: str) -> list[str]:
-        """Schema-only listing (no data touched) — the engine's analogue of
-        the reference's metadata RPC (/root/reference/core/utils.py:40-52)."""
+        """Schema-only listing — the engine's analogue of the reference's
+        metadata RPC (its ``core/utils.py:40-52``).  A parquet
+        table's names come from its footer on the driver: no data is
+        touched and no Spark job runs."""
         return self.read(fq_table).schema.names
 
     # -- sink -------------------------------------------------------------
@@ -339,7 +444,7 @@ class Catalog:
         if os.path.isdir(path):
             spark.catalog.refreshByPath(path)
             live = (
-                spark.read.parquet(path)
+                load_parquet(spark, path)
                 .filter(F.col("__bucket").isin(affected))
                 .select(cols)
                 .withColumn("__src", F.lit(0))
@@ -429,7 +534,7 @@ class Catalog:
             if f.endswith(".parquet")
         )
         n_files = max(1, -(-total // target_file_bytes))  # ceil division
-        df = self.spark.read.parquet(path)
+        df = load_parquet(self.spark, path)
         staged = path.rstrip("/") + ".__compacting__"
         df.repartition(n_files).write.mode("overwrite").parquet(staged)
         # Swap: the staged rewrite is complete and footer-valid before the

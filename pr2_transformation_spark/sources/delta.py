@@ -43,6 +43,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import load_parquet
 from .file_stats import candidate_files, footer_stats, may_contain
 
 
@@ -963,7 +964,7 @@ class DeltaTable:
                 _physical_schema_json(schema_json)))).parquet(*paths)
             sel = [F.col(p).alias(c) for c, p in mapping.items()]
         else:
-            scan = spark.read.parquet(*paths)
+            scan = load_parquet(spark, *paths)
             sel = [F.col("*")]
         matches = (
             scan

@@ -69,6 +69,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .avro import avro_read, avro_write
+from .catalog import load_parquet
 from .file_stats import candidate_files, footer_stats, may_contain
 
 MANIFEST_SCHEMA = {
@@ -1262,7 +1263,7 @@ class IcebergTable:
                 )
             else:  # equality, sequence-scoped
                 ren = {c: f"{c}__ice_d{sfx}" for c in d["cols"]}
-                del_df = spark.read.parquet(del_path).select(
+                del_df = load_parquet(spark, del_path).select(
                     *[F.col(c).alias(a) for c, a in ren.items()])
                 eq = None
                 for c in d["cols"]:

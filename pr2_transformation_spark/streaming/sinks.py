@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.catalog import load_parquet, refresh_all_sessions
+
 
 def write_batch_idempotent(
     batch_df: DataFrame, batch_id: int, dest: str, files_per_batch: int = 1
@@ -98,7 +100,7 @@ def upsert_snapshot_batch(
     if os.path.isdir(dest):
         spark.catalog.refreshByPath(dest)
         merged = (
-            spark.read.parquet(dest).select(cols).withColumn("_src", F.lit(0))
+            load_parquet(spark, dest).select(cols).withColumn("_src", F.lit(0))
         ).unionByName(incoming)
     else:
         merged = incoming
@@ -117,8 +119,6 @@ def upsert_snapshot_batch(
     # foreachBatch hands us a CLONED session — refresh the others too, or
     # the main session's cached file listing still points at the replaced
     # snapshot files (observed as a flaky FILE_NOT_EXIST on the next read)
-    from pr2_transformation_spark.sources.catalog import refresh_all_sessions
-
     refresh_all_sessions(dest)
 
 

@@ -109,12 +109,10 @@ def _survey_source(spark):
     return spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
 
 
-def _run_endpoint(spark, cat, endpoint, audit):
-    """Write the endpoint's source tables, run it; return (response,
-    {source table: DataFrame}, destination)."""
-    dest = "p.CleanConnect.out"
+def _endpoint_sources(spark, endpoint):
+    """{source table: DataFrame} for one endpoint's request."""
     if endpoint == "merge":
-        sources = {
+        return {
             "p.FlatConnect.m1_v1": spark.createDataFrame(
                 [("1", "a", "x", "u"), ("2", "b", None, "v")],
                 "`Connect_ID` string, `D_100000001` string, `d_100000002` string, `d_100000003` string",
@@ -124,21 +122,47 @@ def _run_endpoint(spark, cat, endpoint, audit):
                 "`Connect_ID` string, `d_100000001` string, `d_100000002` string, `d_100000004` string",
             ),
         }
-    else:
-        sources = {"p.FlatConnect.module1_v2_JP": _survey_source(spark)}
+    return {"p.FlatConnect.module1_v2_JP": _survey_source(spark)}
+
+
+def _call_endpoint(cat, endpoint, sources, dest, audit):
+    fq = sources[0]
+    if endpoint == "clean_columns":
+        return api.clean_columns(cat, fq, dest, audit)
+    if endpoint == "clean_rows":
+        return api.clean_rows(cat, fq, dest, audit)
+    if endpoint == "sensitive":
+        return api.create_sensitive_tier(cat, fq, dest, audit)
+    return api.merge_table_versions(cat, sources, dest, audit)
+
+
+def _run_endpoint(spark, cat, endpoint, audit):
+    """Write the endpoint's source tables, run it; return (response,
+    {source table: DataFrame}, destination)."""
+    dest = "p.CleanConnect.out"
+    sources = _endpoint_sources(spark, endpoint)
     for fq, df in sources.items():
         cat.write(df, fq)
     sources = {fq: cat.read(fq) for fq in sources}
-    (fq, *_) = sources
-    if endpoint == "clean_columns":
-        resp = api.clean_columns(cat, fq, dest, audit)
-    elif endpoint == "clean_rows":
-        resp = api.clean_rows(cat, fq, dest, audit)
-    elif endpoint == "sensitive":
-        resp = api.create_sensitive_tier(cat, fq, dest, audit)
-    else:
-        resp = api.merge_table_versions(cat, list(sources), dest, audit)
-    return resp, sources, dest
+    return _call_endpoint(cat, endpoint, list(sources), dest, audit), sources, dest
+
+
+#: Spark jobs per request on a tiny lake once the sources are written:
+#: each endpoint's one write, plus clean_rows' two profiling jobs and the
+#: merge's full outer join (its shuffle stages run as jobs of their own
+#: under AQE).  Reading a source's schema submits none.
+ENDPOINT_JOBS = {"clean_columns": 1, "clean_rows": 3, "merge": 3, "sensitive": 1}
+
+
+@pytest.mark.parametrize("endpoint", sorted(ENDPOINT_JOBS))
+def test_endpoint_job_counts(spark, tmp_path, spark_jobs, endpoint):
+    cat = Catalog(spark, root=str(tmp_path / "lake"))
+    sources = _endpoint_sources(spark, endpoint)
+    for fq, df in sources.items():
+        cat.write(df, fq)
+    jobs = spark_jobs(_call_endpoint, cat, endpoint, list(sources),
+                      "p.CleanConnect.out", str(tmp_path / "sql"))
+    assert jobs == ENDPOINT_JOBS[endpoint]
 
 
 @pytest.mark.parametrize("endpoint", ["clean_columns", "clean_rows", "merge", "sensitive"])

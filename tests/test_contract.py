@@ -3,10 +3,12 @@ query callable has the (spark, sf_dir) signature, every ``qNNN_`` function
 is registered, the bench list and the scale-probe presets only reference
 declared queries, and every script compiles.  Guards against silent-skip
 typos — unknown names are ignored by comparison harnesses, so a typo looks
-like a pass."""
+like a pass.  Also: every schema-less parquet read goes through
+``load_parquet``, which reads the schema without a Spark job."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import inspect
 import os
@@ -100,3 +102,32 @@ def test_query_registry_rejects_duplicate_and_malformed_names():
 
 def test_every_query_has_a_coverage_row():
     assert check_coverage_crosswalk(entrymod.queries()) == []
+
+
+#: ``read.parquet(`` with no ``.schema(...)`` between, across line breaks
+_SCHEMALESS_READ = re.compile(r"\bread\s*(?:\\\s*)?\.\s*parquet\s*\(")
+
+
+def test_schemaless_parquet_reads_go_through_load_parquet():
+    """A bare ``spark.read.parquet(path)`` submits a Spark job to infer
+    the schema; ``sources.catalog.load_parquet`` reads the same schema on
+    the driver.  Only ``load_parquet`` itself may call the bare form."""
+    assert _SCHEMALESS_READ.search("spark.read \\\n    .parquet(p)")
+    assert not _SCHEMALESS_READ.search("spark.read.schema(s).parquet(p)")
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    files = [os.path.join(root, "__spark_entry__.py")] + sorted(glob.glob(
+        os.path.join(root, "pr2_transformation_spark", "**", "*.py"), recursive=True))
+    offenders = []
+    for path in files:
+        with open(path) as f:
+            text = f.read()
+        allowed = [
+            range(node.lineno, node.end_lineno + 1)
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, ast.FunctionDef) and node.name == "load_parquet"
+        ]
+        for m in _SCHEMALESS_READ.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            if not any(line in r for r in allowed):
+                offenders.append(f"{os.path.relpath(path, root)}:{line}")
+    assert offenders == [], f"use load_parquet(spark, ...) at {offenders}"
